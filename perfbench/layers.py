@@ -5,7 +5,8 @@
 end-to-end metric and workload each should move.  Every per-layer value is
 taken over the timed phase and expressed per call of that layer (means of
 durations, counts and bytes; ratios as sums over sums), except
-``session.start_s`` and ``index_select.layouts_s``, which come from set-up.
+``session.start_s`` and ``index_select.layouts_s``, which come from set-up,
+and ``jvm.peak_heap_mb``, the peak over set-up and the timed phase.
 A layer a workload never calls reports 0.  Span names are
 ``<layer>.<public call>``.
 """
@@ -54,6 +55,9 @@ LAYERS = {
                      [("index_select.layouts_s", "s"), ("index_select.plan_s", "s"),
                       ("index_select.exec_s", "s"), ("index_select.rows_scanned_per_row", "ratio")],
                      [("query_p50_s", QUERIES), ("query_p90_s", QUERIES), ("setup_s", QUERIES)]),
+    "jvm": ("the Spark driver JVM (heap used, sampled every 0.5 s)",
+            [("jvm.peak_heap_mb", "MB")],
+            [("peak_rss_mb", BATCH), ("peak_rss_mb", QUERIES)]),
     "trace": ("the benchmark's tracer itself",
               [("trace.overhead_s", "s"), ("trace.op_s", "s")],
               []),
@@ -83,7 +87,7 @@ def _ratio(num, den) -> float:
 
 
 def derive(spans: list[dict], session_start_s: float, overhead_s: float, ops: int,
-           op_s: float) -> dict[str, float]:
+           op_s: float, peak_heap_mb: float) -> dict[str, float]:
     timed = [s for s in spans if s.get("phase") == "timed"]
     ids = {s["id"] for s in timed}
     top = [s for s in timed if s["parent"] not in ids]
@@ -160,6 +164,7 @@ def derive(spans: list[dict], session_start_s: float, overhead_s: float, ops: in
         "index_select.rows_scanned_per_row": _ratio(
             [sum(t.get("rows_scanned", 0.0) for t in subtree(s)) for s in queries],
             field(queries, "output_rows")),
+        "jvm.peak_heap_mb": peak_heap_mb,
         "trace.overhead_s": overhead_s / n,
         "trace.op_s": op_s / n,
     }

@@ -53,11 +53,13 @@ def process_age_s() -> float:
 
 class TreeRss(threading.Thread):
     """Samples the summed RSS of this process and all its descendants
-    (the JVM and its Python workers) and keeps the peak."""
+    (the JVM and its Python workers) and keeps the peak.  Once
+    ``heap_probe`` is set it also keeps the peak of the JVM's used heap."""
 
     def __init__(self, interval: float = 0.5):
         super().__init__(daemon=True)
         self.interval, self.peak, self._done = interval, 0, threading.Event()
+        self.heap_probe, self.heap_peak = None, 0
         self._page = os.sysconf("SC_PAGE_SIZE")
 
     def sample(self) -> int:
@@ -82,9 +84,18 @@ class TreeRss(threading.Thread):
                 pass
         return total
 
+    def sample_heap(self) -> None:
+        probe = self.heap_probe
+        if probe is not None:
+            try:
+                self.heap_peak = max(self.heap_peak, probe())
+            except Exception:  # the JVM is shutting down
+                pass
+
     def run(self):
         while not self._done.is_set():
             self.peak = max(self.peak, self.sample())
+            self.sample_heap()
             self._done.wait(self.interval)
 
     def stop(self) -> int:
@@ -155,7 +166,9 @@ class Run:
     def concurrently(self, *chains) -> None:
         """Run each chain (a list of callables, in order) on its own
         thread and wait for all of them; set-up warms independent calls
-        this way, since each pays its cold start mostly in the Spark driver."""
+        this way, since each pays its cold start mostly in the Spark driver
+        (on 4 vCPUs the batch set-up pass took 21-26 s this way and 32-35 s
+        one call after another, in four alternating pairs)."""
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(len(chains)) as pool:
@@ -181,16 +194,14 @@ def start_session(n: int, work: Path):
     os.environ["SPARK_GRAFT_CPUS"] = str(n)
     from geowave_spark.session import get_spark
 
+    # the engine's own memory settings; only the places Spark writes to
+    # are moved into the run's work directory
     tmp = work / "tmp"
     spark = get_spark("perfbench", extra={
-        # a fixed, pre-touched heap: peak RSS then does not depend on when
-        # the collector chose to grow the heap
-        "spark.driver.memory": "2g",
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": str(work / "spark-local"),
         "spark.sql.warehouse.dir": str(work / "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Xms2g -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} "
-                                         f"-Dderby.system.home={tmp}",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}",
     })
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -259,6 +270,8 @@ def main(argv=None) -> int:
 
         run.spark = start_session(n, work)
         session_s = process_age_s() - gen_s
+        heap = run.spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        rss.heap_probe = lambda: heap.getHeapMemoryUsage().getUsed()
         from spans import Tracer
 
         run.tracer = Tracer(run.spark, f"{args.workload}-{args.seed}-{os.getpid()}", args.trace)
@@ -269,7 +282,10 @@ def main(argv=None) -> int:
             workload.setup(run, work / "setup")
         setup_pass_s = time.perf_counter() - t
 
-        # iterate while a typical (median) iteration still fits in --seconds
+        # iterate while a typical (median) iteration still fits in --seconds,
+        # and on until the workload's minimum operation count (so that a
+        # query run has at least ten latencies beyond its p90), within a
+        # hard limit of twice --seconds
         run.phase = "timed"
         its = []
         t_start = time.perf_counter()
@@ -278,10 +294,13 @@ def main(argv=None) -> int:
             workload.iteration(run, work / f"it{len(its)}")
             its.append(time.perf_counter() - t)
             wall = time.perf_counter() - t_start
-            if wall + statistics.median(its) > args.seconds:
+            if wall + statistics.median(its) > args.seconds and (
+                    len(run.latencies) >= workload.min_ops or wall > 2 * args.seconds):
                 break
         iterations = len(its)
         overhead = run.tracer.overhead_s
+        rss.sample_heap()
+        rss.heap_probe = None
 
         from oracle import Oracle
 
@@ -308,7 +327,8 @@ def main(argv=None) -> int:
     if args.trace:
         from layers import METRICS, derive
 
-        values = derive(run.tracer.spans, session_s, overhead, ops, sum(lat))
+        values = derive(run.tracer.spans, session_s, overhead, ops, sum(lat),
+                        rss.heap_peak / 2**20)
         metrics = {m: {"value": values[m], "unit": u} for m, u in METRICS}
         spans_file = base / "traces" / f"{run.tracer.run_id}.jsonl"
         spans_file.parent.mkdir(parents=True, exist_ok=True)
@@ -328,6 +348,7 @@ def main(argv=None) -> int:
         "host": host, "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "sizes": workload.sizes, "iterations": iterations, "timed_s": wall,
         "samples": ops, "beyond_p90": sum(x > p90 for x in lat),
+        "jvm_peak_heap_mb": rss.heap_peak / 2**20,
         "p50_by_call": {k: statistics.median(x for x, l in zip(lat, run.labels) if l == k)
                         for k in sorted(set(run.labels))},
         "failed_ratio": run.failed / max(run.attempted, 1),

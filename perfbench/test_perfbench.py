@@ -64,7 +64,7 @@ def test_traced_run_writes_spans_for_every_layer(runs):
             spans = [json.loads(x) for x in Path(info["spans_file"]).read_text().splitlines()]
             seen |= {s["name"].split(".")[0] for s in spans}
             assert all({"name", "start", "end", "parent", "run"} <= set(s) for s in spans)
-    assert set(LAYERS) - {"spark", "trace"} <= seen
+    assert set(LAYERS) - {"spark", "jvm", "trace"} <= seen
 
 
 @pytest.mark.parametrize("kind", ["pip", "zonal"])

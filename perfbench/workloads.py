@@ -45,6 +45,7 @@ class BatchAnalytics:
     SIZES = {"points": (100_000, 2_000), "zones": (48, 6), "small_points": (24_000, 1_000),
              "warm_points": (300, 300), "warm_small": (30, 30)}
     HOT_SHARE = 0.05  # of small_points, inside one COLOC_D x COLOC_D cell
+    min_ops = 0
 
     def __init__(self, scale: float):
         self.sizes = _sizes(self.SIZES, scale)
@@ -179,6 +180,13 @@ class IndexedQueries:
              ("anywhere", 0.5, 1.0))  # (centre, half-width range in degrees)
     WINDOWS_DAYS = ((1 / 12, 1 / 4), (2.0, 4.0), (20.0, 40.0), (120.0, 240.0))
     OUT_COLS = ("fid", "lon", "lat", "event_ts", "magnitude", "category")
+    # p90 interpolated between order statistics leaves n - 1 - floor(0.9 (n - 1))
+    # distinct latencies beyond it: ten from n = 92 on
+    min_ops = 92
+    # set-up runs one period of the mix (3 kinds x 4 boxes x 4 windows), one
+    # thread per kind: without it the first ~50 timed queries ran about twice
+    # as slow as the rest (the large boxes most) and made most of the tail
+    WARM_QUERIES = 48
 
     def __init__(self, scale: float):
         self.sizes = _sizes(self.SIZES, scale)
@@ -188,6 +196,7 @@ class IndexedQueries:
     def generate(self, rng, d: Path) -> dict:
         pts = gen.points_table(rng, self.sizes["points"])
         self.queries = [self._query(rng, i) for i in range(4096)]
+        self.warm_queries = [self._query(rng, i) for i in range(self.WARM_QUERIES)]
         return {"points": gen.write(pts, d / "points", files=8)}
 
     @classmethod
@@ -230,6 +239,9 @@ class IndexedQueries:
                   "cats": ["cat1"], "timed": timed})]
             for kind, t, timed in (("box", y12, False), ("box_time", y12, True),
                                    ("cql", y13, True))])
+        run.concurrently(*[[lambda q=q: self._run_query(run, q)
+                            for q in self.warm_queries if q["kind"] == kind]
+                           for kind in self.KINDS])
 
     def iteration(self, run, out: Path) -> None:
         q = self.queries[self.next_query % len(self.queries)]
