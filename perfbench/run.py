@@ -282,10 +282,7 @@ def main(argv=None) -> int:
             workload.setup(run, work / "setup")
         setup_pass_s = time.perf_counter() - t
 
-        # iterate while a typical (median) iteration still fits in --seconds,
-        # and on until the workload's minimum operation count (so that a
-        # query run has at least ten latencies beyond its p90), within a
-        # hard limit of twice --seconds
+        # iterate while a typical (median) iteration still fits in --seconds
         run.phase = "timed"
         its = []
         t_start = time.perf_counter()
@@ -294,8 +291,7 @@ def main(argv=None) -> int:
             workload.iteration(run, work / f"it{len(its)}")
             its.append(time.perf_counter() - t)
             wall = time.perf_counter() - t_start
-            if wall + statistics.median(its) > args.seconds and (
-                    len(run.latencies) >= workload.min_ops or wall > 2 * args.seconds):
+            if wall + statistics.median(its) > args.seconds:
                 break
         iterations = len(its)
         overhead = run.tracer.overhead_s
