@@ -155,6 +155,15 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     else:
         raise ValueError("not a TIFF (bad magic)")
     t = _read_entries(buf, order)
+    required = {
+        "ImageWidth": _WIDTH,
+        "ImageLength": _LENGTH,
+        "StripOffsets": _STRIP_OFFSETS,
+        "StripByteCounts": _STRIP_COUNTS,
+    }
+    missing = [name for name, tag in required.items() if tag not in t]
+    if missing:
+        raise ValueError(f"missing required TIFF tag(s): {', '.join(missing)}")
     w, h = t[_WIDTH][0], t[_LENGTH][0]
     bits = t.get(_BITS, [1])
     samples = t.get(_SAMPLES, [1])[0]

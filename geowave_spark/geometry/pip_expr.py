@@ -100,7 +100,7 @@ def pip_zid_expr(catalog: list[str], zid: Column, lon: Column, lat: Column) -> C
     filter to the wrong join side — INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
     All coordinates are plan literals; codegen splits oversized methods
     itself.  Use for catalogs up to a few hundred polygons; beyond that the
-    per-row Arrow UDF (refine_pip_catalog_udf) takes over."""
+    per-row Arrow UDF (spatial_join.refine_pip_udf) takes over."""
     expr = F.lit(False)
     for i in range(len(catalog) - 1, -1, -1):
         expr = F.when(zid == i, pip_point_expr(catalog[i], lon, lat)).otherwise(expr)

@@ -36,6 +36,7 @@ from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig
 
 from .indexing import cell_at_tier, with_point_cells
 from .knn import expansion_cells_udf, tier_for_distance
+from .neighborhood import SPACE_TIME, neighbor_join
 
 
 def kmeans(
@@ -463,12 +464,12 @@ def _st_edges(
 ) -> DataFrame:
     """Symmetric spatio-temporal epsilon edges (a != b): neighbors within
     ``eps_s`` planar degrees AND ``eps_t_s`` seconds.  Grid at (eps_s cell,
-    eps_t bin); the left side explodes to its 9 spatial neighbors x 3 time
-    bins (27 bounded copies), the right side keeps its exact key, so each
-    ORDERED pair meets exactly once — the J1 pair-uniqueness invariant with
-    time as a third dimension (`operators/cotravel.py` uses the same key
-    with a one-sided orientation; DBSCAN needs both directions for the
-    degree count)."""
+    eps_t bin); the left side explodes to its full 3x3x3 block
+    (``neighborhood.SPACE_TIME``, 27 bounded copies), the right side keeps
+    its exact key, so each ORDERED pair meets exactly once — the J1
+    pair-uniqueness invariant with time as a third dimension.  DBSCAN needs
+    both directions for the degree count, so it does not use the forward
+    half that `operators/cotravel.py` probes."""
     tau_u = int(eps_t_s * 1_000_000)
     pts = points.select(
         F.col(id_col).alias("_pid"),
@@ -482,39 +483,21 @@ def _st_edges(
         F.floor(F.col("y") / F.lit(float(eps_s))).cast("long").alias("cy"),
         F.floor(F.col("tu") / F.lit(tau_u)).cast("long").alias("tb"),
     )
-    offsets = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dt).alias("dt")
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-            for dt in (-1, 0, 1)
-        ]
+    a, b = (
+        keyed.select(
+            F.col("_pid").alias(side),
+            *[F.col(c).alias(f"{c}_{side}") for c in ("x", "y", "tu")],
+            "cx",
+            "cy",
+            "tb",
+        )
+        for side in "ab"
     )
-    left = keyed.withColumn("_o", F.explode(offsets)).select(
-        F.col("_pid").alias("a"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.col("tu").alias("ta"),
-        (F.col("cx") + F.col("_o.dx")).alias("jx"),
-        (F.col("cy") + F.col("_o.dy")).alias("jy"),
-        (F.col("tb") + F.col("_o.dt")).alias("jt"),
-    )
-    right = keyed.select(
-        F.col("_pid").alias("b"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("tu").alias("tb_u"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-        F.col("tb").alias("jt"),
-    )
-    d2 = (F.col("ax") - F.col("bx")) ** 2 + (F.col("ay") - F.col("by")) ** 2
+    d2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
     return (
-        left.join(right, ["jx", "jy", "jt"])
+        neighbor_join(a, b, ("cx", "cy", "tb"), SPACE_TIME)
         .filter(F.col("a") != F.col("b"))
-        .filter(F.abs(F.col("ta") - F.col("tb_u")) <= F.lit(tau_u))
+        .filter(F.abs(F.col("tu_a") - F.col("tu_b")) <= F.lit(tau_u))
         .filter(d2 <= F.lit(float(eps_s) * float(eps_s)))
         .select("a", "b")
     )

@@ -17,13 +17,13 @@ Plan shape (one shuffle, no DISTINCT, nothing quadratic):
   engine).
 - bucket keys: space cell = floor(x/radius), floor(y/radius); time bin =
   tu / tau (integer div).  A qualifying pair differs by <=1 in each key.
-- candidates: side A explodes to its 9 spatial neighbor cells x time bins
-  {0,+1} (18 copies, a bounded map-side constant); side B keeps its exact
-  key; one (cell,bin) equi-join.  The exactly-once rule that replaces a
-  dedup shuffle: a same-bin pair matches in BOTH orientations -> keep only
-  ping_a < ping_b; a bin+1 pair matches ONLY with A = the earlier-bin ping
-  -> keep all.  (`delta = 1 OR ping_a < ping_b`, where ping order is
-  (fid, idx) lexicographic.)
+- candidates: side A explodes to the forward half of its 3x3x3 (cell,
+  bin) block (`neighborhood.SPACE_TIME_FORWARD`: 5 cells at the same bin,
+  all 9 at bin+1 — 14 copies, a bounded map-side constant); side B keeps
+  its exact key; one (cell,bin) equi-join.  The exactly-once rule that
+  replaces a dedup shuffle: a same-bin same-cell pair matches in BOTH
+  orientations -> keep only ping_a < ping_b, where ping order is (fid,
+  idx) lexicographic; every other pair matches in one orientation only.
 - refine: |dt| <= tau and squared planar-degree distance <= radius^2
   (doubles, identical IEEE evaluation order in Spark and DuckDB — the
   `operators/trajectory.py` convention).
@@ -33,7 +33,7 @@ Plan shape (one shuffle, no DISTINCT, nothing quadratic):
 100 TB shape: the only shuffle is the (cell, bin) hash join — keys are
 uniform under clustering because a metro blob spans thousands of
 radius-sized cells x time bins (the `operators/hotspot.py` argument, with
-time as an extra smoothing dimension).  The 18x explode multiplies map
+time as an extra smoothing dimension).  The 14x explode multiplies map
 output, not join fan-out; output is bounded by true co-travel events
 (output-sensitive, like the Hausdorff join's candidate stage).
 """
@@ -42,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geowave_spark.operators.neighborhood import QUEEN, SPACE_TIME_FORWARD, neighbor_join
 
 US = 1_000_000  # microseconds per second
 
@@ -128,71 +130,30 @@ def cotravel_hits(
     # WKT vertex parse runs in each branch.  eager=False: nothing runs
     # unless the query itself does.
     keyed = keyed.localCheckpoint(eager=False)
-    # side A explodes to 14 (cell, time-bin) offsets: the same-bin (dt=0)
-    # spatial deltas use the FORWARD half-neighborhood only — (0,0) plus one
-    # representative of each {v, -v} class — because a same-bin pair is
-    # found from EITHER endpoint, so probing half the deltas emits every
-    # cross-cell pair exactly once (hotspot.FORWARD_OFFSETS rationale);
-    # the bin+1 (dt=1) deltas need all 9 because the probe is pinned to the
-    # earlier ping.  Identical hit set as the full 9x2 probe at ~3/4 the
-    # exploded volume and ~half the same-bin candidates.
-    dt0_spatial = [(0, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
-    dt1_spatial = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    offsets = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(dt).alias("dt"),
-                F.lit(dt == 0 and dx == 0 and dy == 0).alias("same"),
-            )
-            for dt, spatial in ((0, dt0_spatial), (1, dt1_spatial))
-            for dx, dy in spatial
-        ]
-    )
-    a = (
-        keyed.withColumn("_o", F.explode(offsets))
-        .select(
-            F.col("fid").alias("fid_a"),
-            F.col("idx").alias("idx_a"),
-            F.col("x").alias("xa"),
-            F.col("y").alias("ya"),
-            F.col("tu").alias("ta"),
-            (F.col("cx") + F.col("_o.dx")).alias("jx"),
-            (F.col("cy") + F.col("_o.dy")).alias("jy"),
-            (F.col("tb") + F.col("_o.dt")).alias("jt"),
-            F.col("_o.dt").alias("dt"),
-            F.col("_o.same").alias("_same"),
+    # the forward half of the 3x3x3 block (see the module docstring): the
+    # full block's hit set at ~half the exploded volume
+    a, b = (
+        keyed.select(
+            *[F.col(c).alias(f"{c}_{side}") for c in ("fid", "idx", "x", "y", "tu")],
+            "cx",
+            "cy",
+            "tb",
         )
-    )
-    b = keyed.select(
-        F.col("fid").alias("fid_b"),
-        F.col("idx").alias("idx_b"),
-        F.col("x").alias("xb"),
-        F.col("y").alias("yb"),
-        F.col("tu").alias("tb_u"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-        F.col("tb").alias("jt"),
+        for side in "ab"
     )
     r2 = float(radius_deg) * float(radius_deg)
-    dx = F.col("xa") - F.col("xb")
-    dy = F.col("ya") - F.col("yb")
+    dx = F.col("x_a") - F.col("x_b")
+    dy = F.col("y_a") - F.col("y_b")
     ping_a_lt_b = (F.col("fid_a") < F.col("fid_b")) | (
         (F.col("fid_a") == F.col("fid_b")) & (F.col("idx_a") < F.col("idx_b"))
     )
     pairs = (
-        a.join(b, ["jx", "jy", "jt"])
+        neighbor_join(a, b, ("cx", "cy", "tb"), SPACE_TIME_FORWARD, before=ping_a_lt_b)
         .filter(F.col("fid_a") != F.col("fid_b"))
-        # exactly-once without a dedup shuffle: same-bin SAME-CELL matches
-        # appear in both orientations (keep ping_a < ping_b); same-bin
-        # forward-cell matches appear exactly once and bin+1 matches only
-        # with A = earlier bin (keep all)
-        .filter((F.col("dt") == 1) | ~F.col("_same") | ping_a_lt_b)
-        .filter(F.abs(F.col("ta") - F.col("tb_u")) <= F.lit(tau_u))
+        .filter(F.abs(F.col("tu_a") - F.col("tu_b")) <= F.lit(tau_u))
         .filter(dx * dx + dy * dy <= F.lit(r2))
     )
-    lo_t = F.least(F.col("ta"), F.col("tb_u"))
+    lo_t = F.least(F.col("tu_a"), F.col("tu_b"))
     return pairs.select(
         F.least("fid_a", "fid_b").alias("fid_a"),
         F.greatest("fid_a", "fid_b").alias("fid_b"),
@@ -381,35 +342,21 @@ def snapshot_clusters(
         F.floor(F.col("x") / F.lit(float(eps_deg))).cast("long").alias("cx"),
         F.floor(F.col("y") / F.lit(float(eps_deg))).cast("long").alias("cy"),
     )
-    nbrs = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("cx"),
-                (F.col("cy") + F.lit(dy)).alias("cy"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
+    a, b = (
+        keyed.select(
+            F.col("_pid").alias(side),
+            F.col("x").alias(f"x_{side}"),
+            F.col("y").alias(f"y_{side}"),
+            "cx",
+            "cy",
+            "bin",
+        )
+        for side in "ab"
     )
-    left = keyed.withColumn("_n", F.explode(nbrs)).select(
-        F.col("_pid").alias("a"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.col("bin").alias("jb"),
-        F.col("_n.cx").alias("jx"),
-        F.col("_n.cy").alias("jy"),
-    )
-    right = keyed.select(
-        F.col("_pid").alias("b"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("bin").alias("jb"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-    )
-    d2 = (F.col("ax") - F.col("bx")) ** 2 + (F.col("ay") - F.col("by")) ** 2
+    d2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
+    # the bin is the trailing key: the 2-D offsets leave it unshifted
     edges = (
-        left.join(right, ["jb", "jx", "jy"])
+        neighbor_join(a, b, ("cx", "cy", "bin"), QUEEN)
         .filter(F.col("a") != F.col("b"))
         .filter(d2 <= F.lit(float(eps_deg) * float(eps_deg)))
         .select("a", "b")

@@ -29,18 +29,17 @@ no Python, no driver data but the 3 aggregates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-QUEEN_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-
-# Forward half-neighborhood for SELF-join candidate generation: (0,0) plus
-# one representative of each {v, -v} delta class.  Probing only these emits
-# every unordered cross-cell pair exactly once (the pair whose delta is -v
-# is found from its other endpoint), so the exact-distance stages see the
-# identical pair set as a full 3x3 probe at ~half the exploded volume;
-# same-cell pairs still need the id-order rule.
-FORWARD_OFFSETS = [(0, 0), (1, 0), (-1, 1), (0, 1), (1, 1)]
+from geowave_spark.operators.neighborhood import (
+    FORWARD,
+    FORWARD_1D,
+    QUEEN,
+    RING,
+    SPACE_TIME,
+    neighbor_join,
+)
 
 
 def cell_counts(
@@ -72,23 +71,13 @@ def gi_star(
     # never re-scan the corpus — the engine's read-the-big-side-once rule
     cells = cell_counts(points, cell_deg, lon_col, lat_col).localCheckpoint()
 
-    # neighborhood: explode each cell to its 9 queen positions, equi-join
-    # back on the cell key — the broadcast-offsets pattern every ring join
-    # in this engine uses (operators/knn.py kRing)
-    offs = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in QUEEN_OFFSETS]
-    )
-    probed = (
-        cells.withColumn("_o", F.explode(offs))
-        .select(
-            (F.col("xb") + F.col("_o.dx")).alias("xb"),
-            (F.col("yb") + F.col("_o.dy")).alias("yb"),
-            F.col("x").alias("_xj"),
-        )
-    )
     nb = (
-        cells.select("xb", "yb")
-        .join(probed, ["xb", "yb"])
+        neighbor_join(
+            cells.select("xb", "yb", F.col("x").alias("_xj")),
+            cells.select("xb", "yb"),
+            ("xb", "yb"),
+            QUEEN,
+        )
         .groupBy("xb", "yb")
         .agg(F.count("*").alias("wn"), F.sum("_xj").alias("wx"))
     )
@@ -164,11 +153,6 @@ def gi_star_sql(points_path: str, cell_deg: float) -> str:
 # Emerging hotspots: space-time Gi* + Mann-Kendall trend per cell
 # ---------------------------------------------------------------------------
 
-ST_OFFSETS = [
-    (dx, dy, dt) for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dt in (-1, 0, 1)
-]
-
-
 def emerging_hotspots(
     points: DataFrame,
     cell_deg: float = 1.0,
@@ -200,26 +184,13 @@ def emerging_hotspots(
         )
         .agg(F.count("*").alias("x"))
     ).localCheckpoint()  # (cell, month) bins are grid-bounded: corpus scans once
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"), F.lit(dy).alias("dy"), F.lit(dt).alias("dt")
-            )
-            for dx, dy, dt in ST_OFFSETS
-        ]
-    )
-    probed = (
-        cells.withColumn("_o", F.explode(offs))
-        .select(
-            (F.col("xb") + F.col("_o.dx")).alias("xb"),
-            (F.col("yb") + F.col("_o.dy")).alias("yb"),
-            (F.col("tb") + F.col("_o.dt")).alias("tb"),
-            F.col("x").alias("_xj"),
-        )
-    )
     nb = (
-        cells.select("xb", "yb", "tb")
-        .join(probed, ["xb", "yb", "tb"])
+        neighbor_join(
+            cells.select("xb", "yb", "tb", F.col("x").alias("_xj")),
+            cells.select("xb", "yb", "tb"),
+            ("xb", "yb", "tb"),
+            SPACE_TIME,
+        )
         .groupBy("xb", "yb", "tb")
         .agg(F.count("*").alias("wn"), F.sum("_xj").alias("wx"))
     )
@@ -323,9 +294,6 @@ def emerging_hotspots_sql(points_path: str, cell_deg: float = 1.0) -> str:
 # Global Moran's I: the corpus-wide spatial autocorrelation twin of Gi*
 # ---------------------------------------------------------------------------
 
-NEIGHBOR_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if (dx, dy) != (0, 0)]
-
-
 def morans_i(
     points: DataFrame,
     cell_deg: float = 1.0,
@@ -360,17 +328,13 @@ def morans_i(
     # grid-bounded cell table, three consumers: materialize once so the
     # corpus is scanned exactly once (same rationale as gi_star)
     cells = cell_counts(points, cell_deg, lon_col, lat_col).localCheckpoint()
-    offs = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in NEIGHBOR_OFFSETS]
-    )
-    probed = cells.withColumn("_o", F.explode(offs)).select(
-        (F.col("xb") + F.col("_o.dx")).alias("xb"),
-        (F.col("yb") + F.col("_o.dy")).alias("yb"),
-        F.col("x").alias("_xj"),
-    )
     pairs = (
-        cells.select("xb", "yb", F.col("x").alias("_xi"))
-        .join(probed, ["xb", "yb"])
+        neighbor_join(
+            cells.select("xb", "yb", F.col("x").alias("_xj")),
+            cells.select("xb", "yb", F.col("x").alias("_xi")),
+            ("xb", "yb"),
+            RING,
+        )
         .agg(
             F.count("*").alias("w_pairs"),
             F.sum(F.col("_xi") * F.col("_xj")).alias("_p"),
@@ -480,20 +444,16 @@ def knox_test(
 
     100 TB shape — every pair count is OUTPUT-SENSITIVE, no n^2 stage:
 
-    * space (+ joint) pairs: grid events at dist_deg; the probe side
-      explodes to the FORWARD half-neighborhood (``FORWARD_OFFSETS``, x5)
-      and equi-joins the build side on the cell — only pairs within
-      ~2*sqrt(2)*d ever materialize (the hausdorff_join bound).  Forward
-      cross-cell deltas emit each unordered pair exactly once; only
-      same-cell matches need the id-order rule, so the candidate volume
-      is ~half the full 3x3 probe for the identical pair set.  Exact d^2
-      filter restores the circle, and the SAME joined rows yield the
-      joint space-AND-time count (one extra |dt| predicate — no second
+    * space (+ joint) pairs: :func:`_near_pairs` grids events at
+      dist_deg and probes the FORWARD half-neighborhood (x5) — only pairs
+      within ~2*sqrt(2)*d ever materialize (the hausdorff_join bound), at
+      ~half the full 3x3 probe's candidates for the identical pair set.
+      Exact d^2 filter restores the circle, and the SAME joined rows yield
+      the joint space-AND-time count (one extra |dt| predicate — no second
       join).
-    * time pairs: identical pattern in 1D — bin at tau, explode to the
-      forward bins {0,+1} (x2; bin -1 pairs are found from their earlier
-      endpoint), equi-join on the bin, id-order rule on same-bin matches
-      only, exact |dt| filter; candidates are bounded by pairs within
+    * time pairs: identical pattern in 1D — bin at tau, probe the forward
+      bins {0,+1} (x2; bin -1 pairs are found from their earlier
+      endpoint), exact |dt| filter; candidates are bounded by pairs within
       2*tau.
     * the three 1-row aggregates broadcast-crossJoin into the result.
 
@@ -501,8 +461,6 @@ def knox_test(
     only; hot metro cells take the engine's standard salting/AQE
     treatment, and the time-bin keys are uniform by construction.
     """
-    d2 = float(dist_deg) * float(dist_deg)
-    c = float(dist_deg)
     tau = int(tau_ms)
     # _pid: dense per-row ordering key (any unique id works; xxhash64 of the
     # position+time tuple is collision-checked by the pair semantics only in
@@ -515,46 +473,8 @@ def knox_test(
         F.unix_millis(F.col(ts_col).cast("timestamp")).alias("ms"),
     )
 
-    # --- space + joint counts: one 3x3-neighborhood equi-join -------------
-    cells = pts.select(
-        "*",
-        F.floor(F.col("x") / c).cast("long").alias("cx"),
-        F.floor(F.col("y") / c).cast("long").alias("cy"),
-    )
-    nbrs = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("cx"),
-                (F.col("cy") + F.lit(dy)).alias("cy"),
-                F.lit(dx == 0 and dy == 0).alias("same"),
-            )
-            for dx, dy in FORWARD_OFFSETS
-        ]
-    )
-    probe = cells.select(
-        F.col("_pid").alias("_pa"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.col("ms").alias("ams"),
-        F.explode(nbrs).alias("nb"),
-    ).select(
-        "_pa", "ax", "ay", "ams",
-        F.col("nb.cx").alias("cx"), F.col("nb.cy").alias("cy"),
-        F.col("nb.same").alias("_same"),
-    )
-    build = cells.select(
-        F.col("_pid").alias("_pb"), F.col("x").alias("bx"), F.col("y").alias("by"),
-        F.col("ms").alias("bms"), "cx", "cy",
-    )
-    near = probe.join(build, ["cx", "cy"]).filter(
-        (~F.col("_same") | (F.col("_pa") < F.col("_pb")))
-        & (
-            (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
-            + (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
-            <= F.lit(d2)
-        )
-    )
-    space_agg = near.agg(
+    # --- space + joint counts: one forward-half neighborhood join ---------
+    space_agg = _near_pairs(pts, dist_deg).agg(
         F.count("*").alias("space_pairs"),
         # SUM over an empty near set is NULL; the statistic's value is 0
         F.coalesce(
@@ -567,25 +487,14 @@ def knox_test(
 
     # --- time count: the 1D twin ------------------------------------------
     tb = pts.withColumn("_tb", F.floor(F.col("ms") / F.lit(tau)).cast("long"))
-    tprobe = tb.select(
-        F.col("_pid").alias("_pa"),
-        F.col("ms").alias("ams"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col("_tb") + F.lit(o)).alias("b"),
-                        F.lit(o == 0).alias("same"),
-                    )
-                    for o in (0, 1)
-                ]
-            )
-        ).alias("_nb"),
-    ).select("_pa", "ams", F.col("_nb.b").alias("_tb"), F.col("_nb.same").alias("_same"))
-    tbuild = tb.select(F.col("_pid").alias("_pb"), F.col("ms").alias("bms"), "_tb")
-    time_agg = tprobe.join(tbuild, "_tb").filter(
-        (~F.col("_same") | (F.col("_pa") < F.col("_pb")))
-        & (F.abs(F.col("ams") - F.col("bms")) <= F.lit(tau))
+    time_agg = neighbor_join(
+        tb.select(F.col("_pid").alias("a_pid"), F.col("ms").alias("ams"), "_tb"),
+        tb.select(F.col("_pid").alias("b_pid"), F.col("ms").alias("bms"), "_tb"),
+        ("_tb",),
+        FORWARD_1D,
+        before=F.col("a_pid") < F.col("b_pid"),
+    ).filter(
+        F.abs(F.col("ams") - F.col("bms")) <= F.lit(tau)
     ).agg(F.count("*").alias("time_pairs"))
 
     n_agg = pts.agg(F.count("*").alias("n"))
@@ -654,67 +563,40 @@ def knox_test_sql(
 # ---------------------------------------------------------------------------
 
 
-def _near_pair_dd(
-    pts: DataFrame, dmax: float, *, ordered: bool
-) -> DataFrame:
-    """Squared planar distances of all point pairs within ``dmax``, found
-    output-sensitively: grid at dmax, explode ONE side to its cell
-    neighborhood, equi-join on the cell, exact dd filter.
-    ``ordered=True`` keeps each unordered pair once — the self-join case,
-    probed over the FORWARD half-neighborhood (x5, ``FORWARD_OFFSETS``)
-    with the id-order rule only on same-cell matches, which emits the
-    identical pair set as a full 3x3 probe at ~half the exploded volume;
-    ``ordered=False`` emits every (probe, build) pair once (the
-    two-category cross case, where the sides are disjoint — all 9 offsets
-    are required there).
+def _dd() -> Column:
+    """Squared planar distance between the (ax, ay) and (bx, by) columns."""
+    return (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
+        F.col("ay") - F.col("by")
+    ) * (F.col("ay") - F.col("by"))
 
-    Inputs carry (_pid, x, y); output is a single ``dd`` column — the
-    caller's per-distance counts all aggregate the SAME joined rows, so m
-    radii cost m WHEN-sums, never m joins."""
+
+def _near_pairs(pts: DataFrame, dmax: float) -> DataFrame:
+    """Every unordered pair of ``pts`` rows within planar distance ``dmax``,
+    found output-sensitively: grid at dmax, probe the FORWARD
+    half-neighborhood (x5) with the id-order rule on same-cell matches, and
+    filter on the exact squared distance.
+
+    ``pts`` carries (_pid, x, y, ...); each of its columns comes back once
+    per side, prefixed ``a`` and ``b`` (a_pid, ax, ay, ...), plus ``dd``,
+    the squared distance.  Callers aggregate the SAME joined rows for every
+    count they need, so m radii or predicates cost m WHEN-sums, never m
+    joins."""
     c = float(dmax)
-    offsets = FORWARD_OFFSETS if ordered else QUEEN_OFFSETS
     cells = pts.select(
         "*",
         F.floor(F.col("x") / c).cast("long").alias("cx"),
         F.floor(F.col("y") / c).cast("long").alias("cy"),
     )
-    nbrs = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("cx"),
-                (F.col("cy") + F.lit(dy)).alias("cy"),
-                F.lit(dx == 0 and dy == 0).alias("same"),
-            )
-            for dx, dy in offsets
-        ]
+    a, b = (
+        cells.select(*[F.col(n).alias(side + n) for n in pts.columns], "cx", "cy")
+        for side in "ab"
     )
-    probe = cells.select(
-        F.col("_pid").alias("_pa"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.explode(nbrs).alias("nb"),
-    ).select(
-        "_pa",
-        "ax",
-        "ay",
-        F.col("nb.cx").alias("cx"),
-        F.col("nb.cy").alias("cy"),
-        F.col("nb.same").alias("_same"),
+    dd = _dd()
+    return (
+        neighbor_join(a, b, ("cx", "cy"), FORWARD, before=F.col("a_pid") < F.col("b_pid"))
+        .filter(dd <= F.lit(c * c))
+        .withColumn("dd", dd)
     )
-    build = cells.select(
-        F.col("_pid").alias("_pb"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        "cx",
-        "cy",
-    )
-    dd = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    joined = probe.join(build, ["cx", "cy"])
-    if ordered:
-        joined = joined.filter(~F.col("_same") | (F.col("_pa") < F.col("_pb")))
-    return joined.filter(dd <= F.lit(c * c)).select(dd.alias("dd"))
 
 
 def ripley_k(
@@ -743,10 +625,10 @@ def ripley_k(
     against :func:`ripley_k_sql`, every aggregate input is exact).
 
     100 TB shape: ONE output-sensitive candidate join at the LARGEST
-    radius (grid + bounded 3x3 explode on the probe side — the
-    :func:`knox_test` pattern); all m radii are WHEN-sums over those same
-    joined rows, so the pair matrix is never materialized and adding radii
-    adds no joins.  The global reduce is 5 numbers (n + bbox)."""
+    radius (:func:`_near_pairs`, the :func:`knox_test` pattern); all m
+    radii are WHEN-sums over those same joined rows, so the pair matrix is
+    never materialized and adding radii adds no joins.  The global reduce
+    is 5 numbers (n + bbox)."""
     ds = sorted(float(d) for d in dists)
     if not ds or ds[0] <= 0:
         raise ValueError("dists must be positive radii")
@@ -755,8 +637,7 @@ def ripley_k(
         F.col(lon_col).cast("double").alias("x"),
         F.col(lat_col).cast("double").alias("y"),
     )
-    near = _near_pair_dd(pts, ds[-1], ordered=True)
-    sums = near.agg(
+    sums = _near_pairs(pts, ds[-1]).agg(
         *[
             F.coalesce(
                 F.sum(F.when(F.col("dd") <= F.lit(d * d), 1).otherwise(0)), F.lit(0)
@@ -883,34 +764,16 @@ def cross_k(
         F.floor(F.col("x") / c).cast("long").alias("cx"),
         F.floor(F.col("y") / c).cast("long").alias("cy"),
     )
-    nbrs = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("cx"),
-                (F.col("cy") + F.lit(dy)).alias("cy"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probe = (
-        cells.filter(F.col("_cat") == cat_a)
-        .select(
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            F.explode(nbrs).alias("nb"),
-        )
-        .select("ax", "ay", F.col("nb.cx").alias("cx"), F.col("nb.cy").alias("cy"))
-    )
-    build = cells.filter(F.col("_cat") == cat_b).select(
-        F.col("x").alias("bx"), F.col("y").alias("by"), "cx", "cy"
-    )
-    dd = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    near = probe.join(build, ["cx", "cy"]).filter(dd <= F.lit(c * c)).select(
-        dd.alias("dd")
-    )
+    near = neighbor_join(
+        cells.filter(F.col("_cat") == cat_a).select(
+            F.col("x").alias("ax"), F.col("y").alias("ay"), "cx", "cy"
+        ),
+        cells.filter(F.col("_cat") == cat_b).select(
+            F.col("x").alias("bx"), F.col("y").alias("by"), "cx", "cy"
+        ),
+        ("cx", "cy"),
+        QUEEN,
+    ).filter(_dd() <= F.lit(c * c)).select(_dd().alias("dd"))
     sums = near.agg(
         *[
             F.coalesce(
@@ -1037,18 +900,16 @@ def colocation_pi(
     pi_ppm the integer-exact floor(1e6 * PI) — no float ever enters, so
     the oracle is hash-exact by construction.
 
-    100 TB shape: one cell-neighborhood self-join (the
-    :func:`_near_pair_dd` discipline — probe side explodes to the FORWARD
-    half-neighborhood only, x5 instead of x9, build side keeps its exact
-    cell, join keys uniform under clustering), one distinct-participant
-    aggregation per side, and a broadcast join against the category totals
-    (category cardinality-sized).  Nothing is ever all-pairs: output is
-    bounded by true neighbor pairs.  The forward-half trick: every
-    unordered cross-cell pair has cell deltas {v, -v}; probing only the
-    half-set {(1,0),(-1,1),(0,1),(1,1)} emits it exactly once with no
-    dedup filter, and same-cell pairs keep the id-order rule — the emitted
-    pair SET is identical to the full 3x3 probe, so results are hash-equal
-    while the exploded shuffle and candidate volume nearly halve."""
+    100 TB shape: one cell-neighborhood self-join (:func:`_near_pairs` —
+    probe side explodes to the FORWARD half-neighborhood only, x5 instead
+    of x9, build side keeps its exact cell, join keys uniform under
+    clustering), one distinct-participant aggregation per side, and a
+    broadcast join against the category totals (category
+    cardinality-sized).  Nothing is ever all-pairs: output is bounded by
+    true neighbor pairs.  The forward half emits the same pair SET as the
+    full 3x3 probe (see ``operators/neighborhood.py``), so results are
+    hash-equal while the exploded shuffle and candidate volume nearly
+    halve."""
     c = float(d)
     if c <= 0:
         raise ValueError("d must be positive")
@@ -1058,61 +919,13 @@ def colocation_pi(
         F.col(lat_col).cast("double").alias("y"),
         F.col(cat_col).alias("_cat"),
     )
-    cells = pts.select(
-        "*",
-        F.floor(F.col("x") / c).cast("long").alias("cx"),
-        F.floor(F.col("y") / c).cast("long").alias("cy"),
-    )
-    nbrs = F.array(
-        *[
-            F.struct(
-                (F.col("cx") + F.lit(dx)).alias("cx"),
-                (F.col("cy") + F.lit(dy)).alias("cy"),
-                F.lit(dx == 0 and dy == 0).alias("same"),
-            )
-            for dx, dy in FORWARD_OFFSETS
-        ]
-    )
-    probe = cells.select(
-        F.col("_pid").alias("_pa"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.col("_cat").alias("_ca"),
-        F.explode(nbrs).alias("nb"),
-    ).select(
-        "_pa",
-        "ax",
-        "ay",
-        "_ca",
-        F.col("nb.cx").alias("cx"),
-        F.col("nb.cy").alias("cy"),
-        F.col("nb.same").alias("_same"),
-    )
-    build = cells.select(
-        F.col("_pid").alias("_pb"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("_cat").alias("_cb"),
-        "cx",
-        "cy",
-    )
-    dd = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    near = (
-        probe.join(build, ["cx", "cy"])
-        # same-cell matches appear in both orientations (keep _pa < _pb);
-        # forward-cell matches appear exactly once (keep all)
-        .filter(~F.col("_same") | (F.col("_pa") < F.col("_pb")))
-        .filter(F.col("_ca") != F.col("_cb"))
-        .filter(dd <= F.lit(c * c))
-    )
-    lo_first = F.col("_ca") < F.col("_cb")
+    near = _near_pairs(pts, c).filter(F.col("a_cat") != F.col("b_cat"))
+    lo_first = F.col("a_cat") < F.col("b_cat")
     grouped = near.select(
-        F.least("_ca", "_cb").alias("cat_a"),
-        F.greatest("_ca", "_cb").alias("cat_b"),
-        F.when(lo_first, F.col("_pa")).otherwise(F.col("_pb")).alias("_lo_pid"),
-        F.when(lo_first, F.col("_pb")).otherwise(F.col("_pa")).alias("_hi_pid"),
+        F.least("a_cat", "b_cat").alias("cat_a"),
+        F.greatest("a_cat", "b_cat").alias("cat_b"),
+        F.when(lo_first, F.col("a_pid")).otherwise(F.col("b_pid")).alias("_lo_pid"),
+        F.when(lo_first, F.col("b_pid")).otherwise(F.col("a_pid")).alias("_hi_pid"),
     ).groupBy("cat_a", "cat_b").agg(
         F.count(F.lit(1)).alias("pairs"),
         F.countDistinct("_lo_pid").alias("part_a"),
@@ -1198,20 +1011,13 @@ def local_morans_i(
     one bounded 8-offset cell-table explode + equi-join, a broadcast
     1-row global agg."""
     cells = cell_counts(points, cell_deg, lon_col, lat_col).localCheckpoint()
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in NEIGHBOR_OFFSETS
-        ]
-    )
-    probed = cells.withColumn("_o", F.explode(offs)).select(
-        (F.col("xb") + F.col("_o.dx")).alias("xb"),
-        (F.col("yb") + F.col("_o.dy")).alias("yb"),
-        F.col("x").alias("_xj"),
-    )
     nb = (
-        cells.select("xb", "yb", F.col("x").alias("_xi"))
-        .join(probed, ["xb", "yb"])
+        neighbor_join(
+            cells.select("xb", "yb", F.col("x").alias("_xj")),
+            cells.select("xb", "yb", F.col("x").alias("_xi")),
+            ("xb", "yb"),
+            RING,
+        )
         .groupBy("xb", "yb", "_xi")
         .agg(F.count("*").alias("wn"), F.sum("_xj").alias("wx"))
     )

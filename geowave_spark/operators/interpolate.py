@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NEIGHBORHOOD = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from geowave_spark.operators.neighborhood import QUEEN, neighbor_join
 
 
 def idw_grid(
@@ -66,22 +66,13 @@ def idw_grid(
         .distinct()
         .localCheckpoint()
     )
-    offs = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in NEIGHBORHOOD]
-    )
-    probes = targets.withColumn("_o", F.explode(offs)).select(
-        "xb",
-        "yb",
-        (F.col("xb") + F.col("_o.dx")).alias("pxb"),
-        (F.col("yb") + F.col("_o.dy")).alias("pyb"),
-    )
     cx = (F.col("xb").cast("double") + F.lit(0.5)) * F.lit(cell_deg)
     cy = (F.col("yb").cast("double") + F.lit(0.5)) * F.lit(cell_deg)
     d2 = (F.col("_px") - cx) * (F.col("_px") - cx) + (F.col("_py") - cy) * (F.col("_py") - cy)
     wq = F.floor(F.lit(1000000.0) / (F.lit(d_floor) + d2)).cast("long")
     sv = F.floor(wq.cast("double") * F.col("_v") * F.lit(1000.0)).cast("long")
     return (
-        probes.join(keyed, ["pxb", "pyb"])
+        neighbor_join(targets, keyed, ("xb", "yb"), QUEEN, on=("pxb", "pyb"))
         .select("xb", "yb", wq.alias("_wq"), sv.alias("_sv"))
         .groupBy("xb", "yb")
         .agg(

@@ -24,10 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["region_label", "region_label_sql"]
+from geowave_spark.operators.neighborhood import RING, ROOK, neighbor_join
 
-_OFFSETS_4 = ((1, 0), (-1, 0), (0, 1), (0, -1))
-_OFFSETS_8 = _OFFSETS_4 + ((1, 1), (1, -1), (-1, 1), (-1, -1))
+__all__ = ["region_label", "region_label_sql"]
 
 
 def region_label(
@@ -41,7 +40,7 @@ def region_label(
 
     if connectivity not in (4, 8):
         raise ValueError("connectivity must be 4 or 8")
-    offsets = _OFFSETS_4 if connectivity == 4 else _OFFSETS_8
+    offsets = ROOK if connectivity == 4 else RING
 
     from geowave_spark.operators._packing import pack_xy
 
@@ -50,20 +49,12 @@ def region_label(
         "xb", "yb", F.col("x").alias("n_points"), packed.alias("v")
     ).localCheckpoint()
 
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in offsets
-        ]
-    )
-    probed = base.withColumn("_o", F.explode(offs)).select(
-        (F.col("xb") + F.col("_o.dx")).alias("xb"),
-        (F.col("yb") + F.col("_o.dy")).alias("yb"),
-        F.col("v").alias("v_from"),
-    )
-    edges = base.select("xb", "yb", "v").join(probed, ["xb", "yb"]).select(
-        F.col("v_from").alias("u"), F.col("v")
-    )
+    edges = neighbor_join(
+        base.select("xb", "yb", F.col("v").alias("u")),
+        base.select("xb", "yb", "v"),
+        ("xb", "yb"),
+        offsets,
+    ).select("u", "v")
     labels = connected_components(edges, checkpointer=checkpointer)
     labeled = base.join(
         labels.withColumnRenamed("u", "v"), "v", "left"
@@ -87,7 +78,7 @@ def region_label_sql(points_table: str, cell_deg: float, connectivity: int = 4) 
 
     if connectivity not in (4, 8):
         raise ValueError("connectivity must be 4 or 8")
-    offsets = _OFFSETS_4 if connectivity == 4 else _OFFSETS_8
+    offsets = ROOK if connectivity == 4 else RING
     c = float(cell_deg)
     vals = ", ".join(f"({dx}, {dy})" for dx, dy in offsets)
     return f"""

@@ -189,30 +189,6 @@ def refine_pip_udf():
     return _refine
 
 
-def refine_pip_catalog_udf(catalog: list[str]):
-    """Catalog-indexed refine: candidates carry a small int geometry index;
-    the WKT catalog ships ONCE per worker in the UDF closure instead of a
-    ~0.5 KB string per candidate row.  Cuts the Arrow transfer for the refine
-    stage ~20x (the measured bottleneck at high parallelism: JVM->worker
-    string serialization + allocation pressure).  Used whenever the zone side
-    is broadcastable — the same condition under which the catalog is small.
-    """
-
-    @F.pandas_udf(BooleanType())
-    def _refine(lon: pd.Series, lat: pd.Series, zid: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        lon_v = lon.to_numpy(np.float64)
-        lat_v = lat.to_numpy(np.float64)
-        z = zid.to_numpy(np.int64)
-        for u in np.unique(z):
-            m = z == u
-            pg = _prepared(catalog[u])
-            out[m] = pg.contains_points(lon_v[m], lat_v[m])
-        return pd.Series(out)
-
-    return _refine
-
-
 def _tier_from_wkts(wkts: list[str], cfg: SpatialConfig, target_cells: int = 16) -> int:
     """Fixed join resolution from the polygon layer's median extent:
     cell size ~ median_extent / sqrt(target_cells) (the engine's cost-based
@@ -540,8 +516,8 @@ def refine_areal_udf(within: bool, catalog: list[str] | None = None):
 
     ``catalog``: when the zone side is broadcastable the candidates carry a
     small int zone index and the WKT catalog ships once per worker in the
-    closure (the same contract as :func:`refine_pip_catalog_udf`); otherwise
-    the second argument is the zone WKT string itself.
+    closure instead of a WKT string per candidate row; otherwise the second
+    argument is the zone WKT string itself.
     """
 
     @F.pandas_udf(BooleanType())

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from geowave_spark.operators.neighborhood import QUEEN, neighbor_join
 from geowave_spark.plans.lineage import truncate_plan
 
 
@@ -498,41 +499,30 @@ def hausdorff_join(
         F.floor(F.col("y") / c).cast("long").alias("cy"),
     )
     nv = v.groupBy("fid").agg(F.count("*").alias("n_verts"))
-    probe = v.select(
-        F.col("fid").alias("fa"),
-        F.col("idx").alias("ia"),
-        F.col("x").alias("ax"),
-        F.col("y").alias("ay"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col("cx") + F.lit(dx)).alias("cx"),
-                        (F.col("cy") + F.lit(dy)).alias("cy"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-        ).alias("nb"),
-    ).select("fa", "ia", "ax", "ay", F.col("nb.cx").alias("cx"), F.col("nb.cy").alias("cy"))
-    build = v.select(
-        F.col("fid").alias("fb"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        "cx",
-        "cy",
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
     # keeping only d2 <= t^2 is exact: a vertex whose within-neighborhood
     # partners are all farther than t has true min > t (out-of-neighborhood
     # partners are provably > t too), so it vanishes from per_vertex and the
     # coverage count rejects the pair — the same verdict h > t^2 would give.
     # The filter runs inside the join stage, so only near pairs ever shuffle.
+    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
+        F.col("ay") - F.col("by")
+    ) * (F.col("ay") - F.col("by"))
     near = (
-        probe.join(build, ["cx", "cy"])
+        neighbor_join(
+            v.select(
+                F.col("fid").alias("fa"),
+                F.col("idx").alias("ia"),
+                F.col("x").alias("ax"),
+                F.col("y").alias("ay"),
+                "cx",
+                "cy",
+            ),
+            v.select(
+                F.col("fid").alias("fb"), F.col("x").alias("bx"), F.col("y").alias("by"), "cx", "cy"
+            ),
+            ("cx", "cy"),
+            QUEEN,
+        )
         .filter((F.col("fa") != F.col("fb")) & (d2 <= F.lit(t2)))
         .select("fa", "fb", "ia", d2.alias("d2"))
     )

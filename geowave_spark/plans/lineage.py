@@ -26,7 +26,9 @@ fresh temp dir + rename).
 from __future__ import annotations
 
 import json
+import logging
 import shutil
+import threading
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -35,6 +37,10 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_manifest.json"
+
+_log = logging.getLogger("geowave_spark")
+_fallback_lock = threading.Lock()
+_fallback_warned = False
 
 
 def truncate_plan(df: DataFrame) -> DataFrame:
@@ -61,7 +67,7 @@ def truncate_plan(df: DataFrame) -> DataFrame:
     (default sizeInBytes; AQE re-plans every exchange from runtime sizes,
     so join strategies stay correct).  Per-round stats work is O(1)
     forever after.  Falls back to the plain checkpoint if the JVM surface
-    ever drifts."""
+    ever drifts, and logs one warning per process when it does."""
     ck = df.localCheckpoint()
     try:
         jdf = ck._jdf
@@ -71,7 +77,17 @@ def truncate_plan(df: DataFrame) -> DataFrame:
             jplan.rdd(), jdf.schema(), False
         )
         return DataFrame(jnew, spark)
-    except Exception:  # pragma: no cover - JVM API drift safety net
+    except Exception as exc:  # JVM API drift safety net
+        global _fallback_warned
+        with _fallback_lock:
+            first, _fallback_warned = not _fallback_warned, True
+        if first:
+            _log.warning(
+                "truncate_plan: stats-free rebuild failed (%s: %s); falling back to "
+                "plain localCheckpoint, whose inherited size estimates grow every round",
+                type(exc).__name__,
+                exc,
+            )
         return ck
 
 

@@ -11,6 +11,8 @@ pipeline downstream is already oracle-covered.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -77,6 +79,13 @@ def test_refusals():
         G.geotiff_decode(buf[:20])
     with pytest.raises(ValueError, match="not a TIFF"):
         G.geotiff_decode(b"PNG\x00" + buf[4:])
+    # the first IFD entry (at byte 10) is ImageWidth; an unknown field type
+    # makes the reader skip it, so the tag is missing
+    no_width = bytearray(buf)
+    assert struct.unpack_from("<H", no_width, 10)[0] == 256
+    struct.pack_into("<H", no_width, 12, 0)
+    with pytest.raises(ValueError, match="missing required TIFF tag.*ImageWidth"):
+        G.geotiff_decode(bytes(no_width))
     with pytest.raises(ValueError, match="rotated"):
         G._bounds_from_tags(
             {G.MODEL_TRANSFORMATION: [1, 0.5, 0, 0, 0, -1, 0, 4, 0, 0, 0, 0, 0, 0, 0, 1]},

@@ -296,3 +296,25 @@ class TestTruncatePlan:
         assert sorted(map(tuple, fixed.collect())) == sorted(map(tuple, plain.collect()))
         # v after 4 rounds of v -> 3v is 2k * 81
         assert fixed.filter(F.col("k") == 7).collect()[0].v == 7 * 2 * 81
+
+    def test_fallback_warns_once_per_process(self, caplog, monkeypatch):
+        """When the stats-free rebuild fails (JVM API drift), truncate_plan
+        returns the plain checkpoint and says so once, not every round."""
+        from geowave_spark.plans import lineage
+
+        class Drifted:
+            def localCheckpoint(self):
+                return self
+
+            @property
+            def _jdf(self):
+                raise RuntimeError("queryExecution is gone")
+
+        monkeypatch.setattr(lineage, "_fallback_warned", False)
+        df = Drifted()
+        with caplog.at_level("WARNING", logger="geowave_spark"):
+            assert lineage.truncate_plan(df) is df
+            assert lineage.truncate_plan(df) is df
+        warned = [r for r in caplog.records if r.name == "geowave_spark"]
+        assert len(warned) == 1
+        assert "queryExecution is gone" in warned[0].getMessage()

@@ -1,4 +1,5 @@
-"""Oracle parity for the queries kept OUT of the driver's 50-row gate.
+"""Oracle parity for the queries kept OUT of the driver's 50-row gate, and
+for the driver-surface queries built on cell-neighborhood joins.
 
 The driver's correctness file records at most 50 rows per round, so the
 redundant variants in ``geowave_spark.queries.DRIVER_EXCLUDED`` don't ship in
@@ -6,6 +7,11 @@ redundant variants in ``geowave_spark.queries.DRIVER_EXCLUDED`` don't ship in
 module runs every one of them against its DuckDB oracle at sf0.01 with the
 same comparison the driver applies (row count + sorted column names +
 order-insensitive value hash), so deregistering never weakens coverage.
+
+``NEIGHBORHOOD_QUERIES`` adds the driver-surface queries whose operators
+probe a cell neighborhood (``operators/neighborhood.py``, plus the weighted
+scatter of ``terrain_slope``), so a change to that shared candidate stage is
+hash-checked here for every caller, not only by the driver.
 """
 
 from __future__ import annotations
@@ -52,8 +58,32 @@ def _excluded_names():
     return sorted(DRIVER_EXCLUDED)
 
 
+NEIGHBORHOOD_QUERIES = [
+    "colocation_pi",
+    "colocation_cross_k",
+    "convoy_pairs",
+    "cotravel_pairs",
+    "emerging_hotspots",
+    "hotspot_gi_star",
+    "moving_clusters",
+    "region_label",
+    "ripley_k",
+    "st_dbscan_clusters",
+    "terrain_slope",
+]
+
+
 @pytest.mark.parametrize("name", _excluded_names())
 def test_excluded_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+@pytest.mark.parametrize("name", NEIGHBORHOOD_QUERIES)
+def test_neighborhood_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+def _assert_matches_oracle(spark, duck, name):
     from geowave_spark.queries import ALL_QUERIES, build_oracles
 
     sdf = ALL_QUERIES[name](spark, SF_DIR)

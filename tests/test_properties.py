@@ -1,12 +1,15 @@
 """Property-based hardening (hypothesis) of the pure-Python kernels the
 whole engine stands on: SFC codecs, planner covers/range decomposition,
 WKT/WKB round-trips, convexity dispatch, visibility grammar.  No Spark —
-these run in milliseconds per example."""
+these run in milliseconds per example — except the neighbor-join cases,
+which check the cell-neighborhood candidate stage on small Spark frames."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geowave_spark.operators import neighborhood as nb
 from geowave_spark.sfc.hilbert import hilbert_decode, hilbert_encode
 from geowave_spark.sfc.zorder import zorder_decode, zorder_encode
 
@@ -579,3 +582,73 @@ class TestMediaCodecs:
 
         err = np.abs(luma(out.astype(np.float64)) - luma(img.astype(np.float64)))
         assert err.max() <= 40.0  # q90 luma worst-case on noise; typical ~10
+
+
+# cell size 0.5: the k/2 grid puts points exactly on cell edges, including
+# negative ones, where floor() is the easiest to get wrong
+_COORD = st.one_of(
+    st.integers(-6, 6).map(lambda k: k * 0.5),
+    st.floats(-3.0, 3.0, allow_nan=False),
+)
+# (forward half, full block, cell keys); the 1-D block is knox's time bins
+_HALVES = pytest.mark.parametrize(
+    "fwd,full,keys",
+    [
+        (nb.FORWARD, nb.QUEEN, ("cx", "cy")),
+        (nb.FORWARD_1D, ((-1,), (0,), (1,)), ("ct",)),
+        (nb.SPACE_TIME_FORWARD, nb.SPACE_TIME, ("cx", "cy", "ct")),
+    ],
+    ids=["2d", "1d", "space_time"],
+)
+
+
+class TestNeighborJoin:
+    """operators.neighborhood: a forward-half offset set plus the same-cell
+    id-order rule yields exactly the unordered pairs of the full block, each
+    once.  The join cases run on Spark, so they take few examples."""
+
+    @_HALVES
+    def test_forward_set_is_a_half(self, fwd, full, keys):
+        zero = (0,) * len(keys)
+        moves = [o for o in fwd if o != zero]
+        back = {tuple(-d for d in o) for o in moves}
+        assert zero in fwd and len(set(fwd)) == len(fwd)
+        assert not back & set(moves)
+        assert back | set(moves) | {zero} == set(full)
+
+    @_HALVES
+    @given(
+        pts=st.lists(
+            st.tuples(st.integers(0, 3), _COORD, _COORD, _COORD), min_size=2, max_size=30
+        )
+    )
+    @settings(max_examples=6, deadline=None)
+    def test_forward_probe_equals_full_probe(self, spark, fwd, full, keys, pts):
+        from pyspark.sql import functions as F
+
+        rows = [(fid, idx, x, y, t) for idx, (fid, x, y, t) in enumerate(pts)]
+        keyed = spark.createDataFrame(
+            rows, "fid long, idx long, x double, y double, t double"
+        ).select(
+            "fid",
+            "idx",
+            *[F.floor(F.col(c) / 0.5).cast("long").alias(f"c{c}") for c in "xyt"],
+        )
+        a, b = (
+            keyed.select(F.col("fid").alias(f"fid_{s}"), F.col("idx").alias(f"idx_{s}"), *keys)
+            for s in "ab"
+        )
+        # (fid, idx) lexicographic, the cotravel ping order
+        a_first = (F.col("fid_a") < F.col("fid_b")) | (
+            (F.col("fid_a") == F.col("fid_b")) & (F.col("idx_a") < F.col("idx_b"))
+        )
+        ids = ["fid_a", "idx_a", "fid_b", "idx_b"]
+        got = [
+            tuple(sorted([(r[0], r[1]), (r[2], r[3])]))
+            for r in nb.neighbor_join(a, b, keys, fwd, before=a_first).select(ids).collect()
+        ]
+        want = [
+            ((r[0], r[1]), (r[2], r[3]))
+            for r in nb.neighbor_join(a, b, keys, full).filter(a_first).select(ids).collect()
+        ]
+        assert sorted(got) == sorted(want)
