@@ -354,9 +354,9 @@ def snapshot_clusters(
         for side in "ab"
     )
     d2 = (F.col("x_a") - F.col("x_b")) ** 2 + (F.col("y_a") - F.col("y_b")) ** 2
-    # the bin is the trailing key: the 2-D offsets leave it unshifted
+    # same time bin only: the 2-D offsets with the bin unshifted
     edges = (
-        neighbor_join(a, b, ("cx", "cy", "bin"), QUEEN)
+        neighbor_join(a, b, ("cx", "cy", "bin"), tuple(o + (0,) for o in QUEEN))
         .filter(F.col("a") != F.col("b"))
         .filter(d2 <= F.lit(float(eps_deg) * float(eps_deg)))
         .select("a", "b")

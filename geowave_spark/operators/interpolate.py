@@ -72,7 +72,12 @@ def idw_grid(
     wq = F.floor(F.lit(1000000.0) / (F.lit(d_floor) + d2)).cast("long")
     sv = F.floor(wq.cast("double") * F.col("_v") * F.lit(1000.0)).cast("long")
     return (
-        neighbor_join(targets, keyed, ("xb", "yb"), QUEEN, on=("pxb", "pyb"))
+        neighbor_join(
+            targets.select("xb", "yb", F.col("xb").alias("pxb"), F.col("yb").alias("pyb")),
+            keyed,
+            ("pxb", "pyb"),
+            QUEEN,
+        )
         .select("xb", "yb", wq.alias("_wq"), sv.alias("_sv"))
         .groupBy("xb", "yb")
         .agg(

@@ -48,24 +48,20 @@ def neighbor_join(
     keys: Sequence[str],
     offsets: Sequence[tuple[int, ...]],
     *,
-    on: Sequence[str] | None = None,
     before: Column | None = None,
 ) -> DataFrame:
     """Join ``probe`` rows to the ``build`` rows in neighboring cells.
 
     Each probe row is copied once per offset with its cell ``keys`` shifted
-    by it, and the copies are equi-joined to ``build`` on the shifted keys.
-    An offset shorter than ``keys`` leaves the trailing keys unshifted, so
-    they must match exactly.  The shifted keys are named ``on`` (the build
-    side's key columns, default ``keys``) and replace probe columns of the
-    same names; when the names differ the probe keeps its own keys.
+    by it (every offset has one delta per key), and the copies are
+    equi-joined to ``build`` on the shifted keys, which keep their names.
 
     ``before`` makes a self-join over a forward-half offset set emit each
     unordered pair once: it is a strict order over the two sides' ids, kept
     only for pairs found at the zero offset (the only ones found from both
     endpoints).  Every column of both sides is returned; the caller's
     ``filter`` is the exact refine."""
-    on = list(on or keys)
+    keys = list(keys)
     same = [] if before is None else ["_same"]
 
     def shifted(o):
@@ -73,18 +69,15 @@ def neighbor_join(
         # unshifted copy of the keys: Spark sizes the exploded side by row
         # width, not by the offset count, and the wider rows of an extra
         # copy made it look smaller than the build side and get broadcast
-        cells = [
-            (F.col(k) + F.lit(o[i]) if i < len(o) else F.col(k)).alias(name)
-            for i, (k, name) in enumerate(zip(keys, on))
-        ]
+        cells = [(F.col(k) + F.lit(d)).alias(k) for k, d in zip(keys, o, strict=True)]
         flag = [] if before is None else [F.lit(not any(o)).alias("_same")]
         return F.struct(*cells, *flag)
 
-    rest = [c for c in probe.columns if c not in on]
+    rest = [c for c in probe.columns if c not in keys]
     exploded = probe.select(
         *rest, F.explode(F.array(*[shifted(o) for o in offsets])).alias("_o")
-    ).select(*rest, *[F.col(f"_o.{c}").alias(c) for c in on + same])
-    pairs = exploded.join(build, on)
+    ).select(*rest, *[F.col(f"_o.{c}").alias(c) for c in keys + same])
+    pairs = exploded.join(build, keys)
     if before is None:
         return pairs
     return pairs.filter(~F.col("_same") | before).drop("_same")

@@ -652,3 +652,8 @@ class TestNeighborJoin:
             for r in nb.neighbor_join(a, b, keys, full).filter(a_first).select(ids).collect()
         ]
         assert sorted(got) == sorted(want)
+
+    def test_offset_needs_one_delta_per_key(self, spark):
+        df = spark.createDataFrame([(0, 0, 0)], "cx long, cy long, bin long")
+        with pytest.raises(ValueError):
+            nb.neighbor_join(df, df, ("cx", "cy", "bin"), nb.QUEEN)
