@@ -516,10 +516,6 @@ class CqlBinding:
     wkt_col: str | None = None
 
 
-def _lit(v) -> Column:
-    return F.lit(v)
-
-
 def to_column(node, binding: CqlBinding = CqlBinding()) -> Column:
     """AST -> pure-Catalyst fine filter (the ``CQLQueryFilter`` analog)."""
     return _compile(node, binding)

@@ -23,8 +23,7 @@ TIFF 6.0 spec to 16-bit *samples*, not bytes), either byte order.
 Rotated ModelTransformation matrices raise (the tile pyramid is
 axis-aligned; same refusal GeoTools' grid-to-CRS shear check performs).
 
-Pure numpy + struct + zlib; compression helpers shared with
-:mod:`geowave_spark.functions.tiffcodec`.
+Pure numpy + struct + zlib.  Malformed input raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -33,13 +32,6 @@ import struct
 import zlib
 
 import numpy as np
-
-from geowave_spark.functions.tiffcodec import (
-    _packbits_decode,
-    _packbits_encode,
-    _tiff_lzw_decode,
-    _tiff_lzw_encode,
-)
 
 # baseline tags (TIFF 6.0 §8)
 _WIDTH, _LENGTH, _BITS, _COMPRESSION, _PHOTO = 256, 257, 258, 259, 262
@@ -51,15 +43,171 @@ MODEL_TIEPOINT = 33922
 MODEL_TRANSFORMATION = 34264
 GEO_KEY_DIRECTORY = 34735
 GDAL_NODATA = 42113
+_INT_TAGS = (
+    _WIDTH, _LENGTH, _BITS, _COMPRESSION, _STRIP_OFFSETS, _SAMPLES,
+    _ROWS_PER_STRIP, _STRIP_COUNTS, _PREDICTOR, _SAMPLE_FORMAT, GDAL_NODATA,
+)
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 12: 8}  # BYTE ASCII SHORT LONG RATIONAL DOUBLE
 _TYPE_FMT = {1: "B", 2: "B", 3: "H", 4: "I", 12: "d"}
 
 
+def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
+    """TIFF-flavor LZW (TIFF 6.0 §13): MSB-first bit packing, ClearCode 256
+    / EOI 257, and the spec's "early change" — the code width bumps when the
+    decoder's table length reaches 511/1023/2047 (one entry earlier than
+    the natural LZW rule; the libtiff-compatible convention)."""
+    CLEAR, EOI = 256, 257
+    base = [bytes([i]) for i in range(256)] + [b"", b""]
+    table: list[bytes] | None = None
+    width = 9
+    acc = bits = 0
+    prev: bytes | None = None
+    out = bytearray()
+    for byte in data:
+        acc = (acc << 8) | byte
+        bits += 8
+        while bits >= width:
+            code = (acc >> (bits - width)) & ((1 << width) - 1)
+            bits -= width
+            acc &= (1 << bits) - 1
+            if code == CLEAR:
+                table = list(base)
+                width = 9
+                prev = None
+                continue
+            if code == EOI:
+                if len(out) < expected:
+                    raise ValueError("TIFF LZW stream ended before strip filled")
+                return bytes(out[:expected])
+            if table is None:
+                raise ValueError("TIFF LZW stream must start with ClearCode")
+            if code < len(table):
+                entry = table[code]
+                if prev is not None:
+                    table.append(prev + entry[:1])
+            elif code == len(table) and prev is not None:
+                entry = prev + prev[:1]  # the KwKwK case
+                table.append(entry)
+            else:
+                raise ValueError(f"corrupt TIFF LZW stream (code {code})")
+            out.extend(entry)
+            prev = entry
+            if len(table) in (511, 1023, 2047):
+                width += 1
+            if len(out) >= expected:
+                return bytes(out[:expected])
+    raise ValueError("truncated TIFF LZW stream")
+
+
+def _tiff_lzw_encode(data: bytes) -> bytes:
+    """TIFF-flavor LZW encoder.  The emitted code widths track a SIMULATED
+    decoder (same early-change rule as :func:`_tiff_lzw_decode`), so
+    alignment is correct by construction."""
+    CLEAR, EOI = 256, 257
+    out = bytearray()
+    acc = bits = 0
+
+    state = {"width": 9, "dec_len": 258, "first": True}
+
+    def write(code: int) -> None:
+        nonlocal acc, bits
+        acc = (acc << state["width"]) | code
+        bits += state["width"]
+        while bits >= 8:
+            out.append((acc >> (bits - 8)) & 0xFF)
+            bits -= 8
+        acc &= (1 << bits) - 1
+
+    def emit(code: int) -> None:
+        write(code)
+        if state["first"]:
+            state["first"] = False
+        else:
+            state["dec_len"] += 1
+            if state["dec_len"] in (511, 1023, 2047):
+                state["width"] += 1
+
+    def reset_tables():
+        state["width"] = 9
+        state["dec_len"] = 258
+        state["first"] = True
+        return {bytes([i]): i for i in range(256)}, 258
+
+    write(CLEAR)
+    table, next_code = reset_tables()
+    run = b""
+    for b in data:
+        cand = run + bytes([b])
+        if cand in table:
+            run = cand
+            continue
+        emit(table[run])
+        table[cand] = next_code
+        next_code += 1
+        if next_code >= 4094:  # leave room before the 12-bit ceiling
+            emit(CLEAR)  # note: goes through emit so the sim stays aligned
+            table, next_code = reset_tables()
+            # CLEAR resets the simulated decoder immediately, not one-behind
+        run = bytes([b])
+    if run:
+        emit(table[run])
+    emit(EOI)
+    if bits:
+        out.append((acc << (8 - bits)) & 0xFF)
+    return bytes(out)
+
+
+def _packbits_decode(data: bytes, expected: int) -> bytes:
+    out = bytearray()
+    i = 0
+    while i < len(data) and len(out) < expected:
+        n = data[i]
+        i += 1
+        if n < 128:  # literal run of n+1 bytes
+            out.extend(data[i : i + n + 1])
+            i += n + 1
+        elif n > 128:  # repeat next byte 257-n times
+            out.extend(data[i : i + 1] * (257 - n))
+            i += 1
+        # n == 128: no-op
+    if len(out) < expected:
+        raise ValueError("truncated PackBits strip")
+    return bytes(out[:expected])
+
+
+def _packbits_encode(row: bytes) -> bytes:
+    """Per-row PackBits (the spec's recommended scope)."""
+    out = bytearray()
+    i, n = 0, len(row)
+    while i < n:
+        # find run length at i
+        j = i
+        while j + 1 < n and row[j + 1] == row[i] and j - i < 127:
+            j += 1
+        run = j - i + 1
+        if run >= 2:
+            out.append(257 - run)
+            out.append(row[i])
+            i = j + 1
+        else:
+            # literal segment until the next >=3 run (2-runs inside literals
+            # are cheaper left literal) or 128 bytes
+            k = i
+            while k < n and k - i < 128:
+                if k + 2 < n and row[k] == row[k + 1] == row[k + 2]:
+                    break
+                k += 1
+            out.append(k - i - 1)
+            out.extend(row[i:k])
+            i = k
+    return bytes(out)
+
+
 def _read_entries(buf: bytes, order: str) -> dict[int, list]:
-    """IFD walk like tiffcodec's, extended with DOUBLE (12) and ASCII (2)
-    payloads — the georeferencing tags are DOUBLE arrays and GDAL_NODATA
-    is ASCII, both of which the baseline reader deliberately skips."""
+    """IFD walk over BYTE, ASCII, SHORT, LONG and DOUBLE entries — the
+    georeferencing tags are DOUBLE arrays and GDAL_NODATA is ASCII; entries
+    of any other type are skipped."""
     try:
         (ifd_off,) = struct.unpack_from(order + "I", buf, 4)
         (n,) = struct.unpack_from(order + "H", buf, ifd_off)
@@ -164,6 +312,14 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     missing = [name for name, tag in required.items() if tag not in t]
     if missing:
         raise ValueError(f"missing required TIFF tag(s): {', '.join(missing)}")
+    # sizes, offsets, codes and ASCII text: a DOUBLE-typed entry here is
+    # corrupt, not a float to round
+    not_int = [
+        tag for tag in _INT_TAGS
+        if tag in t and not all(isinstance(v, int) for v in t[tag])
+    ]
+    if not_int:
+        raise ValueError(f"TIFF tag(s) {not_int} must hold integers")
     w, h = t[_WIDTH][0], t[_LENGTH][0]
     bits = t.get(_BITS, [1])
     samples = t.get(_SAMPLES, [1])[0]
@@ -171,8 +327,7 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     if samples != 1 or bits != [16] or sfmt != 2:
         raise ValueError(
             f"geotiff_decode handles single-band signed 16-bit rasters; got "
-            f"samples={samples} bits={bits} sample_format={sfmt} "
-            "(RGB imagery goes through tiffcodec.tiff_decode)"
+            f"samples={samples} bits={bits} sample_format={sfmt}"
         )
     comp = t.get(_COMPRESSION, [1])[0]
     if comp not in (1, 5, 8, 32773):
@@ -202,7 +357,10 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
         elif comp == 5:
             data = _tiff_lzw_decode(raw, expected)
         elif comp == 8:
-            data = zlib.decompress(raw)[:expected]
+            try:
+                data = zlib.decompress(raw)[:expected]
+            except zlib.error as exc:
+                raise ValueError(f"corrupt deflate strip: {exc}") from None
             if len(data) < expected:
                 raise ValueError("short deflate strip")
         else:
@@ -219,7 +377,10 @@ def geotiff_decode(buf: bytes) -> tuple[np.ndarray, tuple[float, float, float, f
     if GDAL_NODATA in t:
         txt = bytes(t[GDAL_NODATA]).split(b"\x00")[0].strip()
         if txt:
-            nodata = int(float(txt))
+            try:
+                nodata = int(float(txt))
+            except (ValueError, OverflowError):
+                raise ValueError(f"GDAL_NODATA {txt!r} is not an integer") from None
     return grid.astype(np.int32), _bounds_from_tags(t, w, h), nodata
 
 
@@ -237,8 +398,13 @@ def geotiff_bytes(
     """Encode an ``(h, w)`` int16 grid (row 0 = north edge) as a
     georeferenced single-band TIFF.  ``transform_tag`` writes the
     ModelTransformationTag encoding instead of Tiepoint+PixelScale (both
-    are spec-valid; GDAL emits either).  Fixture/export path — round-trips
-    through :func:`geotiff_decode` are bit-exact."""
+    are spec-valid; GDAL emits either).  Fixture/export path — pixels
+    round-trip through :func:`geotiff_decode` bit-exactly.  The envelope is
+    stored as ``(minx, maxy)`` plus the scales ``(maxx - minx) / w`` and
+    ``(maxy - miny) / h``, and decode rebuilds ``maxx`` and ``miny`` from
+    them, so bounds round-trip exactly only for dyadic scales (as in the
+    fixtures); otherwise ``maxx`` or ``miny`` may differ by 1 ulp of the
+    largest coordinate."""
     grid = np.ascontiguousarray(grid, dtype=np.int16)
     if grid.ndim != 2:
         raise ValueError("expected a single-band (h, w) grid")

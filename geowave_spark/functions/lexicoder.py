@@ -3,8 +3,8 @@ byte-compatible with the reference's `core/index/lexicoder/*`
 (`LongLexicoder.java:20-32` sign-bit XOR big-endian;
 `DoubleLexicoder.java:12-35` raw-bits transform — negative bit patterns
 inverted, non-negative get the sign bit set — then the long lexicoder;
-Integer/Short analogs at their widths; strings are UTF-8, already
-byte-ordered).
+Integer/Short analogs at their widths; strings need no lexicoder, UTF-8
+is already byte-ordered).
 
 Engine stance (why SURVEY originally scoped these out): Spark orders native
 columns directly — a `sort`/`range`/min-max on DOUBLE needs no byte
@@ -80,24 +80,11 @@ def decode_double(b: bytes) -> float:
     return struct.unpack(">d", struct.pack(">Q", l))[0]
 
 
-def encode_string(value: str) -> bytes:
-    return value.encode("utf-8")
-
-
-def decode_string(b: bytes) -> str:
-    return b.decode("utf-8")
-
-
 def double_sort_keys(values: np.ndarray) -> np.ndarray:
     """Vectorized: float64 array -> uint64 keys whose unsigned order equals
     the lexicoder byte order (and IEEE totalOrder of the doubles)."""
     l = np.ascontiguousarray(values, dtype=np.float64).view(np.int64)
     return np.where(l < 0, ~l, l ^ _SIGN64).view(np.uint64)
-
-
-def long_sort_keys(values: np.ndarray) -> np.ndarray:
-    """Vectorized: int64 array -> uint64 keys in lexicoder byte order."""
-    return (np.ascontiguousarray(values, dtype=np.int64) ^ _SIGN64).view(np.uint64)
 
 
 def lexicoded_double_col(col):

@@ -61,23 +61,6 @@ def word_ngrams_sql(toks_expr: str, n: int) -> str:
     )
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
-def stopword_ratio(toks: Column) -> Column:
-    """Fraction of tokens in the fixed stopword list (exact rational: emitted
-    as n_stop / n so the oracle divides identically)."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return n_stop
-
-
-def distinct_ratio_parts(toks: Column) -> tuple[Column, Column]:
-    """(distinct tokens, total tokens) — type-token ratio numerator/denom."""
-    return F.size(F.array_distinct(toks)), F.size(toks)
-
-
 def doc_fingerprint(toks: Column) -> Column:
     """Order-sensitive polynomial rolling hash of the token stream:
     ``h = (h * 31 + H(tok) % MOD) % MOD`` left-to-right — integer-exact and

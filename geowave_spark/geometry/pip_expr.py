@@ -93,20 +93,6 @@ def pip_edges_expr(edges: Column, lon: Column, lat: Column) -> Column:
     return F.when((lon + lat).isNotNull(), total % 2 == 1).otherwise(F.lit(False))
 
 
-def pip_zid_expr(catalog: list[str], zid: Column, lon: Column, lat: Column) -> Column:
-    """Catalog PIP as a literal CASE chain on the zone index: no arrays, no
-    higher-order functions (Spark 4.1's ArrayAggregate under-reports
-    lambda-captured outer refs to the optimizer, which then pushes the
-    filter to the wrong join side — INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND).
-    All coordinates are plan literals; codegen splits oversized methods
-    itself.  Use for catalogs up to a few hundred polygons; beyond that the
-    per-row Arrow UDF (spatial_join.refine_pip_udf) takes over."""
-    expr = F.lit(False)
-    for i in range(len(catalog) - 1, -1, -1):
-        expr = F.when(zid == i, pip_point_expr(catalog[i], lon, lat)).otherwise(expr)
-    return expr
-
-
 def edges_rows(catalog: list[str]) -> list[list[dict]]:
     """Per-catalog-entry edge structs for createDataFrame."""
     return [

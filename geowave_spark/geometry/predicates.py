@@ -396,11 +396,6 @@ def polygon_within_polygon(
 EARTH_RADIUS_M = 6371008.8
 
 
-def euclidean_deg(ax, ay, bx, by) -> np.ndarray:
-    """Planar degree distance (CoordinateEuclideanDistanceFn analog)."""
-    return np.hypot(np.asarray(ax) - bx, np.asarray(ay) - by)
-
-
 def haversine_m(ax, ay, bx, by) -> np.ndarray:
     """Great-circle meters (CoordinateCircleDistanceFn / orthodromic analog)."""
     lon1, lat1, lon2, lat2 = (np.radians(np.asarray(v, dtype=np.float64)) for v in (ax, ay, bx, by))

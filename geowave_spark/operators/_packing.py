@@ -9,9 +9,9 @@ Injective for |x|, |y| < 2^30 (packed ids stay under 2^62).  In cell
 units that covers any global grid at >= ~1.7e-4 degree cells for raw
 cell coords; for contour endpoints (cell units x1e6) it covers grids
 coarser than ~0.34 degrees — the Spark expression REFUSES out-of-range
-coordinates with a raise_error instead of silently colliding, matching
-the codec family's implausible-input discipline.  (The DuckDB oracle
-twins omit the guard: they run on fixture extents well inside range.)
+coordinates with a raise_error instead of silently colliding.  (The
+DuckDB oracle twins omit the guard: they run on fixture extents well
+inside range.)
 """
 
 from __future__ import annotations

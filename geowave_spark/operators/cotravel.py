@@ -7,7 +7,7 @@ spatial-temporal range scans (`core/geotime/.../SpatialTemporalQuery.java`)
 but has no pairwise movement analytic; this is the beyond-reference
 movement-family capstone the round brief calls for, built as a bucketed
 spatio-temporal self-join — the same candidate-then-refine discipline as
-`operators/spatial_join.py` and `operators/media_dedup.py`.
+`operators/spatial_join.py`.
 
 Plan shape (one shuffle, no DISTINCT, nothing quadratic):
 

@@ -570,14 +570,6 @@ def cell_at_tier(cell: Column | str, from_bits: int, to_bits: int) -> Column:
     return F.shiftright(c, 2 * (from_bits - to_bits))
 
 
-def with_salt(df: DataFrame, key_col: str, buckets: int, salt_col: str = "salt") -> Column:
-    """Deterministic salt column (HashKeyIndexStrategy analog,
-    `HashKeyIndexStrategy.java:22-60`): spread a hot key across `buckets`
-    sub-partitions.  Caller joins on (key, salt) with the build side exploded
-    across all bucket values."""
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets)).cast("int"))
-
-
 def with_geohash(
     df: DataFrame,
     lon_col: str = "lon",

@@ -39,10 +39,9 @@ from pyspark.sql import functions as F
 
 from geowave_spark.operators.trajectory import track_vertices
 
-# cells a single segment may cover before the engine refuses — the codec
-# layer's implausible-input discipline: a segment whose padded bbox covers
-# more cells than this is a degenerate geometry (or the cell size is
-# misconfigured), not a workload to silently explode.
+# cells a single segment may cover before the engine refuses: a segment
+# whose padded bbox covers more cells than this is a degenerate geometry
+# (or the cell size is misconfigured), not a workload to silently explode.
 MAX_COVER_CELLS = 4096
 
 

@@ -46,8 +46,7 @@ POINT_COLS = ["source", "track_id", "point_idx", "ts", "lon", "lat", "elevation"
 
 # Whole-file parses (GPX, GeoJSON lines=False) make ONE Arrow row / ONE task
 # out of each file: a multi-GB upload would OOM an executor with an opaque
-# Arrow error.  Refuse clearly instead — the same implausible-input
-# discipline as the media codecs' dimension guards.
+# Arrow error.  Refuse clearly instead.
 MAX_WHOLE_FILE_BYTES = 256 * 1024 * 1024
 
 
@@ -487,7 +486,8 @@ def read_stanag4676(
     roots are read; each ``tracks`` element is one track event keyed by
     ``trackUUID``/``trackNumber``; ``items`` with ``xsi:type="TrackPoint"``
     — or with no xsi:type, which the reference also tries as a TrackPoint —
-    contribute points in document order; positions come from
+    contribute points in document order (``point_idx`` counts a track's
+    points across all its events in one file); positions come from
     ``trackPointPosition`` (or ``motionEventPosition``); unparseable
     speed/course become null exactly as the decoder's NumberFormatException
     handlers do; ``trackItemTime`` fractions beyond milliseconds are
@@ -552,6 +552,7 @@ def read_stanag4676(
                 if localname(root.tag) != "TrackMessage":
                     continue  # the decoder only reads TrackMessage roots
                 base = fname.rsplit("/", 1)[-1]
+                next_idx: dict[str, int] = {}  # per track, across events
                 for tev in (c for c in root if localname(c.tag) == "tracks"):
                     tc = child_map(tev)
                     uuid_el = tc.get("trackUUID")
@@ -562,7 +563,7 @@ def read_stanag4676(
                     track_id = track_uuid or track_number
                     if track_id is None:
                         continue
-                    idx = 0
+                    idx = next_idx.get(track_id, 0)
                     for item in (c for c in tev if localname(c.tag) == "items"):
                         itype = item.get(xsi_type)
                         if itype is not None and itype != "TrackPoint":
@@ -597,6 +598,7 @@ def read_stanag4676(
                             )
                         )
                         idx += 1
+                    next_idx[track_id] = idx
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -615,15 +617,19 @@ def stanag_to_tracks(points: DataFrame) -> DataFrame:
     4676 input unchanged.  One ``applyInPandas`` per track — the WKT uses
     Python ``repr`` formatting, the same convention the parquet fixtures and
     GeoJSON writer use, so a parquet-sourced twin reconstructs
-    byte-identically.  At scale this is one shuffle on track_id (the same
-    grouping any per-track operator needs anyway)."""
+    byte-identically.  Vertices follow (source file, ``point_idx``), so a
+    track split across events or files has one order; a 1-point track
+    repeats its vertex to stay a valid LINESTRING.  At scale this is one
+    shuffle on track_id (the same grouping any per-track operator needs
+    anyway)."""
     import pandas as pd
 
     def _build(key, pdf):
-        pdf = pdf.sort_values("point_idx")
-        wkt = "LINESTRING (" + ", ".join(
-            f"{float(x)!r} {float(y)!r}" for x, y in zip(pdf["lon"], pdf["lat"])
-        ) + ")"
+        pdf = pdf.sort_values(["source", "point_idx"], kind="stable")
+        verts = [f"{float(x)!r} {float(y)!r}" for x, y in zip(pdf["lon"], pdf["lat"])]
+        if len(verts) == 1:
+            verts *= 2  # a linestring needs two vertices
+        wkt = "LINESTRING (" + ", ".join(verts) + ")"
         return pd.DataFrame(
             {
                 "fid": [key[0]],

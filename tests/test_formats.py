@@ -559,6 +559,62 @@ class TestStanag4676:
         assert (m["lat"], m["lon"]) == (-3.5, 100.25)
         assert m["ts"] == datetime(2020, 6, 1, 11, 0, 0, 500000)
 
+    @staticmethod
+    def _message(*events):
+        """A TrackMessage with one ``tracks`` element per (track_id,
+        [(lon, lat, iso_time), ...]) event."""
+        body = []
+        for tid, pts in events:
+            body.append(f"  <tracks><trackUUID>{tid}</trackUUID>")
+            for lon, lat, t in pts:
+                body.append(
+                    '    <items xsi:type="TrackPoint">'
+                    f"<trackItemTime>{t}</trackItemTime><trackPointPosition>"
+                    f"<latitude>{lat}</latitude><longitude>{lon}</longitude>"
+                    "</trackPointPosition></items>"
+                )
+            body.append("  </tracks>")
+        return (
+            '<TrackMessage xmlns="urn:int:nato:stanag4676:0.14" '
+            'xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance">\n'
+            + "\n".join(body)
+            + "\n</TrackMessage>"
+        )
+
+    def test_track_split_across_events_and_single_point_track(self, spark, tmp_path):
+        """A track split over two events of one file and a later file keeps
+        file-then-document vertex order; a 1-point track is still a valid
+        LINESTRING (its vertex repeated)."""
+        from datetime import datetime
+
+        from geowave_spark.sources.formats import read_stanag4676, stanag_to_tracks
+
+        (tmp_path / "a.xml").write_text(self._message(
+            ("T1", [(1.0, 10.0, "2020-01-01T00:00:00Z"), (2.0, 20.0, "2020-01-01T00:00:01Z")]),
+            ("S", [(9.5, -9.5, "2020-01-01T00:00:00Z")]),
+            ("T1", [(3.0, 30.0, "2020-01-01T00:00:02Z"), (4.0, 40.0, "2020-01-01T00:00:03Z")]),
+        ))
+        (tmp_path / "b.xml").write_text(self._message(
+            ("T1", [(5.0, 50.0, "2020-01-01T00:00:04Z")]),
+        ))
+        pts = read_stanag4676(spark, str(tmp_path / "*.xml"))
+        got = {
+            (r.source, r.point_idx): r.lon
+            for r in pts.filter("track_id = 'T1'").collect()
+        }
+        assert got == {
+            ("a.xml", 0): 1.0, ("a.xml", 1): 2.0, ("a.xml", 2): 3.0,
+            ("a.xml", 3): 4.0, ("b.xml", 0): 5.0,
+        }
+        tracks = {r.fid: r for r in stanag_to_tracks(pts).collect()}
+        assert tracks["T1"].geom_wkt == (
+            "LINESTRING (1.0 10.0, 2.0 20.0, 3.0 30.0, 4.0 40.0, 5.0 50.0)"
+        )
+        assert (tracks["T1"].start_ts, tracks["T1"].end_ts) == (
+            datetime(2020, 1, 1, 0, 0, 0), datetime(2020, 1, 1, 0, 0, 4)
+        )
+        assert tracks["S"].geom_wkt == "LINESTRING (9.5 -9.5, 9.5 -9.5)"
+
     def test_track_stats_byte_identical_to_parquet_twin(self, spark, geo001):
         """The 4676 fixture round-trips to the exact track_stats rows of the
         parquet source — every vertex, every quantized length term."""

@@ -72,6 +72,15 @@ def test_nonzero_tiepoint_placement():
     assert G._bounds_from_tags(tags, w=8, h=4) == (9.0, 49.75, 13.0, 50.75)
 
 
+def _entry_pos(buf: bytes, tag: int) -> int:
+    """Byte offset of ``tag``'s IFD entry in a little-endian file."""
+    n = struct.unpack_from("<H", buf, 8)[0]
+    return next(
+        10 + 12 * i for i in range(n)
+        if struct.unpack_from("<H", buf, 10 + 12 * i)[0] == tag
+    )
+
+
 def test_refusals():
     g = _grid(4, 4)
     buf = G.geotiff_bytes(g, (0.0, 0.0, 1.0, 1.0))
@@ -93,13 +102,53 @@ def test_refusals():
         )
     with pytest.raises(ValueError, match="no georeferencing"):
         G._bounds_from_tags({}, 4, 4)
+    # SamplesPerPixel (277) = 3 declares an RGB raster
+    rgb = bytearray(buf)
+    struct.pack_into("<H", rgb, _entry_pos(buf, 277) + 8, 3)
     with pytest.raises(ValueError, match="single-band"):
-        from geowave_spark.functions.tiffcodec import tiff_bytes
-
-        rgb = np.zeros((4, 4, 3), dtype=np.uint8)
-        G.geotiff_decode(tiff_bytes(rgb))
+        G.geotiff_decode(bytes(rgb))
+    # GDAL_NODATA holds the ASCII text "inf"
+    inf_nodata = bytearray(buf)
+    pos = _entry_pos(buf, G.GDAL_NODATA) + 8
+    inf_nodata[pos : pos + 3] = b"inf"
+    with pytest.raises(ValueError, match="GDAL_NODATA"):
+        G.geotiff_decode(bytes(inf_nodata))
     with pytest.raises(ValueError, match="empty envelope"):
         G.geotiff_bytes(g, (1.0, 0.0, 1.0, 1.0))
+
+
+@pytest.mark.parametrize(
+    "comp,pred",
+    [("none", False), ("packbits", False), ("lzw", False), ("deflate", False),
+     ("lzw", True), ("deflate", True)],
+)
+@pytest.mark.parametrize("transform_tag", [False, True])
+@pytest.mark.parametrize("byteorder", ["<", ">"])
+def test_corrupt_payloads_raise_valueerror(comp, pred, transform_tag, byteorder):
+    """Every truncation, every bit flip in the header and IFD, and a seeded
+    sample of bit flips in the strips either decodes or raises ValueError."""
+    buf = G.geotiff_bytes(
+        _grid(10, 7), (1.0, 2.0, 8.0, 12.0), compression=comp, predictor=pred,
+        transform_tag=transform_tag, byteorder=byteorder, rows_per_strip=4,
+    )
+    n_entries = struct.unpack_from(byteorder + "H", buf, 8)[0]
+    ifd_end = 8 + 2 + 12 * n_entries + 4
+    rng = np.random.RandomState(17)
+    flips = [(pos, bit) for pos in range(ifd_end) for bit in range(8)]
+    flips += [
+        (int(pos), int(bit))
+        for pos, bit in zip(rng.randint(ifd_end, len(buf), 400), rng.randint(0, 8, 400))
+    ]
+    mutants = [buf[:k] for k in range(len(buf))]
+    for pos, bit in flips:
+        m = bytearray(buf)
+        m[pos] ^= 1 << bit
+        mutants.append(bytes(m))
+    for m in mutants:
+        try:
+            G.geotiff_decode(m)
+        except ValueError:
+            pass
 
 
 def test_nodata_tag_optional():

@@ -1,0 +1,93 @@
+"""Every in-package import resolves.
+
+Most imports in this codebase sit inside functions, so a deleted module or
+name only fails when some rare path runs.  This walks the source with
+``ast`` — no imports executed, no Spark — and checks that each
+``from geowave_spark.X import Y`` (absolute or relative, at any depth)
+names a module that exists and binds ``Y`` at module level or as a
+submodule.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "geowave_spark"
+
+
+def _sources() -> list[Path]:
+    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    for d in (PKG, "tools", "tests"):
+        files += sorted((REPO / d).rglob("*.py"))
+    return files
+
+
+def _module_path(dotted: str) -> Path | None:
+    base = REPO.joinpath(*dotted.split("."))
+    for p in (base.with_suffix(".py"), base / "__init__.py"):
+        if p.is_file():
+            return p
+    return None
+
+
+def _bound_names(path: Path) -> set[str]:
+    """Names a module binds at top level, including inside if/try blocks."""
+    names: set[str] = set()
+    stack = list(ast.parse(path.read_text()).body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.If, ast.Try)):
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                stack.extend(getattr(node, field, []))
+        elif isinstance(node, ast.ExceptHandler):
+            stack.extend(node.body)
+    return names
+
+
+def _target(path: Path, node: ast.ImportFrom) -> str | None:
+    """Dotted module an ImportFrom names, or None if outside the package."""
+    if node.level == 0:
+        mod = node.module or ""
+        return mod if mod == PKG or mod.startswith(PKG + ".") else None
+    parts = list(path.relative_to(REPO).with_suffix("").parts)
+    if parts[0] != PKG:
+        return None
+    parts = parts[: len(parts) - node.level]
+    return ".".join(parts + ([node.module] if node.module else []))
+
+
+def test_every_in_package_import_resolves():
+    missing: list[str] = []
+    checked = 0
+    bound: dict[str, set[str]] = {}
+    for path in _sources():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            mod = _target(path, node)
+            if mod is None:
+                continue
+            where = f"{path.relative_to(REPO)}:{node.lineno}"
+            mod_path = _module_path(mod)
+            if mod_path is None:
+                missing.append(f"{where}: no module {mod}")
+                continue
+            if mod not in bound:
+                bound[mod] = _bound_names(mod_path)
+            for alias in node.names:
+                checked += 1
+                name = alias.name
+                if name not in bound[mod] and _module_path(f"{mod}.{name}") is None:
+                    missing.append(f"{where}: {mod} defines no {name}")
+    assert checked > 100
+    assert not missing, "\n".join(missing)

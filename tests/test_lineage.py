@@ -168,85 +168,6 @@ class TestPipJoinResume:
         assert [x["skipped"] for x in pipe2.summary()] == [True, True]
 
 
-class TestMediaGeoPipeline:
-    """The media half of the north rule's span->geometry extraction, run as
-    a checkpointed lineage pipeline: EXIF points + text centroids through
-    the same PIP join, resumable mid-pipeline."""
-
-    def _media_parquet(self, spark, geo001, tmp_path):
-        from geowave_spark.functions.multimodal import synth_image_media_table
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        p = tmp_path / "media.parquet"
-        synth_image_media_table(spark, docs, fmt="tiff", dim=8, gps=True).write.mode(
-            "overwrite"
-        ).parquet(str(p))
-        return str(p)
-
-    def test_runs_and_resumes(self, spark, geo001, root, tmp_path):
-        from geowave_spark.plans.media_pipeline import run_media_geo_pipeline
-
-        media_path = self._media_parquet(spark, geo001, tmp_path)
-        pipe, rollup = run_media_geo_pipeline(
-            spark,
-            str(geo001 / "docs.parquet"),
-            media_path,
-            str(geo001 / "zones.parquet"),
-            str(root),
-        )
-        rows = {(r.zone_id, r.src): r.n_points for r in rollup.collect()}
-        assert rows
-        srcs = {s for _, s in rows}
-        assert srcs == {"media", "text"}  # both halves joined zones
-        assert [x["skipped"] for x in pipe.summary()] == [False] * 5
-        # second invocation over the same root: every stage resumes
-        pipe2, rollup2 = run_media_geo_pipeline(
-            spark,
-            str(geo001 / "docs.parquet"),
-            media_path,
-            str(geo001 / "zones.parquet"),
-            str(root),
-        )
-        rows2 = {(r.zone_id, r.src): r.n_points for r in rollup2.collect()}
-        assert rows2 == rows
-        assert [x["skipped"] for x in pipe2.summary()] == [True] * 5
-
-    def test_media_points_match_direct_extraction(self, spark, geo001, root, tmp_path):
-        """The pipeline's unified 'media' points are exactly the EXIF
-        extraction joined to the docs' media spans — no rows invented or
-        lost by the checkpointing."""
-        from pyspark.sql import functions as F
-
-        from geowave_spark.functions.multimodal import media_geo_extract
-        from geowave_spark.plans.media_pipeline import run_media_geo_pipeline
-
-        media_path = self._media_parquet(spark, geo001, tmp_path)
-        run_media_geo_pipeline(
-            spark,
-            str(geo001 / "docs.parquet"),
-            media_path,
-            str(geo001 / "zones.parquet"),
-            str(root),
-        )
-        unified = spark.read.parquet(str(root / "30_union_geoms"))
-        got = {
-            (r.doc_id, r.ref): (r.lon, r.lat)
-            for r in unified.filter(F.col("src") == "media").collect()
-        }
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        links = (
-            docs.select("doc_id", F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "media")
-            .select("doc_id", F.col("s.media_ref").alias("media_ref"))
-        )
-        pts = media_geo_extract(spark.read.parquet(media_path))
-        want = {
-            (r.doc_id, r.media_ref): (r.lon, r.lat)
-            for r in links.join(pts, "media_ref").collect()
-        }
-        assert got == want and want
-
-
 class TestTruncatePlan:
     """plans.lineage.truncate_plan: the stats-resetting round barrier.
 

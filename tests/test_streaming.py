@@ -161,74 +161,6 @@ class TestKafkaTwin:
             read_docs_kafka_stream(spark, "broker:9092", "docs")
 
 
-class TestStreamingMediaDecode:
-    """The media decode stages are stateless mapInPandas transforms, so the
-    SAME operators run under Structured Streaming unchanged — the ingest
-    shape an interleaved text+media corpus arrives in.  Stream results must
-    equal the batch decode bit-for-bit."""
-
-    def test_image_decode_stream_equals_batch(self, spark, geo001, tmp_path):
-        from geowave_spark.functions.multimodal import (
-            decode_media,
-            synth_image_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_image_media_table(spark, docs, fmt="png", dim=8)
-        media_dir = str(tmp_path / "media_img")
-        table.write.parquet(media_dir)
-        batch = spark.read.parquet(media_dir)
-
-        stream = spark.readStream.schema(batch.schema).parquet(media_dir)
-        q = (
-            decode_media(stream, codec="real")
-            .writeStream.format("memory")
-            .queryName("mm_img_stream")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        sig = lambda rows: {
-            (r.media_ref, r.width, r.height, tuple(r.pixels)) for r in rows
-        }
-        got = sig(spark.sql("select * from mm_img_stream").collect())
-        want = sig(decode_media(batch, codec="real").collect())
-        assert got == want and got
-
-    def test_video_decode_stream_explodes_frames_like_batch(
-        self, spark, geo001, tmp_path
-    ):
-        from geowave_spark.functions.multimodal import (
-            decode_video,
-            synth_video_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_video_media_table(spark, docs, dim=8)
-        media_dir = str(tmp_path / "media_vid")
-        table.write.parquet(media_dir)
-        batch = spark.read.parquet(media_dir)
-
-        stream = spark.readStream.schema(batch.schema).parquet(media_dir)
-        q = (
-            decode_video(stream, codec="real")
-            .writeStream.format("memory")
-            .queryName("mm_vid_stream")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        sig = lambda rows: {
-            (r.media_ref, r.frame_idx, r.n_frames, r.fps, tuple(r.pixels))
-            for r in rows
-        }
-        got = sig(spark.sql("select * from mm_vid_stream").collect())
-        want = sig(decode_video(batch, codec="real").collect())
-        assert got == want and got
-
-
 class TestStreamingPipJoin:
     """The batch PIP join composed under readStream (stream-static join):
     same operator, same planner, bit-identical rows to the batch run."""
