@@ -1,11 +1,9 @@
 """Shared BT.601 full-swing RGB <-> YCbCr color math.
 
-Single home for the conversion coefficients so the JPEG codec
-(`jpegcodec.py`, which needs unrounded float planes for the DCT) and the
-Y4M video codec (`videocodec.py`, which needs rounded uint8 pixels) cannot
-drift apart — the cross-codec round-trip/PSNR contracts in
-tests/test_jpegcodec.py and tests/test_multimodal.py assume identical
-coefficients on both sides.
+The JPEG codec (`jpegcodec.py`) converts with unrounded float planes on
+encode (for the DCT) and rounded uint8 pixels on decode; both directions
+read the coefficients from here, so the round-trip/PSNR contracts in
+tests/test_jpegcodec.py and tests/test_multimodal.py see one set.
 """
 
 from __future__ import annotations

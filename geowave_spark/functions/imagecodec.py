@@ -1,9 +1,8 @@
 """Dependency-free raster image codecs (BMP, PPM P6, PNG) in pure numpy +
 stdlib zlib.
 
-De-stubs the ``codec="real"`` path of :mod:`geowave_spark.functions.multimodal`
-for formats whose encodings need no image library, so the container
-constraint (no PIL/libav) doesn't apply.  All lossless paths round-trip
+Decodes the image formats whose encodings need no image library, so the
+container constraint (no PIL/libav) doesn't apply.  All lossless paths round-trip
 bit-exact, which is what makes them testable.
 
 Formats:
@@ -529,8 +528,8 @@ def decode_image(buf: bytes) -> np.ndarray:
 
     Unrecognized payloads raise here — this function is the integration
     point for a real image library (PIL/libav): add a branch on the magic
-    bytes returning the same (h, w, 3) uint8 contract and every downstream
-    operator (decode_media, extract_features, resize) works unchanged.
+    bytes returning the same (h, w, 3) uint8 contract and every caller
+    works unchanged.
     """
     if buf[:2] == b"BM":
         return bmp_decode(buf)

@@ -4,7 +4,7 @@ Earlier rounds scoped JPEG out as "genuinely needs a library" — that was
 too pessimistic.  Baseline sequential JFIF (ITU-T T.81) is an 8x8 DCT, a
 quantizer, and canonical Huffman coding: plain math and bit-twiddling, all
 of it in numpy + stdlib.  This module de-stubs the last image format the
-synthetic corpus cares about, so ``decode_media(codec="real")`` covers
+synthetic corpus cares about, so :func:`imagecodec.decode_image` covers
 BMP/PPM/PNG *and* JPEG with zero external dependencies.
 
 Scope (stated honestly):

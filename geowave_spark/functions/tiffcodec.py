@@ -21,6 +21,13 @@ import struct
 
 import numpy as np
 
+from geowave_spark.functions.geotiff import (
+    _packbits_decode,
+    _packbits_encode,
+    _tiff_lzw_decode,
+    _tiff_lzw_encode,
+)
+
 # tag ids (TIFF 6.0 §8)
 _WIDTH, _LENGTH, _BITS, _COMPRESSION, _PHOTO = 256, 257, 258, 259, 262
 _STRIP_OFFSETS, _SAMPLES, _ROWS_PER_STRIP, _STRIP_COUNTS = 273, 277, 278, 279
@@ -28,112 +35,6 @@ _PLANAR, _PREDICTOR, _COLORMAP = 284, 317, 320
 _FILL_ORDER, _T4_OPTIONS, _T6_OPTIONS = 266, 292, 293
 _TILE_TAGS = (322, 323, 324, 325)  # TileWidth/Length/Offsets/ByteCounts
 _JPEG_TABLES = 347
-
-
-def _tiff_lzw_decode(data: bytes, expected: int) -> bytes:
-    """TIFF-flavor LZW (TIFF 6.0 §13): MSB-first bit packing, ClearCode 256
-    / EOI 257, and the spec's "early change" — the code width bumps when the
-    decoder's table length reaches 511/1023/2047 (one entry earlier than
-    the natural LZW rule; the libtiff-compatible convention)."""
-    CLEAR, EOI = 256, 257
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table: list[bytes] | None = None
-    width = 9
-    acc = bits = 0
-    prev: bytes | None = None
-    out = bytearray()
-    for byte in data:
-        acc = (acc << 8) | byte
-        bits += 8
-        while bits >= width:
-            code = (acc >> (bits - width)) & ((1 << width) - 1)
-            bits -= width
-            acc &= (1 << bits) - 1
-            if code == CLEAR:
-                table = list(base)
-                width = 9
-                prev = None
-                continue
-            if code == EOI:
-                if len(out) < expected:
-                    raise ValueError("TIFF LZW stream ended before strip filled")
-                return bytes(out[:expected])
-            if table is None:
-                raise ValueError("TIFF LZW stream must start with ClearCode")
-            if code < len(table):
-                entry = table[code]
-                if prev is not None:
-                    table.append(prev + entry[:1])
-            elif code == len(table) and prev is not None:
-                entry = prev + prev[:1]  # the KwKwK case
-                table.append(entry)
-            else:
-                raise ValueError(f"corrupt TIFF LZW stream (code {code})")
-            out.extend(entry)
-            prev = entry
-            if len(table) in (511, 1023, 2047):
-                width += 1
-            if len(out) >= expected:
-                return bytes(out[:expected])
-    raise ValueError("truncated TIFF LZW stream")
-
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    """TIFF-flavor LZW encoder.  The emitted code widths track a SIMULATED
-    decoder (same early-change rule as :func:`_tiff_lzw_decode`), so
-    alignment is correct by construction."""
-    CLEAR, EOI = 256, 257
-    out = bytearray()
-    acc = bits = 0
-
-    state = {"width": 9, "dec_len": 258, "first": True}
-
-    def write(code: int) -> None:
-        nonlocal acc, bits
-        acc = (acc << state["width"]) | code
-        bits += state["width"]
-        while bits >= 8:
-            out.append((acc >> (bits - 8)) & 0xFF)
-            bits -= 8
-        acc &= (1 << bits) - 1
-
-    def emit(code: int) -> None:
-        write(code)
-        if state["first"]:
-            state["first"] = False
-        else:
-            state["dec_len"] += 1
-            if state["dec_len"] in (511, 1023, 2047):
-                state["width"] += 1
-
-    def reset_tables():
-        state["width"] = 9
-        state["dec_len"] = 258
-        state["first"] = True
-        return {bytes([i]): i for i in range(256)}, 258
-
-    write(CLEAR)
-    table, next_code = reset_tables()
-    run = b""
-    for b in data:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run])
-        table[cand] = next_code
-        next_code += 1
-        if next_code >= 4094:  # leave room before the 12-bit ceiling
-            emit(CLEAR)  # note: goes through emit so the sim stays aligned
-            table, next_code = reset_tables()
-            # CLEAR resets the simulated decoder immediately, not one-behind
-        run = bytes([b])
-    if run:
-        emit(table[run])
-    emit(EOI)
-    if bits:
-        out.append((acc << (8 - bits)) & 0xFF)
-    return bytes(out)
 
 
 def _undiff(px: np.ndarray) -> np.ndarray:
@@ -173,24 +74,6 @@ def _read_entries(buf: bytes, order: str) -> dict[int, list[int]]:
             continue  # ASCII/RATIONAL tags are irrelevant here
         tags[tag] = list(struct.unpack_from(order + fmt * count, buf, vpos))
     return tags
-
-
-def _packbits_decode(data: bytes, expected: int) -> bytes:
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:  # literal run of n+1 bytes
-            out.extend(data[i : i + n + 1])
-            i += n + 1
-        elif n > 128:  # repeat next byte 257-n times
-            out.extend(data[i : i + 1] * (257 - n))
-            i += 1
-        # n == 128: no-op
-    if len(out) < expected:
-        raise ValueError("truncated PackBits strip")
-    return bytes(out[:expected])
 
 
 def tiff_decode(buf: bytes) -> np.ndarray:
@@ -445,34 +328,6 @@ def tiff_bilevel_bytes(
         out += struct.pack(f"<{n_strips}I", *(len(s) for s in strips))
     for s in strips:
         out += s
-    return bytes(out)
-
-
-def _packbits_encode(row: bytes) -> bytes:
-    """Per-row PackBits (the spec's recommended scope)."""
-    out = bytearray()
-    i, n = 0, len(row)
-    while i < n:
-        # find run length at i
-        j = i
-        while j + 1 < n and row[j + 1] == row[i] and j - i < 127:
-            j += 1
-        run = j - i + 1
-        if run >= 2:
-            out.append(257 - run)
-            out.append(row[i])
-            i = j + 1
-        else:
-            # literal segment until the next >=3 run (2-runs inside literals
-            # are cheaper left literal) or 128 bytes
-            k = i
-            while k < n and k - i < 128:
-                if k + 2 < n and row[k] == row[k + 1] == row[k + 2]:
-                    break
-                k += 1
-            out.append(k - i - 1)
-            out.extend(row[i:k])
-            i = k
     return bytes(out)
 
 

@@ -1,71 +1,11 @@
-"""Multimodal plumbing: schema/batch shapes are real, the codec is a
-deterministic stub (no image libs in this container)."""
+"""Still-image codecs: BMP/PPM/PNG, GIF (still and animated), TIFF with
+CCITT fax strips, and the EXIF GPS block; numpy round-trips and refusals."""
 
 import pytest
-from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def media(spark, geo001):
-    from geowave_spark.functions.multimodal import synth_media_table
-
-    docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-    return synth_media_table(spark, docs).cache()
-
-
-class TestMultimodal:
-    def test_media_table_covers_all_refs(self, spark, geo001, media):
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        n_refs = (
-            docs.select(F.explode("spans").alias("s"))
-            .filter(F.col("s.kind") == "media")
-            .select("s.media_ref")
-            .distinct()
-            .count()
-        )
-        assert media.count() == n_refs > 0
-        assert media.schema["content"].dataType.simpleString() == "binary"
-
-    def test_fake_decode_is_deterministic(self, spark, media):
-        from geowave_spark.functions.multimodal import FAKE_DECODE_DIM, decode_media
-
-        a = {r.media_ref: tuple(r.pixels[:4]) for r in decode_media(media).collect()}
-        b = {r.media_ref: tuple(r.pixels[:4]) for r in decode_media(media).collect()}
-        assert a == b
-        n_px = FAKE_DECODE_DIM * FAKE_DECODE_DIM
-        one = decode_media(media).limit(1).collect()[0]
-        assert len(one.pixels) == n_px
-
-    def test_real_codec_rejects_unknown_payloads(self, spark, media):
-        """The fake table's payloads are sha256 bytes, not images — the real
-        codec must refuse them loudly, never emit garbage pixels."""
-        from pyspark.errors.exceptions.captured import PythonException
-
-        from geowave_spark.functions.multimodal import decode_media
-
-        with pytest.raises(PythonException, match="unrecognized image payload"):
-            decode_media(media, codec="real").collect()
-
-    def test_feature_extraction_shapes(self, spark, media):
-        from geowave_spark.functions.multimodal import decode_media, extract_features
-
-        feats = extract_features(decode_media(media), dim=8).collect()
-        assert all(len(r.feature) == 8 for r in feats)
-        assert all(r.feat_norm >= 0 for r in feats)
-
-    def test_frame_sample(self, spark, media):
-        from geowave_spark.functions.multimodal import decode_media, frame_sample
-
-        decoded = decode_media(media)
-        sampled = frame_sample(decoded, every_nth=2)
-        # single-frame fakes: every row keeps exactly frame 0
-        assert sampled.count() == decoded.count()
-        assert sampled.filter(F.col("frame_idx") != 0).count() == 0
 
 
 class TestImageCodec:
-    """Dependency-free BMP/PPM codecs: numpy round-trips + the real decode
-    path end-to-end through mapInPandas."""
+    """Dependency-free BMP/PPM/PNG codecs: numpy round-trips and refusals."""
 
     def test_bmp_roundtrip_including_row_padding(self):
         import numpy as np
@@ -285,736 +225,6 @@ class TestImageCodec:
                 np.arange(600, dtype=np.uint8).reshape(10, 20, 3) % 256, depth=1
             )
 
-    @pytest.mark.parametrize("fmt", ["bmp", "ppm", "png", "jpeg", "gif", "tiff", "mixed"])
-    def test_real_decode_end_to_end(self, spark, geo001, fmt):
-        """codec='real' over genuinely-encoded payloads: header dims win,
-        pixels equal the known grayscale of the synthesized image (for the
-        lossy JPEG fixtures, the known grayscale of its exact decode).
-        fmt='mixed' runs ONE decode pass over a heterogeneous corpus —
-        magic-byte dispatch across all six formats in the same batches."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.jpegcodec import jpeg_bytes, jpeg_decode
-        from geowave_spark.functions.multimodal import (
-            decode_media,
-            synth_image_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_image_media_table(spark, docs, fmt=fmt, dim=8)
-        rows = decode_media(table, codec="real").collect()
-        assert rows
-        n_checked_jpeg = 0
-        for r in rows[:20]:
-            assert (r.width, r.height) == (8, 8)
-            seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-            rgb = np.random.RandomState(seed).randint(0, 256, (8, 8, 3), dtype=np.uint8)
-            is_jpeg = fmt == "jpeg" or (fmt == "mixed" and (seed >> 8) % 6 == 5)
-            if is_jpeg:
-                rgb = jpeg_decode(
-                    jpeg_bytes(
-                        rgb,
-                        quality=90,
-                        subsample="420" if seed % 2 else "444",
-                        restart_interval=(seed >> 1) % 3,
-                        progressive=bool((seed >> 3) & 1),
-                    )
-                )
-                n_checked_jpeg += 1
-            want = (rgb.mean(axis=2, dtype=np.float64) / 255.0).astype(np.float32).ravel()
-            assert np.allclose(np.asarray(r.pixels, dtype=np.float32), want)
-        if fmt == "mixed":
-            assert 0 < n_checked_jpeg < 20, "mixed corpus should mix formats"
-
-    def test_gif_fixtures_survive_large_dims(self, spark, geo001):
-        """Random RGB above ~16x16 exceeds GIF's 256-color limit; the
-        fixture generator must quantize (deterministically) instead of
-        crashing inside the Spark task."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            decode_media,
-            synth_image_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_image_media_table(spark, docs, fmt="gif", dim=20)
-        rows = decode_media(table, codec="real").collect()
-        assert rows
-        r = rows[0]
-        assert (r.width, r.height) == (20, 20)
-        seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-        rgb = np.random.RandomState(seed).randint(0, 256, (20, 20, 3), dtype=np.uint8)
-        if len(np.unique(rgb.reshape(-1, 3), axis=0)) > 256:
-            rgb = (rgb // 51) * 51  # the generator's 6-6-6 quantization
-        want = (rgb.mean(axis=2, dtype=np.float64) / 255.0).astype(np.float32).ravel()
-        assert np.allclose(np.asarray(r.pixels, dtype=np.float32), want)
-
-
-class TestResize:
-    def test_downscale_is_block_mean(self, spark, geo001):
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            FAKE_DECODE_DIM,
-            decode_media,
-            resize_pixels,
-            synth_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet")).limit(200)
-        media = synth_media_table(spark, docs)
-        decoded = decode_media(media).limit(5).cache()
-        out = {r.media_ref: r for r in resize_pixels(decoded, FAKE_DECODE_DIM // 2).collect()}
-        for r in decoded.collect():
-            img = np.asarray(r.pixels, dtype=np.float64).reshape(r.height, r.width)
-            half = FAKE_DECODE_DIM // 2
-            want = img.reshape(half, 2, half, 2).mean(axis=(1, 3)).astype(np.float32)
-            got = np.asarray(out[r.media_ref].pixels, dtype=np.float32).reshape(half, half)
-            assert out[r.media_ref].width == half and out[r.media_ref].height == half
-            assert np.allclose(got, want)
-
-    def test_upscale_nearest(self, spark, geo001):
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            FAKE_DECODE_DIM,
-            decode_media,
-            resize_pixels,
-            synth_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet")).limit(50)
-        decoded = decode_media(synth_media_table(spark, docs)).limit(2)
-        up = resize_pixels(decoded, FAKE_DECODE_DIM * 2).collect()
-        for r in up:
-            assert r.width == FAKE_DECODE_DIM * 2
-            assert len(r.pixels) == (FAKE_DECODE_DIM * 2) ** 2
-
-
-class TestAudioCodec:
-    """Dependency-free WAV codec + the audio decode path end-to-end."""
-
-    def test_wav_roundtrip_mono_and_stereo(self):
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import wav_bytes, wav_decode
-
-        rng = np.random.RandomState(11)
-        for ch in (1, 2):
-            pcm = rng.randint(-32768, 32768, (200, ch)).astype(np.int16)
-            samples, rate = wav_decode(wav_bytes(pcm, 22050))
-            assert rate == 22050
-            assert (samples == pcm).all()
-        # 1-D input becomes (n, 1)
-        mono = rng.randint(-32768, 32768, 50).astype(np.int16)
-        samples, _ = wav_decode(wav_bytes(mono, 8000))
-        assert samples.shape == (50, 1)
-        assert (samples[:, 0] == mono).all()
-
-    def test_wav_tolerates_extra_chunks_and_rejects_non_pcm(self):
-        import struct
-
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import (
-            decode_audio_payload,
-            wav_bytes,
-            wav_decode,
-        )
-
-        pcm = np.random.RandomState(12).randint(-32768, 32768, 64).astype(np.int16)
-        buf = wav_bytes(pcm, 16000)
-        # odd-sized LIST chunk (word-aligned) before fmt must be skipped
-        extra = b"LIST" + struct.pack("<I", 5) + b"hello" + b"\x00"
-        spliced = buf[:12] + extra + buf[12:]
-        spliced = b"RIFF" + struct.pack("<I", len(spliced) - 8) + spliced[8:]
-        samples, rate = wav_decode(spliced)
-        assert rate == 16000 and (samples[:, 0] == pcm).all()
-        # IEEE-float format tag rejected with the codec-library pointer
-        nonpcm = bytearray(buf)
-        struct.pack_into("<H", nonpcm, 20, 3)
-        with pytest.raises(ValueError, match="unsupported WAV"):
-            wav_decode(bytes(nonpcm))
-        with pytest.raises(ValueError, match="unrecognized audio"):
-            decode_audio_payload(b"\xff\xfb mp3 frame")
-
-    def test_real_audio_decode_end_to_end(self, spark, geo001):
-        """codec='real' over genuinely-encoded WAVs: header rate wins,
-        stereo mixes down to mono, samples match the known PCM / 32768."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            decode_audio,
-            synth_audio_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_audio_media_table(spark, docs, n_samples=64)
-        rows = decode_audio(table, codec="real").collect()
-        assert rows
-        saw_stereo = False
-        for r in rows[:20]:
-            seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-            rng = np.random.RandomState(seed)
-            ch = 1 + seed % 2
-            rate = (8000, 16000, 44100)[seed % 3]
-            pcm = rng.randint(-32768, 32768, (64, ch)).astype(np.int16)
-            assert (r.sample_rate, r.n_channels, r.n_samples) == (rate, ch, 64)
-            want = (pcm.mean(axis=1, dtype=np.float64) / 32768.0).astype(np.float32)
-            assert np.allclose(np.asarray(r.samples, dtype=np.float32), want)
-            saw_stereo |= ch == 2
-        assert saw_stereo  # the fixture must exercise the mixdown path
-
-    def test_g711_code_idempotency(self):
-        """Every 8-bit G.711 code must decode and re-encode to itself —
-        the exact-law version of 'the segment formulas are right'.  The one
-        mu-law exception is negative zero (0x7F), which decodes to the same
-        0 as positive zero and legitimately re-encodes to 0xFF."""
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import (
-            _ALAW_TABLE,
-            _ULAW_TABLE,
-            alaw_encode,
-            ulaw_encode,
-        )
-
-        codes = np.arange(256, dtype=np.uint8)
-        mism = codes[ulaw_encode(_ULAW_TABLE[codes]) != codes]
-        assert mism.tolist() == [0x7F]
-        assert (alaw_encode(_ALAW_TABLE[codes]) == codes).all()
-
-    @pytest.mark.parametrize("codec", ["ulaw", "alaw"])
-    def test_g711_companding_snr(self, codec):
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import wav_bytes, wav_decode
-
-        x = (10000 * np.sin(np.arange(4000) / 20)).astype(np.int16)
-        y, rate = wav_decode(wav_bytes(x, 8000, codec=codec))
-        assert rate == 8000 and y.shape == (4000, 1)
-        snr = 10 * np.log10(
-            (x.astype(float) ** 2).mean() / ((y[:, 0].astype(float) - x) ** 2).mean()
-        )
-        assert snr > 30  # G.711 delivers ~38 dB on a full-scale sine
-
-    @pytest.mark.parametrize("ch", [1, 2])
-    def test_ima_adpcm_roundtrip(self, ch):
-        """Block headers carry sample 0 exactly; the 4-bit differential
-        coding tracks a sine within ADPCM's expected SNR; the fact chunk
-        trims a non-multiple-of-block-length signal to its true length."""
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import wav_bytes, wav_decode
-
-        t = np.arange(1234) / 30
-        sig = np.stack(
-            [(12000 * np.sin(t * (1 + c))).astype(np.int16) for c in range(ch)],
-            axis=1,
-        )
-        y, rate = wav_decode(wav_bytes(sig, 16000, codec="ima"))
-        assert rate == 16000 and y.shape == sig.shape  # fact chunk honored
-        spb = (256 * ch - 4 * ch) * 2 // ch + 1
-        assert (y[::spb] == sig[::spb]).all()  # block-header samples exact
-        snr = 10 * np.log10(
-            (sig.astype(float) ** 2).mean()
-            / ((y.astype(float) - sig) ** 2).mean()
-        )
-        assert snr > 25
-
-    def test_ima_known_vector_hand_stepped(self):
-        """Decode one hand-built block and compare against an independent
-        scalar re-derivation of the IMA step arithmetic (same style as the
-        zigzag pin: implementation bugs can't hide by being self-consistent
-        between encoder and decoder)."""
-        import struct
-
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import _IMA_STEPS, wav_decode
-
-        nibbles = [3, 8, 15, 1, 0, 12, 7, 2] * 63  # 504 nibbles = 252 bytes
-        body = bytes(
-            nibbles[i] | (nibbles[i + 1] << 4) for i in range(0, len(nibbles), 2)
-        )
-        pred0, idx0 = 1000, 20
-        block = struct.pack("<hBB", pred0, idx0, 0) + body
-        fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 8000, 256, 4, 2, 505)
-        buf = (
-            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(block))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(block)) + block
-        )
-        got, _ = wav_decode(buf)
-        # independent scalar re-derivation (IMA ADPCM reference algorithm)
-        index_tab = [-1, -1, -1, -1, 2, 4, 6, 8]
-        pred, idx = pred0, idx0
-        want = [pred0]
-        for n in nibbles:
-            step = int(_IMA_STEPS[idx])
-            delta = step >> 3
-            if n & 4:
-                delta += step
-            if n & 2:
-                delta += step >> 1
-            if n & 1:
-                delta += step >> 2
-            pred = pred - delta if n & 8 else pred + delta
-            pred = max(-32768, min(32767, pred))
-            want.append(pred)
-            idx = max(0, min(88, idx + index_tab[n & 7]))
-        assert got[:, 0].tolist() == want
-
-    def test_mixed_wav_codecs_end_to_end(self, spark, geo001):
-        """One decode pass over a corpus rotating PCM/ulaw/alaw/IMA format
-        tags AND FLAC containers; expected samples re-derived through the
-        same library round-trip."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.audiocodec import (
-            decode_audio_payload,
-            wav_bytes,
-        )
-        from geowave_spark.functions.flaccodec import flac_bytes
-        from geowave_spark.functions.multimodal import (
-            decode_audio,
-            synth_audio_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_audio_media_table(spark, docs, n_samples=64, codec="mixed")
-        rows = decode_audio(table, codec="real").collect()
-        assert rows
-        seen = set()
-        for r in rows[:30]:
-            seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-            rng = np.random.RandomState(seed)
-            ch = 1 + seed % 2
-            pcm = rng.randint(-32768, 32768, (64, ch)).astype(np.int16)
-            c = ("pcm", "ulaw", "alaw", "ima", "flac")[(seed >> 4) % 5]
-            seen.add(c)
-            payload = (
-                flac_bytes(pcm, block_size=256)
-                if c == "flac"
-                else wav_bytes(pcm, codec=c)
-            )
-            ref, _ = decode_audio_payload(payload)
-            want = (ref.mean(axis=1, dtype=np.float64) / 32768.0).astype(np.float32)
-            assert r.n_samples == 64
-            assert np.allclose(np.asarray(r.samples, dtype=np.float32), want), (
-                r.media_ref,
-                c,
-            )
-        assert len(seen) >= 4, f"mixed corpus should rotate codecs, saw {seen}"
-
-    def test_fake_audio_decode_is_deterministic(self, spark, geo001):
-        from geowave_spark.functions.multimodal import (
-            decode_audio,
-            synth_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        media = synth_media_table(spark, docs)
-        a = {r.media_ref: tuple(r.samples) for r in decode_audio(media).collect()}
-        b = {r.media_ref: tuple(r.samples) for r in decode_audio(media).collect()}
-        assert a == b and a
-        with pytest.raises(ValueError, match="unknown codec"):
-            decode_audio(media, codec="flac")
-
-
-class TestFlacCodec:
-    """Dependency-free FLAC: lossless, so every path is pinned by bit-exact
-    round-trips — fixed and LPC predictors, Rice partitions, all stereo
-    modes, CRC verification."""
-
-    def _roundtrip(self, x, **kw):
-        import numpy as np
-
-        from geowave_spark.functions.flaccodec import flac_bytes, flac_decode
-
-        buf = flac_bytes(x, 16000, **kw)
-        y, rate = flac_decode(buf)
-        x2 = x if x.ndim == 2 else x[:, None]
-        assert rate == 16000 and (y == x2).all()
-        return buf
-
-    def test_empty_input_refused(self):
-        # zero samples would emit a frame-less stream flac_decode itself
-        # rejects — fail fast at encode time instead
-        import numpy as np
-
-        from geowave_spark.functions.flaccodec import flac_bytes
-
-        with pytest.raises(ValueError, match="empty"):
-            flac_bytes(np.zeros(0, np.int16))
-
-    def test_roundtrip_battery_bit_exact(self):
-        import numpy as np
-
-        rng = np.random.RandomState(0)
-        t = np.arange(5000)
-        smooth = (8000 * np.sin(t / 50)).astype(np.int16)
-        self._roundtrip(smooth)
-        self._roundtrip(smooth, lpc_order=8)
-        self._roundtrip(smooth, partition_order=2)
-        self._roundtrip(rng.randint(-32768, 32768, 3000).astype(np.int16))
-        self._roundtrip(np.full(2048, -123, np.int16))  # CONSTANT subframes
-        self._roundtrip(np.array([32767, -32768] * 800, np.int16))  # VERBATIM
-        self._roundtrip(np.array([5], np.int16))
-        self._roundtrip(smooth[:2049], partition_order=2)  # odd final block
-
-    def test_stereo_modes_bit_exact_and_mid_side_smaller(self):
-        import numpy as np
-
-        t = np.arange(6000)
-        st = np.stack(
-            [
-                (6000 * np.sin(t / 40)).astype(np.int16),
-                (6000 * np.sin(t / 40 + 0.05)).astype(np.int16),
-            ],
-            axis=1,
-        )
-        ind = self._roundtrip(st, stereo="independent")
-        ms = self._roundtrip(st, stereo="mid_side")
-        assert len(ms) < len(ind)  # correlated channels: decorrelation pays
-
-    def test_compression_is_real(self):
-        import numpy as np
-
-        t = np.arange(20000)
-        smooth = (8000 * np.sin(t / 50)).astype(np.int16)
-        buf = self._roundtrip(smooth)
-        assert len(buf) < smooth.nbytes / 4  # < 25% of raw PCM
-
-    def test_lpc_beats_fixed_on_resonant_signal(self):
-        import numpy as np
-
-        rng = np.random.RandomState(3)
-        n = 6000
-        x = np.zeros(n)
-        e = rng.randn(n) * 60
-        for i in range(2, n):
-            x[i] = 1.89 * x[i - 1] - 0.94 * x[i - 2] + e[i]
-        x = np.clip(x, -30000, 30000).astype(np.int16)
-        b_fixed = self._roundtrip(x, lpc_order=0)
-        b_lpc = self._roundtrip(x, lpc_order=8)
-        assert len(b_lpc) < len(b_fixed)
-
-    def test_crc_corruption_detected(self):
-        import numpy as np
-
-        from geowave_spark.functions.flaccodec import flac_bytes, flac_decode
-
-        x = (5000 * np.sin(np.arange(3000) / 30)).astype(np.int16)
-        buf = bytearray(flac_bytes(x))
-        buf[len(buf) // 2] ^= 0x40  # flip a bit in frame data
-        with pytest.raises(ValueError):
-            flac_decode(bytes(buf))
-        with pytest.raises(ValueError, match="not a FLAC"):
-            flac_decode(b"fLaX" + bytes(40))
-
-    def test_dispatch_and_spark_end_to_end(self, spark, geo001):
-        """FLAC payloads flow through decode_audio(codec='real') unchanged —
-        magic dispatch, lossless samples, header rate wins."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            decode_audio,
-            synth_audio_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_audio_media_table(spark, docs, n_samples=64, codec="flac")
-        rows = decode_audio(table, codec="real").collect()
-        assert rows
-        for r in rows[:15]:
-            seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-            rng = np.random.RandomState(seed)
-            ch = 1 + seed % 2
-            rate = (8000, 16000, 44100)[seed % 3]
-            pcm = rng.randint(-32768, 32768, (64, ch)).astype(np.int16)
-            assert (r.sample_rate, r.n_channels, r.n_samples) == (rate, ch, 64)
-            want = (pcm.mean(axis=1, dtype=np.float64) / 32768.0).astype(np.float32)
-            assert np.allclose(np.asarray(r.samples, dtype=np.float32), want)
-
-
-class TestVideoCodec:
-    """Dependency-free Y4M codec + the per-frame video decode path."""
-
-    def test_y4m_mono_roundtrip_bit_exact(self):
-        import numpy as np
-
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        luma = np.random.RandomState(21).randint(0, 256, (3, 6, 8), dtype=np.uint8)
-        frames, fps = y4m_decode(y4m_bytes(luma, fps=30, colorspace="mono"))
-        assert fps == 30 and frames.shape == (3, 6, 8, 3)
-        for c in range(3):
-            assert (frames[:, :, :, c] == luma).all()
-
-    def test_y4m_444_bt601_within_rounding(self):
-        import numpy as np
-
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        rgb = np.random.RandomState(22).randint(0, 256, (2, 4, 5, 3), dtype=np.uint8)
-        frames, fps = y4m_decode(y4m_bytes(rgb, colorspace="444"))
-        assert fps == 25
-        # YCbCr integer rounding: near-exact, never exact (inherent, documented)
-        assert np.abs(frames.astype(int) - rgb.astype(int)).max() <= 2
-
-    def test_y4m_rejects_bad_streams(self):
-        import numpy as np
-
-        from geowave_spark.functions.videocodec import (
-            decode_video_payload,
-            y4m_bytes,
-            y4m_decode,
-        )
-
-        luma = np.random.RandomState(23).randint(0, 256, (2, 4, 4), dtype=np.uint8)
-        good = y4m_bytes(luma, colorspace="mono")
-        with pytest.raises(ValueError, match="truncated"):
-            y4m_decode(good[:-3])
-        with pytest.raises(ValueError, match="unsupported Y4M colorspace"):
-            y4m_decode(b"YUV4MPEG2 W4 H4 F25:1 C411\nFRAME\n" + bytes(24))
-        # C420 is no longer rejected: a minimal 2x2 stream decodes
-        frames, _ = y4m_decode(b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + bytes(6))
-        assert frames.shape == (1, 2, 2, 3)
-        with pytest.raises(ValueError, match="unrecognized video"):
-            decode_video_payload(b"\x00\x00\x00\x18ftypmp42")
-
-    def test_real_video_decode_and_frame_sample(self, spark, geo001):
-        """codec='real' over genuine Y4M payloads: one row per decoded frame
-        with stream-true counts, and frame_sample filters those real rows."""
-        import hashlib
-
-        from geowave_spark.functions.multimodal import (
-            decode_video,
-            frame_sample,
-            synth_video_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_video_media_table(spark, docs, dim=8)
-        decoded = decode_video(table, codec="real").cache()
-        per_ref = {
-            r.media_ref: r
-            for r in decoded.groupBy("media_ref")
-            .agg(
-                F.count("*").alias("rows"),
-                F.first("n_frames").alias("nf"),
-                F.first("fps").alias("fps"),
-            )
-            .collect()
-        }
-        assert per_ref
-        for ref, r in list(per_ref.items())[:20]:
-            seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
-            nf = 2 + seed % 3
-            assert (r.rows, r.nf) == (nf, nf)
-            assert r.fps == {0: 25, 1: 30, 2: 24}[seed % 3]  # mono/444/420
-        sampled = frame_sample(decoded, every_nth=2)
-        assert sampled.filter(F.col("frame_idx") % 2 != 0).count() == 0
-        # every video keeps frame 0, so no ref disappears
-        assert sampled.select("media_ref").distinct().count() == len(per_ref)
-        decoded.unpersist()
-
-    def test_fake_video_decode_explodes_n_frames(self, spark, geo001):
-        from geowave_spark.functions.multimodal import (
-            decode_video,
-            synth_video_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_video_media_table(spark, docs, dim=8)
-        decoded = decode_video(table, codec="fake")
-        bad = decoded.filter(
-            (F.col("frame_idx") < 0) | (F.col("frame_idx") >= F.col("n_frames"))
-        )
-        assert bad.count() == 0
-        # fake frames differ across frame_idx (payload+idx seeded)
-        one = decoded.filter(F.col("n_frames") >= 2).limit(2).collect()
-        assert len(one) == 2
-
-
-class TestMediaToAnnPipeline:
-    """The composed media story: a heterogeneous (mixed-format) corpus is
-    decoded in one magic-dispatch pass, feature-extracted, and fed to the
-    same cosine top-k operator the embeddings table uses — the multimodal
-    columns are first-class pipeline inputs, not a dead end."""
-
-    def test_decode_features_ann_topk(self, spark, geo001):
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            decode_media,
-            extract_features,
-            synth_image_media_table,
-        )
-        from geowave_spark.operators.similarity import cosine_topk
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_image_media_table(spark, docs, fmt="mixed", dim=8)
-        feats = extract_features(decode_media(table, codec="real")).cache()
-        n = feats.count()
-        assert n > 10
-
-        queries = feats.limit(8).select(
-            F.col("media_ref").alias("qid"), F.col("feature").alias("qvec")
-        )
-        topk = cosine_topk(
-            feats, queries, k=3, id_col="media_ref", vec_col="feature"
-        ).collect()
-        # contract: 3 ranked neighbors per query, no self-matches
-        per_q = {}
-        for r in topk:
-            per_q.setdefault(r.qid, []).append((r.rank, r.media_ref))
-            assert r.qid != r.media_ref
-        assert len(per_q) == 8
-        for q, neigh in per_q.items():
-            assert sorted(rk for rk, _ in neigh) == [1, 2, 3]
-
-        # spot-verify rank-1 against a driver-side exact computation
-        fmap = {r.media_ref: np.asarray(r.feature, dtype=np.float64) for r in feats.collect()}
-        cos = lambda a, b: float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b) + 1e-30))
-        for q in list(per_q)[:3]:
-            qv = fmap[q]
-            got1 = next(ref for rk, ref in sorted(per_q[q]) if rk == 1)
-            # ties on cosine resolve by vec_id ascending in the operator
-            cands = sorted(
-                (ref for ref in fmap if ref != q),
-                key=lambda ref: (-cos(fmap[ref], qv), ref),
-            )
-            assert got1 == cands[0], (q, got1, cands[:3])
-        feats.unpersist()
-
-
-def test_y4m_rational_framerate_parsed():
-    """F<num>:<den> headers (NTSC F30000:1001) must not decode as fps=30000
-    (review regression pin)."""
-    import numpy as np
-
-    from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-    luma = np.arange(2 * 4 * 4, dtype=np.uint8).reshape(2, 4, 4)
-    buf = y4m_bytes(luma, fps=30, colorspace="mono").replace(b"F30:1", b"F30000:1001")
-    frames, fps = y4m_decode(buf)
-    assert fps == 30 and frames.shape == (2, 4, 4, 3)
-
-
-class TestAviMjpeg:
-    """MJPEG-in-AVI: the container walk over the real JPEG codec, incl. the
-    OpenDML omitted-DHT convention."""
-
-    def _frames(self, n=5, dim=16):
-        import numpy as np
-
-        yy, xx = np.mgrid[0:dim, 0:dim].astype(float)
-        return np.stack(
-            [
-                np.clip(
-                    128
-                    + 90 * np.sin((xx + 3 * f) / 2.3)[:, :, None]
-                    + 20 * np.cos((yy - f) / 3.1)[:, :, None]
-                    + np.zeros((dim, dim, 3)),
-                    0,
-                    255,
-                )
-                for f in range(n)
-            ]
-        ).astype(np.uint8)
-
-    @pytest.mark.parametrize("omit_dht", [False, True])
-    def test_frames_decode_jpeg_exact(self, omit_dht):
-        """Every decoded AVI frame equals the plain JPEG round trip of its
-        source frame — with or without per-frame Huffman tables."""
-        import numpy as np
-
-        from geowave_spark.functions.avicodec import (
-            avi_mjpeg_bytes,
-            avi_mjpeg_decode,
-        )
-        from geowave_spark.functions.jpegcodec import jpeg_bytes, jpeg_decode
-
-        frames = self._frames()
-        buf = avi_mjpeg_bytes(frames, fps=30, omit_dht=omit_dht)
-        out, fps = avi_mjpeg_decode(buf)
-        assert fps == 30 and out.shape == frames.shape
-        for i in range(len(frames)):
-            assert (out[i] == jpeg_decode(jpeg_bytes(frames[i], quality=90))).all()
-
-    def test_omitted_dht_stream_is_smaller_but_equal(self):
-        from geowave_spark.functions.avicodec import (
-            avi_mjpeg_bytes,
-            avi_mjpeg_decode,
-        )
-
-        frames = self._frames()
-        full = avi_mjpeg_bytes(frames, fps=25)
-        bare = avi_mjpeg_bytes(frames, fps=25, omit_dht=True)
-        assert len(bare) < len(full)
-        a, _ = avi_mjpeg_decode(full)
-        b, _ = avi_mjpeg_decode(bare)
-        assert (a == b).all()
-
-    def test_malformed_rejected(self):
-        import numpy as np
-
-        from geowave_spark.functions.avicodec import (
-            avi_mjpeg_bytes,
-            avi_mjpeg_decode,
-        )
-
-        with pytest.raises(ValueError, match="not an AVI"):
-            avi_mjpeg_decode(b"RIFF\x04\x00\x00\x00WAVE")
-        buf = avi_mjpeg_bytes(self._frames(2), fps=10)
-        with pytest.raises(ValueError):
-            avi_mjpeg_decode(buf[: len(buf) // 2])
-
-    def test_mixed_video_containers_end_to_end(self, spark, geo001):
-        """One decode pass over a corpus rotating Y4M and MJPEG-AVI
-        containers; per-frame rows re-derived through the same codecs."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import (
-            decode_video,
-            synth_video_media_table,
-        )
-        from geowave_spark.functions.videocodec import decode_video_payload
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_video_media_table(spark, docs, dim=8, fmt="mixed")
-        rows = decode_video(table, codec="real").collect()
-        assert rows
-        payloads = {r.media_ref: bytes(r.content) for r in table.collect()}
-        n_avi = sum(1 for p in payloads.values() if p[:4] == b"RIFF")
-        assert 0 < n_avi < len(payloads), "mixed corpus should rotate containers"
-        by_ref: dict = {}
-        for r in rows:
-            by_ref.setdefault(r.media_ref, []).append(r)
-        for ref in list(by_ref)[:12]:
-            frames, fps = decode_video_payload(payloads[ref])
-            grey = (frames.mean(axis=3, dtype=np.float64) / 255.0).astype(np.float32)
-            got = sorted(by_ref[ref], key=lambda r: r.frame_idx)
-            assert len(got) == len(frames)
-            for i, r in enumerate(got):
-                assert r.fps == fps
-                assert np.allclose(np.asarray(r.pixels, np.float32), grey[i].ravel())
-
 
 class TestGifAnimation:
     """Animated GIF as a video source: full GIF89a compositing semantics —
@@ -1099,100 +309,9 @@ class TestGifAnimation:
         out, fps = gif_frames(gif_bytes(img))
         assert out.shape == (1, 9, 7, 3) and (out[0] == img).all()
 
-    def test_gif_corpus_end_to_end(self, spark, geo001):
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.gifcodec import gif_anim_bytes, gif_frames
-        from geowave_spark.functions.multimodal import (
-            decode_video,
-            synth_video_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_video_media_table(spark, docs, dim=8, fmt="gif")
-        rows = decode_video(table, codec="real").collect()
-        assert rows
-        by_ref: dict = {}
-        for r in rows:
-            by_ref.setdefault(r.media_ref, []).append(r)
-        for ref in list(by_ref)[:10]:
-            seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
-            rng = np.random.RandomState(seed)
-            nf = 2 + seed % 3
-            pal = rng.randint(0, 256, (16, 3), dtype=np.uint8)
-            frames = pal[rng.randint(0, 16, (nf, 8, 8))]
-            mode = ("full", "patch", "patch_transparent")[(seed >> 8) % 3]
-            want, fps = gif_frames(gif_anim_bytes(frames, fps=20, mode=mode))
-            got = sorted(by_ref[ref], key=lambda r: r.frame_idx)
-            assert len(got) == nf and got[0].fps == fps
-            grey = (want.mean(axis=3, dtype=np.float64) / 255.0).astype(np.float32)
-            for i, r in enumerate(got):
-                assert np.allclose(np.asarray(r.pixels, np.float32), grey[i].ravel())
-
-
-class TestY4MSubsampled:
-    """C420/C422 — the layouts real Y4M streams actually use (ffmpeg's
-    default is 420)."""
-
-    def _rgb(self):
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        # blocky content so 2x2 chroma averaging is near-lossless per block
-        base = rng.integers(0, 256, size=(2, 3, 4, 3), dtype=np.uint8)
-        return np.repeat(np.repeat(base, 2, axis=1), 2, axis=2)  # (2, 6, 8, 3)
-
-    def test_420_roundtrip_on_blocky_content(self):
-        import numpy as np
-
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        rgb = self._rgb()
-        frames, fps = y4m_decode(y4m_bytes(rgb, fps=24, colorspace="420"))
-        assert fps == 24 and frames.shape == rgb.shape
-        # chroma constant within each 2x2 block -> only BT.601 rounding loss
-        assert int(np.abs(frames.astype(int) - rgb.astype(int)).max()) <= 2
-
-    def test_422_roundtrip_on_blocky_content(self):
-        import numpy as np
-
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        rgb = self._rgb()
-        frames, _ = y4m_decode(y4m_bytes(rgb, colorspace="422"))
-        assert int(np.abs(frames.astype(int) - rgb.astype(int)).max()) <= 2
-
-    def test_siting_suffix_tags_decode(self):
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        buf = y4m_bytes(self._rgb(), colorspace="420")
-        for tag in (b"C420jpeg", b"C420mpeg2", b"C420paldv"):
-            frames, _ = y4m_decode(buf.replace(b"C420", tag, 1))
-            assert frames.shape == (2, 6, 8, 3)
-
-    def test_headerless_c_tag_defaults_to_420(self):
-        from geowave_spark.functions.videocodec import y4m_bytes, y4m_decode
-
-        buf = y4m_bytes(self._rgb(), colorspace="420").replace(b" C420", b"", 1)
-        frames, _ = y4m_decode(buf)  # spec default when no C tag present
-        assert frames.shape == (2, 6, 8, 3)
-
-    def test_odd_dimensions_rejected(self):
-        import numpy as np
-        import pytest
-
-        from geowave_spark.functions.videocodec import y4m_bytes
-
-        odd = np.zeros((1, 5, 8, 3), dtype=np.uint8)
-        with pytest.raises(ValueError, match="divisible"):
-            y4m_bytes(odd, colorspace="420")
-
 
 class TestMediaGeoExtract:
-    """EXIF GPS -> spatial engine: the media half of 'geometries extracted
-    from interleaved text+media document spans'."""
+    """EXIF GPS block: write then read recovers (lon, lat) to 1e-6."""
 
     def test_exif_block_roundtrip(self):
         from geowave_spark.functions.exif import exif_gps_block, gps_from_media
@@ -1200,80 +319,6 @@ class TestMediaGeoExtract:
         for lat, lon in [(37.7749, -122.4194), (-33.8688, 151.2093), (0.0, 0.0)]:
             got = gps_from_media(exif_gps_block(lat, lon))
             assert abs(got[0] - lon) < 1e-6 and abs(got[1] - lat) < 1e-6
-
-    @pytest.mark.parametrize("fmt", ["jpeg", "tiff"])
-    def test_geotagged_corpus_extracts_planted_coords(self, spark, geo001, fmt):
-        import hashlib
-
-        from geowave_spark.functions.multimodal import (
-            media_geo_extract,
-            media_gps_for_seed,
-            synth_image_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        table = synth_image_media_table(spark, docs, fmt=fmt, dim=8, gps=True)
-        rows = media_geo_extract(table).collect()
-        assert rows
-        n_payloads = table.count()
-        assert len(rows) == n_payloads  # every payload carries EXIF
-        for r in rows[:25]:
-            seed = int.from_bytes(hashlib.md5(r.media_ref.encode()).digest()[:4], "big")
-            lat, lon = media_gps_for_seed(seed)
-            assert abs(r.lon - lon) < 1e-6 and abs(r.lat - lat) < 1e-6
-
-    def test_untagged_media_yields_no_rows(self, spark, geo001):
-        from geowave_spark.functions.multimodal import (
-            media_geo_extract,
-            synth_image_media_table,
-        )
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet")).limit(40)
-        table = synth_image_media_table(spark, docs, fmt="png", dim=8)
-        assert media_geo_extract(table).count() == 0
-
-    def test_geotagged_media_joins_zones_like_any_points(self, spark, geo001):
-        """Composed pipeline: EXIF coords through the SAME pip_join path an
-        ordinary point table takes — byte-identical join rows."""
-        import hashlib
-
-        from geowave_spark.functions.multimodal import (
-            media_geo_extract,
-            media_gps_for_seed,
-            synth_image_media_table,
-        )
-        from geowave_spark.operators.spatial_join import pip_join
-
-        docs = spark.read.parquet(str(geo001 / "docs.parquet"))
-        zones = spark.read.parquet(str(geo001 / "zones.parquet"))
-        table = synth_image_media_table(spark, docs, fmt="tiff", dim=8, gps=True)
-        pts = media_geo_extract(table)
-        got = {
-            (r.media_ref, r.zone_id)
-            for r in pip_join(pts, zones).select("media_ref", "zone_id").collect()
-        }
-        refs = [r.media_ref for r in table.select("media_ref").collect()]
-        direct = spark.createDataFrame(
-            [
-                (ref,)
-                + tuple(
-                    reversed(
-                        media_gps_for_seed(
-                            int.from_bytes(
-                                hashlib.md5(ref.encode()).digest()[:4], "big"
-                            )
-                        )
-                    )
-                )
-                for ref in refs
-            ],
-            "media_ref string, lon double, lat double",
-        )
-        want = {
-            (r.media_ref, r.zone_id)
-            for r in pip_join(direct, zones).select("media_ref", "zone_id").collect()
-        }
-        assert got == want and want  # non-trivial and identical
 
 
 class TestGifCodec:
@@ -1744,38 +789,3 @@ class TestCcittCodec:
         with pytest.raises(ValueError, match="truncated|invalid|EOL"):
             g4_decode(b"\x00\x00\x00", 64, 4)
 
-    def test_ccitt_fax_corpus_through_spark_decode(self, spark):
-        """Bilevel CCITT TIFF payloads (G4 and MH rotating per ref) decode
-        through the SAME decode_media mapInPandas pass as every other
-        format — magic-byte dispatch lands in the bilevel branch and the
-        grayscale floats are exactly the thresholded pattern."""
-        import hashlib
-
-        import numpy as np
-
-        from geowave_spark.functions.multimodal import decode_media
-        from geowave_spark.functions.tiffcodec import tiff_bilevel_bytes
-
-        def payload(ref):
-            seed = int.from_bytes(hashlib.md5(ref.encode()).digest()[:4], "big")
-            ink = np.random.RandomState(seed).rand(8, 8) < 0.4
-            comp = "ccitt_g4" if seed % 2 else "ccitt_mh"
-            return ink, tiff_bilevel_bytes(ink, comp)
-
-        refs = [f"fax{i:03d}" for i in range(24)]
-        rows = [
-            (r, "image", 8, 8, 1, payload(r)[1]) for r in refs
-        ]
-        table = spark.createDataFrame(
-            rows,
-            "media_ref string, media_type string, width int, height int, "
-            "n_frames int, content binary",
-        )
-        got = {r.media_ref: r for r in decode_media(table, codec="real").collect()}
-        assert len(got) == 24
-        for ref in refs:
-            ink, _ = payload(ref)
-            want = np.where(ink, 0.0, 1.0).astype(np.float32).ravel()
-            r = got[ref]
-            assert (r.width, r.height) == (8, 8)
-            assert np.allclose(np.asarray(r.pixels, dtype=np.float32), want)

@@ -343,6 +343,189 @@ class TestVisibilityGrammar:
         assert evaluate_visibility(text, auths) == self._eval_ast(ast, auths)
 
 
+class TestMediaCodecs:
+    """Round-trip laws for the dependency-free still-image codecs: any
+    image survives BMP/PPM/PNG (every scanline filter) bit-exact, and JPEG
+    keeps its flat-color and structural laws."""
+
+    def test_corrupt_payloads_keep_the_valueerror_contract(self):
+        """Decoders run inside Spark tasks over untrusted corpora: every
+        truncation and single-bit flip of a valid payload must either decode
+        or raise ValueError — never a bare KeyError/IndexError/struct.error/
+        zlib.error, and never a giant allocation from corrupt dimension
+        fields.  (Seeded, deterministic; ~400 mutations per format.)"""
+        import numpy as np
+
+        from geowave_spark.functions.exif import gps_from_media
+        from geowave_spark.functions.gifcodec import (
+            gif_anim_bytes,
+            gif_bytes,
+            gif_frames,
+        )
+        from geowave_spark.functions.imagecodec import (
+            bmp_bytes,
+            bmp_bytes_indexed,
+            decode_image,
+            png_bytes,
+            png_bytes_indexed,
+            ppm_bytes,
+        )
+        from geowave_spark.functions.jpegcodec import jpeg_bytes
+        from geowave_spark.functions.tiffcodec import tiff_bytes
+
+        rng = np.random.RandomState(0)
+        img = rng.randint(0, 256, (9, 7, 3)).astype(np.uint8)
+        pal = rng.randint(0, 256, (8, 3)).astype(np.uint8)[rng.randint(0, 8, (9, 7))]
+        payloads = {
+            "bmp": (bmp_bytes(img), decode_image),
+            "ppm": (ppm_bytes(img), decode_image),
+            "png": (png_bytes(img, filter_type=4), decode_image),
+            "gif": (gif_bytes(pal, interlace=True), decode_image),
+            "tiff": (tiff_bytes(img, packbits=True), decode_image),
+            "jpeg": (jpeg_bytes(img, restart_interval=1), decode_image),
+            "jpeg_prog": (jpeg_bytes(img, progressive=True), decode_image),
+            "jpeg_gps": (jpeg_bytes(img, gps=(37.77, -122.42)), gps_from_media),
+            "tiff_gps": (tiff_bytes(img, gps=(-33.87, 151.21)), gps_from_media),
+            "gif_anim": (
+                gif_anim_bytes(
+                    np.repeat((img // 51 * 51)[None], 3, axis=0),
+                    fps=20,
+                    mode="patch_transparent",
+                ),
+                gif_frames,
+            ),
+            "png_adam7_16": (
+                png_bytes(img, filter_type=3, interlace=True, depth=16),
+                decode_image,
+            ),
+            "png_palette2": (
+                png_bytes_indexed(
+                    np.array(
+                        [[0, 0, 0], [85, 85, 85], [170, 170, 170], [255, 255, 255]],
+                        np.uint8,
+                    )[img[:, :, 0] // 64],
+                    depth=2,
+                    interlace=True,
+                ),
+                decode_image,
+            ),
+            "tiff_lzw": (
+                tiff_bytes(img, compression="lzw", predictor=True),
+                decode_image,
+            ),
+            "bmp_rle8": (
+                bmp_bytes_indexed((img // 64) * 64, rle=True),
+                decode_image,
+            ),
+        }
+        for name, (buf, dec) in payloads.items():
+            cases = [buf[:cut] for cut in range(1, len(buf), max(1, len(buf) // 50))]
+            for _ in range(300):
+                b = bytearray(buf)
+                b[rng.randint(0, len(b))] ^= 1 << rng.randint(0, 8)
+                cases.append(bytes(b))
+            for payload in cases:
+                try:
+                    dec(payload)
+                except ValueError:
+                    pass  # the contract
+                # anything else propagates and fails the test, naming `name`
+                except Exception as e:  # pragma: no cover - diagnostic
+                    raise AssertionError(
+                        f"{name} decoder broke the ValueError contract: "
+                        f"{type(e).__name__}: {e}"
+                    ) from e
+
+    @given(
+        h=st.integers(1, 12),
+        w=st.integers(1, 12),
+        seed=st.integers(0, 2**31 - 1),
+        filter_type=st.integers(0, 4),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_image_roundtrips(self, h, w, seed, filter_type):
+        from geowave_spark.functions.imagecodec import (
+            bmp_bytes,
+            bmp_decode,
+            png_bytes,
+            png_decode,
+            ppm_bytes,
+            ppm_decode,
+        )
+
+        rgb = np.random.RandomState(seed).randint(0, 256, (h, w, 3), dtype=np.uint8)
+        assert (bmp_decode(bmp_bytes(rgb)) == rgb).all()
+        assert (ppm_decode(ppm_bytes(rgb)) == rgb).all()
+        assert (png_decode(png_bytes(rgb, filter_type=filter_type)) == rgb).all()
+
+    @given(
+        h=st.integers(1, 20),
+        w=st.integers(1, 20),
+        r=st.integers(0, 255),
+        g=st.integers(0, 255),
+        b=st.integers(0, 255),
+        subsample=st.sampled_from(["444", "420"]),
+        quality=st.integers(85, 100),
+    )
+    @settings(max_examples=60, deadline=None)
+    def test_jpeg_flat_color_law(self, h, w, r, g, b, subsample, quality):
+        """A flat-color image quantizes to DC-only blocks, so the
+        reconstruction error is bounded by the DC quantizer alone:
+        q_dc/16 in luma plus up to 1.772x the chroma DC error through the
+        inverse color transform — ≤ 1 grey level for ANY color at
+        quality >= 85, any dimensions (incl. non-multiple-of-MCU), any
+        subsampling.  (Exactness for every color is NOT a theorem — a
+        channel landing on a .5 rounding boundary can flip by one; the
+        deterministic test pins exact round-trips for representative
+        colors at q90.)"""
+        from geowave_spark.functions.jpegcodec import jpeg_bytes, jpeg_decode
+
+        img = np.full((h, w, 3), (r, g, b), np.uint8)
+        out = jpeg_decode(jpeg_bytes(img, quality=quality, subsample=subsample))
+        assert out.shape == img.shape
+        assert np.abs(out.astype(int) - img.astype(int)).max() <= 1
+
+    @given(
+        h=st.integers(1, 16),
+        w=st.integers(1, 16),
+        seed=st.integers(0, 2**31 - 1),
+        subsample=st.sampled_from(["444", "420"]),
+        restart=st.integers(0, 3),
+    )
+    @settings(max_examples=40, deadline=None)
+    def test_jpeg_structural_laws(self, h, w, seed, subsample, restart):
+        """For arbitrary content: shape/dtype preserved, decode is
+        deterministic, restart markers never change pixels, and the luma
+        plane stays within a lossy bound at quality 90 (chroma is
+        legitimately destroyed by 4:2:0 on noise)."""
+        from geowave_spark.functions.jpegcodec import jpeg_bytes, jpeg_decode
+
+        img = np.random.RandomState(seed).randint(0, 256, (h, w, 3), np.uint8)
+        buf = jpeg_bytes(img, quality=90, subsample=subsample, restart_interval=restart)
+        out = jpeg_decode(buf)
+        assert out.shape == img.shape and out.dtype == np.uint8
+        assert (jpeg_decode(buf) == out).all()
+        plain = jpeg_decode(jpeg_bytes(img, quality=90, subsample=subsample))
+        assert (out == plain).all()
+        prog = jpeg_decode(
+            jpeg_bytes(
+                img,
+                quality=90,
+                subsample=subsample,
+                restart_interval=restart,
+                progressive=True,
+            )
+        )
+        assert (prog == out).all()  # SOF2 scans carry identical coefficients
+
+        def luma(x):
+            return 0.299 * x[:, :, 0] + 0.587 * x[:, :, 1] + 0.114 * x[:, :, 2]
+
+        err = np.abs(luma(out.astype(np.float64)) - luma(img.astype(np.float64)))
+        assert err.max() <= 40.0  # q90 luma worst-case on noise; typical ~10
+
+
+
 # cell size 0.5: the k/2 grid puts points exactly on cell edges, including
 # negative ones, where floor() is the easiest to get wrong
 _COORD = st.one_of(
