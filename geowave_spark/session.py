@@ -7,6 +7,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def tungsten_page_kib(heap: str) -> int:
+    """Page size (KiB) for Tungsten's on-heap sort and hash-aggregate
+    memory, given the JVM heap size string (``"8g"``, ``"4096m"``).
+
+    Left alone, Spark sizes pages up to 64 MB, and G1 allocates any array
+    over half a heap region (regions are heap/2048, rounded down to a power
+    of two: 4 MB at 8 GB) as a humongous object straight into the old
+    generation.  Every sort or aggregate then allocated one: a run of
+    small indexed queries (30k points, 8 GB heap) held 200-340 MB of such
+    pages in the old generation, whether G1 doubled the heap depended on GC
+    timing, and the driver's RSS ranged 0.9-1.8 GB between runs of the
+    same work.  heap/8192 stays under half a region (regions stop growing
+    at 32 MB, so pages stop at 8 MB), so pages are ordinary young objects,
+    and Spark's 8,192-entry per-task page table still reaches the whole of
+    a heap up to 64 GB."""
+    units = {"k": 1, "m": 1024, "g": 1024**2, "t": 1024**3}
+    s = heap.strip().lower().removesuffix("b")
+    kib = float(s[:-1]) * units[s[-1]] if s[-1] in units else float(s) * 1024
+    return min(8 * 1024, int(kib) // 8192)
+
+
 def get_spark(
     app_name: str = "geowave-spark",
     master: str | None = None,
@@ -33,6 +54,7 @@ def get_spark(
     if shuffle_partitions is None:
         n = cpus if cpus != "*" else os.cpu_count() or 8
         shuffle_partitions = max(int(n), 8)
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", f"{min(24, max(8, int(shuffle_partitions)))}g")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -47,10 +69,8 @@ def get_spark(
         # sized ~2 GB/core so 32 concurrent tasks' Arrow batches + shuffle
         # buffers never force GC thrash (measured: string-heavy UDF stages
         # collapse 6x under an 8g heap at 32 threads)
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", f"{min(24, max(8, int(shuffle_partitions)))}g"),
-        )
+        .config("spark.driver.memory", memory)
+        .config("spark.buffer.pageSize", f"{tungsten_page_kib(memory)}k")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
