@@ -27,7 +27,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-GEO_DATA_ROOT = Path(os.environ.get("GEOWAVE_SPARK_DATA", "/root/repo/data/geo"))
+GEO_DATA_ROOT = Path(
+    os.environ.get("GEOWAVE_SPARK_DATA", Path(__file__).resolve().parents[1] / "data" / "geo")
+)
 
 SCALES = {
     "sf0.001": dict(docs=1_000, points=2_000, tracks=200, zones=24, seed=42),

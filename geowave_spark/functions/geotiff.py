@@ -177,7 +177,7 @@ def _packbits_decode(data: bytes, expected: int) -> bytes:
 
 
 def _packbits_encode(row: bytes) -> bytes:
-    """Per-row PackBits (the spec's recommended scope)."""
+    """PackBits-encode one row (TIFF 6.0 §9 packs each row separately)."""
     out = bytearray()
     i, n = 0, len(row)
     while i < n:
@@ -427,9 +427,10 @@ def geotiff_bytes(
         rows = grid[y0 : y0 + rows_per_strip]
         if predictor:
             rows = _diff16(rows)
-        chunk = rows.astype(byteorder + "i2").tobytes()
+        rows = rows.astype(byteorder + "i2")
+        chunk = rows.tobytes()
         if compression == "packbits":
-            strips.append(_packbits_encode(chunk))
+            strips.append(b"".join(_packbits_encode(r.tobytes()) for r in rows))
         elif compression == "lzw":
             strips.append(_tiff_lzw_encode(chunk))
         elif compression == "deflate":

@@ -1,8 +1,7 @@
 """Dependency-free GIF (87a/89a) codec in pure Python/numpy.
 
-De-stubs the GIF branch of :func:`geowave_spark.functions.imagecodec.decode_image`:
 GIF's only compression is LZW over palette indices (documented in the
-GIF89a specification), so — like BMP/PPM/PNG — it needs no image library.
+GIF89a specification), so it needs no image library.
 
 Decode supports the format as real files use it: global and local color
 tables, interlaced and sequential images, the graphic-control transparency
@@ -11,8 +10,8 @@ color — the decode contract is payload pixels as an RGB array, not
 animation compositing), frames smaller than the logical screen (placed at
 their descriptor offset on a background-filled canvas, so the returned
 dims are always the file's nominal dims), and either spec version string.
-Animated files decode their FIRST image descriptor (the still contract
-:func:`decode_image` promises); later frames are ignored.
+Animated files decode their FIRST image descriptor in :func:`gif_decode`;
+later frames are ignored (:func:`gif_frames` returns them all).
 
 The encoder exists to synthesize fixtures and as an export path (the same
 role the shapefile writer plays): a real variable-width LZW compressor over

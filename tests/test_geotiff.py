@@ -167,6 +167,68 @@ def test_predictor_wraps_mod_2_16():
         assert np.array_equal(g2, g.astype(np.int32))
 
 
+def test_lzw_dictionary_reset_roundtrip():
+    """A 14,400-byte random strip needs more than 4,094 LZW codes, so the
+    ClearCode reset and the 10/11/12-bit early-change boundaries all fire."""
+    g = np.random.RandomState(3).randint(-32768, 32768, (80, 90)).astype(np.int16)
+    buf = G.geotiff_bytes(g, (0.0, 0.0, 1.0, 1.0), compression="lzw", rows_per_strip=80)
+    g2, _, _ = G.geotiff_decode(buf)
+    assert np.array_equal(g2, g.astype(np.int32))
+
+
+def test_packbits_compresses_runs():
+    flat = np.full((16, 32), 257, np.int16)  # both bytes 0x01: one run per row
+    plain = G.geotiff_bytes(flat, (0.0, 0.0, 1.0, 1.0))
+    packed = G.geotiff_bytes(flat, (0.0, 0.0, 1.0, 1.0), compression="packbits")
+    assert len(packed) < len(plain) / 3
+    assert np.array_equal(G.geotiff_decode(packed)[0], flat.astype(np.int32))
+
+
+def test_compression_actually_compresses():
+    smooth = np.round(
+        128 + 60 * np.sin(np.arange(64) / 5.0)[None, :] + np.zeros((48, 64))
+    ).astype(np.int16)
+    bounds = (0.0, 0.0, 1.0, 1.0)
+    plain = len(G.geotiff_bytes(smooth, bounds))
+    for comp in ("lzw", "deflate"):
+        assert len(G.geotiff_bytes(smooth, bounds, compression=comp, predictor=True)) < plain
+
+
+def _packbits_rows(strip: bytes, row_len: int) -> list[bytes]:
+    """Decode a PackBits strip one row at a time; fails if a run or a
+    literal crosses a row end."""
+    rows, out, i = [], bytearray(), 0
+    while i < len(strip):
+        n = strip[i]
+        if n < 128:
+            out += strip[i + 1 : i + n + 2]
+            i += n + 2
+        elif n > 128:
+            out += strip[i + 1 : i + 2] * (257 - n)
+            i += 2
+        else:
+            i += 1
+        assert len(out) <= row_len, f"row {len(rows)}: a run crosses the row end"
+        if len(out) == row_len:
+            rows.append(bytes(out))
+            out = bytearray()
+    assert not out, "strip ends inside a row"
+    return rows
+
+
+def test_packbits_packs_each_row_separately():
+    """TIFF 6.0 §9: each row is packed separately, so every row of a
+    multi-row strip decodes alone to exactly its own bytes."""
+    g = np.zeros((6, 5), np.int16)
+    g[2] = _grid(1, 5)[0]
+    g[4, :3] = 7
+    buf = G.geotiff_bytes(g, (0.0, 0.0, 1.0, 1.0), compression="packbits", rows_per_strip=6)
+    tags = G._read_entries(buf, "<")
+    (off,), (count,) = tags[G._STRIP_OFFSETS], tags[G._STRIP_COUNTS]
+    rows = _packbits_rows(buf[off : off + count], row_len=5 * 2)
+    assert rows == [r.tobytes() for r in g.astype("<i2")]
+
+
 def test_ingest_reproduces_parquet_coverages(spark):
     """The Spark GeoTIFF ingest emits coverage rows byte-identical to the
     parquet source it was encoded from — every field, every pixel."""

@@ -91,3 +91,16 @@ def test_every_in_package_import_resolves():
                     missing.append(f"{where}: {mod} defines no {name}")
     assert checked > 100
     assert not missing, "\n".join(missing)
+
+
+def test_no_source_names_the_checkout_path():
+    """Paths to the repo's own files derive from ``__file__``, so a second
+    checkout reads and writes its own ``data/`` rather than this one's."""
+    root = str(REPO)
+    hits = [
+        f"{path.relative_to(REPO)}:{i}"
+        for path in _sources()
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if root in line
+    ]
+    assert not hits, "\n".join(hits)

@@ -727,14 +727,14 @@ class TestGeohash:
         h4 = geohash_encode(lon, lat, 4)
         assert all(a[:4] == b for a, b in zip(h7, h4))
 
-    def test_spark_expr_equals_numpy(self, spark):
+    def test_spark_expr_equals_numpy(self, spark, geo001):
         import numpy as np
         from pyspark.sql import functions as F
 
         from geowave_spark.operators.indexing import with_geohash
         from geowave_spark.sfc.geohash import geohash_encode
 
-        pts = spark.read.parquet("/root/repo/data/geo/sf0.001/points.parquet")
+        pts = spark.read.parquet(str(geo001 / "points.parquet"))
         rows = (
             with_geohash(pts, precision=6)
             .select("fid", "lon", "lat", "geohash")

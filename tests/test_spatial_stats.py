@@ -428,11 +428,12 @@ class TestHausdorffJoin:
         assert hausdorff_join(self._tracks_df(spark, rows), 0.1).count() == 0
 
     def test_matches_bruteforce_on_fixture_sample(self, spark):
+        from geowave_spark.datagen import ensure_geo_tables
         from geowave_spark.geometry.wkt import parse_wkt
         from geowave_spark.operators.trajectory import hausdorff_join
 
         tracks = (
-            spark.read.parquet("/root/repo/data/geo/sf0.01/tracks.parquet")
+            spark.read.parquet(str(ensure_geo_tables("sf0.01") / "tracks.parquet"))
             .filter("fid < 'tr_0000200'")
             .select("fid", "geom_wkt")
         )
@@ -510,10 +511,10 @@ class TestKnoxTest:
         assert (r2.space_pairs, r2.time_pairs, r2.st_pairs) == (0, 0, 0)
         assert r2.knox_ppm is None
 
-    def test_matches_bruteforce_on_fixture(self, spark):
+    def test_matches_bruteforce_on_fixture(self, spark, geo001):
         from geowave_spark.operators.hotspot import knox_test
 
-        pts = spark.read.parquet("/root/repo/data/geo/sf0.001/points.parquet")
+        pts = spark.read.parquet(str(geo001 / "points.parquet"))
         rows = pts.select("lon", "lat", "event_ts").collect()
         d, tau = 0.8, 5 * 86_400_000
         evs = [(r.lon, r.lat, int(r.event_ts.timestamp() * 1000)) for r in rows]

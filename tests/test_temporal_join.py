@@ -132,11 +132,11 @@ class TestStaypoints:
         with _pytest.raises(ValueError):
             staypoints(df, min_run=1)
 
-    def test_radius_monotone(self, spark):
+    def test_radius_monotone(self, spark, geo001):
         """Anchors grow monotonically with the radius (set inclusion)."""
         from geowave_spark.operators.trajectory import staypoints
 
-        tracks = spark.read.parquet("/root/repo/data/geo/sf0.001/tracks.parquet")
+        tracks = spark.read.parquet(str(geo001 / "tracks.parquet"))
         small = {
             (r.fid, r.anchor_idx)
             for r in staypoints(tracks, radius_deg=0.05).collect()
