@@ -493,9 +493,9 @@ def op_nn(a) -> int:
             F.col(id_col).alias("qid"),
             F.col("lon").alias("qlon"), F.col("lat").alias("qlat"),
         )
-        pairs = distance_join(
-            left, pts, a.distance, right_id_col=id_col, right_cell_col="cell"
-        ).filter(F.col("qid") != F.col(id_col))
+        pairs = distance_join(left, pts, a.distance, right_id_col=id_col).filter(
+            F.col("qid") != F.col(id_col)
+        )
         pairs.write.mode("overwrite").parquet(a.output)
     finally:
         pts.unpersist()

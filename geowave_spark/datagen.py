@@ -20,6 +20,7 @@ of query outputs is stable across engines):
 
 from __future__ import annotations
 
+import hashlib
 import os
 from pathlib import Path
 
@@ -30,6 +31,8 @@ import pyarrow.parquet as pq
 GEO_DATA_ROOT = Path(
     os.environ.get("GEOWAVE_SPARK_DATA", Path(__file__).resolve().parents[1] / "data" / "geo")
 )
+
+_GENERATOR = Path(__file__)
 
 SCALES = {
     "sf0.001": dict(docs=1_000, points=2_000, tracks=200, zones=24, seed=42),
@@ -374,30 +377,54 @@ def _gen_coverages(rng: np.random.RandomState, n: int) -> pa.Table:
     )
 
 
+def _fingerprint(*inputs) -> str:
+    """Hash of what a fixture is generated from: source files (``Path``)
+    and parameter values.  ``_MANIFEST`` records one per fixture, and a
+    fixture whose recorded fingerprint differs is regenerated, so an edit to
+    a generator or to a codec it calls never leaves stale files behind."""
+    h = hashlib.sha256()
+    for x in inputs:
+        h.update(x.read_bytes() if isinstance(x, Path) else repr(x).encode())
+    return h.hexdigest()[:16]
+
+
+def _manifest(out: Path) -> dict[str, str]:
+    f = out / "_MANIFEST"
+    lines = f.read_text().splitlines() if f.exists() else []
+    return dict(line.split("=", 1) for line in lines if "=" in line)
+
+
+def _stamp(out: Path, fixture: str, fp: str) -> None:
+    entries = {**_manifest(out), fixture: fp}
+    (out / "_MANIFEST").write_text("".join(f"{k}={v}\n" for k, v in entries.items()))
+
+
 def ensure_coverages(sf: str, root: Path | None = None) -> Path:
-    """Generate (once) the raster coverage fixture for a scale factor.
-    Separate seed stream + marker so existing fixture dirs stay byte-stable."""
+    """Generate (once per generator fingerprint) the raster coverage fixture
+    for a scale factor, from its own seed stream."""
     out = ensure_geo_tables(sf, root)
-    f = out / "coverages.parquet"
-    if not f.exists():
-        rng = np.random.RandomState(777)
-        pq.write_table(_gen_coverages(rng, COVERAGE_COUNTS.get(sf, 12)), f)
+    n = COVERAGE_COUNTS.get(sf, 12)
+    fp = _fingerprint(_GENERATOR, n)
+    if _manifest(out).get("coverages") != fp:
+        pq.write_table(_gen_coverages(np.random.RandomState(777), n), out / "coverages.parquet")
+        _stamp(out, "coverages", fp)
     return out
 
 
 def ensure_geotiffs(sf: str, root: Path | None = None) -> Path:
-    """Generate (once) the GeoTIFF binary fixture: the SAME coverages as
+    """Generate (once per fingerprint of the coverages and the encoder) the
+    GeoTIFF binary fixture: the SAME coverages as
     :func:`ensure_coverages`, each round-tripped through a real
     georeferenced single-band TIFF encoding (functions/geotiff.py) with a
     deterministic rotation of compression (none/PackBits/LZW/Deflate ±
     predictor), georeferencing encoding (Tiepoint+PixelScale vs
     ModelTransformation) and byte order — so the GeoTIFF ingest path can be
     pinned byte-identical against the parquet source."""
-    from geowave_spark.functions.geotiff import geotiff_bytes
+    from geowave_spark.functions import geotiff
 
     out = ensure_coverages(sf, root)
-    f = out / "geotiffs.parquet"
-    if not f.exists():
+    fp = _fingerprint(_manifest(out)["coverages"], Path(geotiff.__file__))
+    if _manifest(out).get("geotiffs") != fp:
         cov = pq.read_table(out / "coverages.parquet")
         rows = cov.to_pylist()
         comps = [
@@ -416,7 +443,7 @@ def ensure_geotiffs(sf: str, root: Path | None = None) -> Path:
             )
             comp, pred = comps[i % len(comps)]
             blobs.append(
-                geotiff_bytes(
+                geotiff.geotiff_bytes(
                     grid,
                     (r["minx"], r["miny"], r["maxx"], r["maxy"]),
                     compression=comp,
@@ -428,8 +455,10 @@ def ensure_geotiffs(sf: str, root: Path | None = None) -> Path:
             )
             ids.append(r["coverage_id"])
         pq.write_table(
-            pa.table({"coverage_id": ids, "media": pa.array(blobs, pa.binary())}), f
+            pa.table({"coverage_id": ids, "media": pa.array(blobs, pa.binary())}),
+            out / "geotiffs.parquet",
         )
+        _stamp(out, "geotiffs", fp)
     return out
 
 
@@ -448,10 +477,12 @@ def ensure_stanag4676(sf: str, root: Path | None = None) -> Path:
     """
     out = ensure_geo_tables(sf, root)
     d = out / "stanag4676"
-    marker = d / "_MANIFEST"
-    if marker.exists():
+    fp = _manifest(out)["tables"]  # derived from tracks.parquet alone
+    if _manifest(out).get("stanag4676") == fp:
         return out
     d.mkdir(parents=True, exist_ok=True)
+    for f in d.iterdir():
+        f.unlink()
     tracks = pq.read_table(out / "tracks.parquet").to_pylist()
     per_file = 20
     for fi in range(0, len(tracks), per_file):
@@ -510,18 +541,19 @@ def ensure_stanag4676(sf: str, root: Path | None = None) -> Path:
             parts.append("  </tracks>")
         parts.append("</TrackMessage>")
         (d / f"msg_{fi // per_file:05d}.xml").write_text("\n".join(parts))
-    marker.write_text(f"tracks={len(tracks)} per_file={per_file}\n")
+    _stamp(out, "stanag4676", fp)
     return out
 
 
 def ensure_geo_tables(sf: str, root: Path | None = None) -> Path:
-    """Generate (once) and return the fixture dir for a scale factor."""
+    """Generate (once per generator fingerprint) and return the fixture dir
+    for a scale factor."""
     root = Path(root) if root else GEO_DATA_ROOT
     out = root / sf
-    marker = out / "_MANIFEST"
-    if marker.exists():
-        return out
     cfg = SCALES[sf]
+    fp = _fingerprint(_GENERATOR, cfg)
+    if _manifest(out).get("tables") == fp:
+        return out
     out.mkdir(parents=True, exist_ok=True)
     rng = np.random.RandomState(cfg["seed"])
     pq.write_table(_gen_points(rng, cfg["points"]), out / "points.parquet")
@@ -531,7 +563,8 @@ def ensure_geo_tables(sf: str, root: Path | None = None) -> Path:
     pq.write_table(halfplanes, out / "zone_halfplanes.parquet")
     pq.write_table(_gen_docs(rng, cfg["docs"]), out / "docs.parquet")
     pq.write_table(_gen_query_filters(rng), out / "query_filters.parquet")
-    marker.write_text("\n".join(f"{k}={v}" for k, v in cfg.items()) + "\n")
+    # a fresh manifest: every fixture derived from these tables restamps
+    (out / "_MANIFEST").write_text(f"tables={fp}\n")
     return out
 
 

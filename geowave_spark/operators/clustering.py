@@ -12,9 +12,9 @@ Mirrors the reference analytics suite re-expressed as DataFrame loops:
   the reference J1-partitions by cell, clusters locally with a minOwners
   density rule, then iteratively merges cross-cell clusters across job
   rounds (`DBScanIterationsJobRunner`).  Here: the epsilon-neighbor edge set
-  comes from the same cell-bucketed self-join (each pair meets in exactly
-  one cell — the finer-grid dedup trick), core points by degree, and the
-  cross-cell merge is min-label propagation over core-core edges with a
+  is the cell-bucketed self-join `knn.distance_join` (each ordered pair is
+  found once), core points by degree, and the cross-cell merge is
+  min-label propagation over core-core edges with a
   pointer-jumping step each round (every node also adopts its current
   label's label), so rounds are logarithmic in cluster hop diameter rather
   than linear; non-convergence within ``max_rounds`` raises instead of
@@ -32,10 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geowave_spark.plans.lineage import truncate_plan
-from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig
 
-from .indexing import cell_at_tier, with_point_cells
-from .knn import expansion_cells_udf, tier_for_distance
+from .knn import distance_join
 from .neighborhood import SPACE_TIME, neighbor_join
 
 
@@ -261,45 +259,6 @@ def kmeans_jump(
     return best_k, js
 
 
-def _eps_edges(
-    points: DataFrame,
-    eps: float,
-    id_col: str,
-    lon_col: str,
-    lat_col: str,
-    cfg: SpatialConfig,
-) -> DataFrame:
-    """Symmetric epsilon-neighborhood edges (a != b) via the cell-bucketed
-    self-join: left side explodes to expansion cells of its eps-ball, right
-    side sits in its single home cell -> each (a, b) pair meets exactly once,
-    no dedup shuffle (J1 pair-uniqueness invariant)."""
-    bits = tier_for_distance(eps, cfg, margin_bits=2)
-    pts = with_point_cells(points.select(id_col, lon_col, lat_col), lon_col, lat_col, cfg, cell_col="_pc")
-    home = pts.withColumn("_cell", F.coalesce(cell_at_tier(F.col("_pc"), cfg.finest, bits), F.lit(-1)))
-    left = (
-        pts.withColumn(
-            "_cell", F.explode(expansion_cells_udf(eps, bits, cfg)(F.col(lon_col), F.col(lat_col)))
-        )
-        .select(
-            F.col(id_col).alias("a"),
-            F.col(lon_col).alias("ax"),
-            F.col(lat_col).alias("ay"),
-            "_cell",
-        )
-    )
-    right = home.select(
-        F.col(id_col).alias("b"), F.col(lon_col).alias("bx"), F.col(lat_col).alias("by"), "_cell"
-    )
-    d2 = (F.col("ax") - F.col("bx")) ** 2 + (F.col("ay") - F.col("by")) ** 2
-    return (
-        left.join(right, "_cell")
-        .filter(F.col("a") != F.col("b"))
-        .withColumn("d2", d2)
-        .filter(F.col("d2") <= eps * eps)
-        .select("a", "b")
-    )
-
-
 def dbscan(
     points: DataFrame,
     eps: float,
@@ -307,7 +266,6 @@ def dbscan(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
     max_rounds: int = 30,
     checkpointer=None,
 ) -> DataFrame:
@@ -318,7 +276,21 @@ def dbscan(
     (standard DBSCAN).  Label propagation runs over core-core edges only;
     border points attach to their minimum core neighbor's final label.
     """
-    edges = _eps_edges(points, eps, id_col, lon_col, lat_col, cfg)
+    def side(s: str) -> DataFrame:
+        return points.select(
+            F.col(id_col).alias(s), F.col(lon_col).alias(s + "x"), F.col(lat_col).alias(s + "y")
+        )
+
+    # the epsilon-neighborhood self-join: both directions of every pair
+    edges = (
+        distance_join(
+            side("a"), side("b"), eps,
+            left_id_col="a", left_lon_col="ax", left_lat_col="ay",
+            right_id_col="b", right_lon_col="bx", right_lat_col="by",
+        )
+        .filter(F.col("a") != F.col("b"))
+        .select("a", "b")
+    )
     return _cluster_from_edges(
         edges, min_pts, id_col, max_rounds, checkpointer=checkpointer
     )

@@ -1,77 +1,182 @@
-"""Distance-bounded kNN join (J2) + broadcast centroid kNN (J3).
+"""Distance-bounded kNN join (J2) and the epsilon-neighborhood join.
 
 Mirrors the reference's NN pipeline: the partitioner inflates each query
 point's bbox by the search distance and emits primary + expansion cells
 (`AbstractPartitioner.java:78-127`; grid resolution chosen from the distance,
-`:241-280` — bits such that cell size >= 2d), pairs are compared within cells
-(`NNMapReduce.java:119-291`), and neighbor lists are distance-bounded top-k
-(`NNProcessor.java`, `AnalyticRecipes.addToTopN`).  As in the reference, kNN
-is distance-bounded: d is fixed a priori; the k-th neighbor beyond d is not
-returned (SURVEY.md J2).
+`:241-280`), pairs are compared within cells (`NNMapReduce.java:119-291`),
+and neighbor lists are distance-bounded top-k (`NNProcessor.java`,
+`AnalyticRecipes.addToTopN`).  As in the reference, kNN is distance-bounded:
+d is fixed a priori; the k-th neighbor beyond d is not returned (SURVEY.md
+J2).
 
-Spark shape: the small query side explodes to expansion cells at the
-distance-derived tier and is broadcast; the big point side derives its
-ancestor cell with a bit shift (never exploded, never re-encoded).  Exact
-distances + per-query top-k via a window.  Deterministic tie-break on
-(distance, fid) so results are reproducible and oracle-comparable.
+Spark shape: every join here is one :func:`~.neighborhood.neighbor_join`.
+Both sides get integer cell keys computed in Catalyst, the query side is
+copied once per cell offset that can hold a partner within d and is
+broadcast, and an exact distance filter refines the candidates.  The three
+metrics differ only in their grid:
+
+- planar degrees: ``floor(coord / cell)`` with ``cell`` just over d/2, so a
+  partner is at most two cells away per axis (the 5x5 block);
+- hexagonal: axial hex bins (``with_hex_bins``) with the kRing offsets that
+  ``rings_for_distance`` proves cover the d-ball;
+- great circle: the floor of the unit vector ``(cos φ cos λ, cos φ sin λ,
+  sin φ)`` over a cell just over the chord of R, so a partner is at most
+  one cell away per axis (the 3x3x3 block).  The sphere has no edges, so
+  poles and the antimeridian need no special case.
+
+Per-query top-k is a window ordered by (distance, id), so results are
+reproducible and oracle-comparable.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import math
+from collections.abc import Callable
+from itertools import product
+from typing import NamedTuple
 
-from geowave_spark.plans.lineage import truncate_plan
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig
+from geowave_spark.functions.distance import EARTH_RADIUS_KM, haversine_km
+from geowave_spark.plans.lineage import truncate_plan
 
-from .indexing import cell_at_tier, with_point_cells
+from .neighborhood import SPACE_TIME, neighbor_join
 
-
-def tier_for_distance(
-    distance_deg: float, cfg: SpatialConfig = DEFAULT_CONFIG, margin_bits: int = 0
-) -> int:
-    """Finest defined tier whose cell size >= 2*distance (the reference's
-    partitioner grid rule, AbstractPartitioner.java:241-280: bits =
-    log2(range / (2d))).
-
-    ``margin_bits`` tightens the grid beyond the reference rule: each extra
-    bit halves the cell size, shrinking the candidate set ~4x at the cost of
-    more (still few) probe cells per query — worth it whenever the data is
-    denser than one candidate page per 2d-cell (hot clusters)."""
-    bits = int(np.floor(np.log2(360.0 / max(2.0 * distance_deg, 1e-12)))) + margin_bits
-    usable = [t for t in cfg.tiers if 0 < t <= bits]
-    return max(usable) if usable else min(t for t in cfg.tiers if t > 0)
+SALT_BUCKETS = 16  # partial top-k buckets per query (see _top_k)
+MAX_BROADCAST_QUERIES = 50_000  # above this the query side shuffles instead
+START_FRACTION = 1.0 / 8.0  # first adaptive round's radius, as a share of d
+EXPANSION = 8.0  # radius growth per adaptive round
 
 
-def _split_rows(rows: np.ndarray, keys: np.ndarray, n: int) -> pd.Series:
-    """Exploded (row, key) pairs (row-sorted) -> Series of per-row key lists."""
-    counts = np.bincount(rows, minlength=n)
-    return pd.Series([s.tolist() for s in np.split(keys, np.cumsum(counts)[:-1])])
+class _Grid(NamedTuple):
+    """A metric's candidate stage: ``keys(df, lon, lat)`` adds the integer
+    cell keys ``_k0.._kn``, ``offsets`` are the key deltas that can hold a
+    partner within ``bound``, and ``dist(lon, lat, qlon, qlat)`` is the
+    exact distance written to column ``name``."""
+
+    keys: Callable[[DataFrame, str, str], DataFrame]
+    offsets: tuple[tuple[int, ...], ...]
+    dist: Callable[[Column, Column, Column, Column], Column]
+    bound: float
+    name: str
 
 
-def expansion_cells_udf(distance_deg: float, bits: int, cfg: SpatialConfig = DEFAULT_CONFIG):
-    """pandas UDF: query point -> primary + ring expansion cells (its bbox
-    inflated by the search distance, covered at the distance tier).  The
-    whole Arrow batch covers in one vectorized pass
-    (:func:`~geowave_spark.sfc.cells_covering_bboxes`) — no per-row Python."""
+def _floor_keys(df: DataFrame, coords: list[Column], cell: float) -> DataFrame:
+    return df.withColumns({f"_k{i}": F.floor(c / F.lit(cell)) for i, c in enumerate(coords)})
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cells(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from geowave_spark.sfc import cells_covering_bboxes
 
-        x = lon.to_numpy(np.float64)
-        y = lat.to_numpy(np.float64)
-        rows, keys = cells_covering_bboxes(
-            x - distance_deg, y - distance_deg, x + distance_deg, y + distance_deg, bits, cfg
-        )
-        return _split_rows(rows, keys, len(x))
+def _positive(d: float) -> float:
+    if not d > 0:
+        raise ValueError(f"max distance must be positive, got {d!r}")
+    return d
 
-    return _cells
+
+def _dist_sq(lon: Column, lat: Column, qlon: Column, qlat: Column) -> Column:
+    dx, dy = lon - qlon, lat - qlat
+    return dx * dx + dy * dy
+
+
+def _square(d: float) -> _Grid:
+    """Planar degrees: cells a hair over d/2 keep every partner within two
+    cells per axis, so the 5x5 block is complete (the margin absorbs the
+    rounding of the division and of the squared-distance refine)."""
+    cell = _positive(d) / 2.0 * (1.0 + 1e-9)
+    return _Grid(
+        lambda df, x, y: _floor_keys(df, [F.col(x), F.col(y)], cell),
+        tuple(product(range(-2, 3), repeat=2)),
+        _dist_sq,
+        d * d,
+        "dist_sq",
+    )
+
+
+def _hex(d: float) -> _Grid:
+    """Hex cells at the finest resolution whose kRing stays <= 128 cells:
+    finer cells shrink the candidate disc (toward ~1.33x the ball area)
+    while the exploded query side stays small."""
+    from geowave_spark.sfc.hexgrid import MAX_HEX_RES, kring_offsets, rings_for_distance
+
+    from .indexing import with_hex_bins
+
+    rings = [rings_for_distance(_positive(d), res) for res in range(MAX_HEX_RES + 1)]
+    res = max([0] + [res for res, n in enumerate(rings) if 3 * n * (n + 1) + 1 <= 128])
+    return _Grid(
+        lambda df, x, y: with_hex_bins(df, x, y, res, "_k0", "_k1"),
+        tuple(kring_offsets(rings[res])),
+        _dist_sq,
+        d * d,
+        "dist_sq",
+    )
+
+
+def _sphere(km: float) -> _Grid:
+    """Great circle: two points within R km have unit vectors at most the
+    chord 2 sin(R / 2Rₑ) apart, so cells a hair over that chord keep every
+    partner within one cell per axis."""
+    half_angle = min(_positive(km) / (2.0 * EARTH_RADIUS_KM), math.pi / 2)
+    cell = 2.0 * math.sin(half_angle) * (1.0 + 1e-6)
+
+    def keys(df: DataFrame, x: str, y: str) -> DataFrame:
+        lam, phi = F.radians(F.col(x)), F.radians(F.col(y))
+        unit = [F.cos(phi) * F.cos(lam), F.cos(phi) * F.sin(lam), F.sin(phi)]
+        return _floor_keys(df, unit, cell)
+
+    return _Grid(keys, SPACE_TIME, haversine_km, km, "hav_km")
+
+
+def _broadcastable(queries: DataFrame) -> bool:
+    """Bounded limit+count: query sets defined as corpus fractions grow with
+    the corpus, so a hard-coded broadcast would break silently.  Above the
+    limit both sides shuffle on the cell keys instead."""
+    return queries.limit(MAX_BROADCAST_QUERIES + 1).count() <= MAX_BROADCAST_QUERIES
+
+
+def _pairs(
+    queries: DataFrame,
+    points: DataFrame,
+    grid: _Grid,
+    cols: tuple[str, ...],
+    broadcast: bool,
+) -> DataFrame:
+    """Every (query, point) pair within ``grid.bound``: the query side is
+    keyed, copied once per offset and joined to the keyed points
+    (:func:`neighbor_join`), then the exact distance refines.  Each point
+    has one home cell, so no pair is found twice.  Output: (qid, fid,
+    <grid.name>)."""
+    qid, qlon, qlat, fid, lon, lat = cols
+    q = grid.keys(queries.select(qid, qlon, qlat), qlon, qlat)
+    p = grid.keys(points.select(fid, lon, lat), lon, lat)
+    keys = [f"_k{i}" for i in range(len(grid.offsets[0]))]
+    dist = grid.dist(F.col(lon), F.col(lat), F.col(qlon), F.col(qlat))
+    return (
+        neighbor_join(F.broadcast(q) if broadcast else q, p, keys, grid.offsets)
+        .withColumn(grid.name, dist)
+        .filter(F.col(grid.name) <= grid.bound)
+        .select(qid, fid, grid.name)
+    )
+
+
+def _top_k(pairs: DataFrame, k: int, qid: str, fid: str, dist: str) -> DataFrame:
+    """Per-query top-k by (dist, fid), rank 1..k.
+
+    Hot clusters give some queries 10^4+ in-distance candidates, so this
+    runs in two phases: a partial top-k over (qid, hash(fid) % SALT_BUCKETS),
+    then the final top-k over the <= k*SALT_BUCKETS survivors per query.
+    That is the reference's per-cell ``upperBoundPerPartition`` bound
+    (`NNProcessor.java:69,111-116`) as bounded-depth windows; the heavy sort
+    spreads over SALT_BUCKETS partitions per query instead of one."""
+    partial = Window.partitionBy(qid, "_salt").orderBy(dist, fid)
+    final = Window.partitionBy(qid).orderBy(dist, fid)
+    return (
+        pairs.withColumn("_salt", F.pmod(F.hash(F.col(fid)), F.lit(SALT_BUCKETS)))
+        .withColumn("_prank", F.row_number().over(partial))
+        .filter(F.col("_prank") <= k)
+        .withColumn("rank", F.row_number().over(final))
+        .filter(F.col("rank") <= k)
+        .select(qid, fid, dist, "rank")
+    )
 
 
 def knn_join(
@@ -86,67 +191,15 @@ def knn_join(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-    point_cell_col: str | None = None,
-    margin_bits: int = 2,
-    salt_buckets: int = 16,
-    broadcast_queries: bool | None = None,
-    max_broadcast_queries: int = 50_000,
 ) -> DataFrame:
     """For each query point: its k nearest data points within max_distance.
 
     Output: (qid, fid, dist_sq, rank) — dist_sq is the exact squared planar
     degree distance (identical IEEE ops to the SQL oracle), rank 1..k ordered
-    by (dist_sq, fid).
-
-    Skew handling (hot clusters make some queries see 10^4+ in-distance
-    candidates): top-k runs in two phases — a salted partial top-k over
-    (qid, hash(fid) % salt_buckets), then a final top-k over the <=
-    k*salt_buckets survivors per query.  This is the reference's per-cell
-    ``upperBoundPerPartition`` bound (`NNProcessor.java:69,111-116`)
-    re-expressed as bounded-depth windows, and keeps the heavy sort spread
-    over salt_buckets x queries partitions instead of one per query.
-
-    Broadcast planning: query sets defined as corpus fractions grow with the
-    corpus, silently breaking a hard-coded broadcast.  ``broadcast_queries=
-    None`` (default) probes the query side with a bounded limit+count and
-    falls back to a cell-shuffle equi-join (both sides shuffle on the cell
-    key — the correct plan once the query side outgrows executor memory)
-    above ``max_broadcast_queries``.
-    """
-    # the candidate stage IS the epsilon-neighborhood join — one shared
-    # implementation (distance_join) serves kNN, DBSCAN edges, and the raw
-    # pair query; kNN adds only the salted two-phase top-k below
-    joined = distance_join(
-        queries,
-        points,
-        max_distance_deg,
-        left_id_col=query_id_col,
-        left_lon_col=query_lon_col,
-        left_lat_col=query_lat_col,
-        right_id_col=id_col,
-        right_lon_col=lon_col,
-        right_lat_col=lat_col,
-        cfg=cfg,
-        right_cell_col=point_cell_col,
-        margin_bits=margin_bits,
-        broadcast_left=broadcast_queries,
-        max_broadcast_left=max_broadcast_queries,
-    )
-    if salt_buckets > 1:
-        partial = Window.partitionBy(query_id_col, "_salt").orderBy("dist_sq", id_col)
-        joined = (
-            joined.withColumn("_salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_buckets)))
-            .withColumn("_prank", F.row_number().over(partial))
-            .filter(F.col("_prank") <= k)
-        )
-    w = Window.partitionBy(query_id_col).orderBy("dist_sq", id_col)
-    out = (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist_sq", "rank")
-    )
-    return out
+    by (dist_sq, fid)."""
+    cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
+    pairs = _pairs(queries, points, _square(max_distance_deg), cols, _broadcastable(queries))
+    return _top_k(pairs, k, query_id_col, id_col, "dist_sq")
 
 
 def distance_join(
@@ -160,51 +213,16 @@ def distance_join(
     right_id_col: str = "fid",
     right_lon_col: str = "lon",
     right_lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-    right_cell_col: str | None = None,
-    margin_bits: int = 2,
-    broadcast_left: bool | None = None,
-    max_broadcast_left: int = 50_000,
 ) -> DataFrame:
     """Every (left, right) pair within the planar distance — the full
     epsilon-neighborhood join (NNMapReduce's actual output before any top-k:
     `NNMapReduce.java:119-291`), of which kNN is the truncated special case
     and DBSCAN's edge set is the self-join special case.
 
-    Same cell-bucketed shape as :func:`knn_join`: the left side explodes to
-    expansion cells of its distance ball, the right side derives one
-    ancestor cell per row by bit shift; pair-uniqueness holds (one home cell
-    per right row), so no dedup shuffle.  Output: (left_id, right_id,
-    dist_sq), unbounded per left row — callers own the output-sensitivity
-    (bound the distance, not the result)."""
-    if broadcast_left is None:
-        broadcast_left = left.limit(max_broadcast_left + 1).count() <= max_broadcast_left
-    bits = tier_for_distance(max_distance_deg, cfg, margin_bits)
-    l = left.withColumn(
-        "_qcell",
-        F.explode(
-            expansion_cells_udf(max_distance_deg, bits, cfg)(
-                F.col(left_lon_col), F.col(left_lat_col)
-            )
-        ),
-    )
-    if right_cell_col is None:
-        right = with_point_cells(
-            right, right_lon_col, right_lat_col, cfg, cell_col="_pcell"
-        ).drop("tier")
-        right_cell_col = "_pcell"
-    probe = right.withColumn(
-        "_jcell", F.coalesce(cell_at_tier(F.col(right_cell_col), cfg.finest, bits), F.lit(-1))
-    )
-    dx = F.col(right_lon_col) - F.col(left_lon_col)
-    dy = F.col(right_lat_col) - F.col(left_lat_col)
-    build = F.broadcast(l) if broadcast_left else l
-    return (
-        probe.join(build, probe["_jcell"] == l["_qcell"], "inner")
-        .withColumn("dist_sq", dx * dx + dy * dy)
-        .filter(F.col("dist_sq") <= max_distance_deg * max_distance_deg)
-        .select(left_id_col, right_id_col, "dist_sq")
-    )
+    Output: (left_id, right_id, dist_sq), unbounded per left row — callers
+    own the output-sensitivity (bound the distance, not the result)."""
+    cols = (left_id_col, left_lon_col, left_lat_col, right_id_col, right_lon_col, right_lat_col)
+    return _pairs(left, right, _square(max_distance_deg), cols, _broadcastable(left))
 
 
 def knn_join_adaptive(
@@ -219,24 +237,13 @@ def knn_join_adaptive(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-    start_fraction: float = 1.0 / 8.0,
-    expansion_factor: float = 8.0,
-    max_broadcast_queries: int = 50_000,
     pipeline=None,
     pipeline_config: dict | None = None,
-    pre_encoded: bool = False,
 ) -> DataFrame:
     """Ring-expansion kNN: identical output to :func:`knn_join`, but the
-    search radius starts at ``max_distance * start_fraction`` and expands
-    geometrically, re-running only the queries that have not yet found k
+    search radius starts at ``max_distance * START_FRACTION`` and expands by
+    ``EXPANSION``, re-running only the queries that have not yet found k
     neighbors.
-
-    ``pre_encoded=True`` means ``points`` already carries the finest-tier
-    ``_pcell`` column (from :func:`with_point_cells`) and its persistence is
-    the caller's responsibility — used by the streaming wrapper so a static
-    point layer is encoded and cached ONCE across micro-batches instead of
-    re-encoded per batch.
 
     Pass a :class:`geowave_spark.plans.lineage.Pipeline` as ``pipeline`` to
     checkpoint every round durably (parquet + manifest with per-partition
@@ -260,329 +267,8 @@ def knn_join_adaptive(
     rows; round outputs are <= k*|queries| rows and are cached before the
     final union.
     """
-    # encode the big side once at the finest tier; per-round probe cells are
-    # JVM bit-shifts of the cached key
-    if pre_encoded:
-        probe = points.select(id_col, lon_col, lat_col, "_pcell")
-    else:
-        probe = with_point_cells(points, lon_col, lat_col, cfg, cell_col="_pcell").drop("tier")
-        probe = probe.select(id_col, lon_col, lat_col, "_pcell").cache()
-
-    # resolve the broadcast decision once on the full query set (rounds only
-    # shrink it, so a broadcastable start stays broadcastable)
-    bq = queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-
-    def run_round(remaining: DataFrame, radius: float) -> DataFrame:
-        return knn_join(
-            remaining,
-            probe,
-            k,
-            radius,
-            query_id_col=query_id_col,
-            query_lon_col=query_lon_col,
-            query_lat_col=query_lat_col,
-            id_col=id_col,
-            lon_col=lon_col,
-            lat_col=lat_col,
-            cfg=cfg,
-            point_cell_col="_pcell",
-            broadcast_queries=bq,
-        )
-
-    result = _adaptive_rounds(
-        run_round, queries, query_id_col, k, max_distance_deg,
-        start_fraction, expansion_factor,
-        pipeline=pipeline, pipeline_config=pipeline_config,
-    )
-    if not pre_encoded:  # a pre-encoded probe's cache belongs to the caller
-        probe.unpersist()  # round outputs are checkpointed; the big cache can go
-    return result
-
-
-def _adaptive_rounds(
-    run_round,
-    queries: DataFrame,
-    query_id_col: str,
-    k: int,
-    max_distance_deg: float,
-    start_fraction: float,
-    expansion_factor: float,
-    pipeline=None,
-    pipeline_config: dict | None = None,
-) -> DataFrame:
-    """The ring-expansion round loop shared by the square and hex kNN joins.
-
-    ``run_round(remaining, radius)`` must return the exact top-k of every
-    remaining query restricted to its radius-ball.  A query with >= k rows
-    at radius r has its TRUE top-k (everything unseen is farther than r),
-    so it retires; the rest escalate to the next radius.  Retirement is
-    executor-side (the reference's NNProcessor.java:53-120 removes
-    satisfied neighborhoods inside the task): per-query counts stay a
-    DataFrame and retire via semi/anti joins — no query ids ever cross the
-    driver, and the plan size stays O(1) per round regardless of |queries|.
-    Round outputs are localCheckpoint-ed (<= k*|queries| rows) to cut
-    lineage across rounds.
-
-    With a :class:`~geowave_spark.plans.lineage.Pipeline`, each round's RAW
-    output is instead a durable parquet stage (manifest with per-partition
-    row counters); the semi/anti retirement joins then run over the
-    read-back parquet, so a resumed run skips every completed round's join
-    work and replays only the cheap retirement bookkeeping.  The round
-    schedule is deterministic in the arguments, which is what makes the
-    stage sequence replayable.
-    """
-    radii = []
-    r = max_distance_deg * start_fraction
-    while r < max_distance_deg:
-        radii.append(r)
-        r *= expansion_factor
-    radii.append(max_distance_deg)
-
-    remaining = queries
-    chunks = []
-    for i, radius in enumerate(radii):
-        is_last = i == len(radii) - 1
-        if pipeline is not None:
-            rem = remaining  # bind loop variables for the build closure
-            out = pipeline.stage(
-                f"knn_round_{i:02d}",
-                {"round": i, "radius": radius, "k": k, **(pipeline_config or {})},
-                lambda rem=rem, radius=radius: run_round(rem, radius),
-            )
-        else:
-            # stats-resetting round barriers (plans.lineage.truncate_plan)
-            out = truncate_plan(run_round(remaining, radius))
-        if is_last:
-            chunks.append(out)
-            break
-        satisfied = (
-            out.groupBy(query_id_col)
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") >= k)
-            .select(query_id_col)
-        )
-        satisfied = truncate_plan(satisfied)
-        chunks.append(out.join(satisfied, query_id_col, "left_semi"))
-        remaining = truncate_plan(remaining.join(satisfied, query_id_col, "left_anti"))
-        if not remaining.take(1):  # scalar early-exit probe, not an id transfer
-            break
-    result = chunks[0]
-    for c in chunks[1:]:
-        result = result.unionByName(c)
-    return result
-
-
-def geodesic_expansion_cells_udf(
-    radius_km: float, bits: int, cfg: SpatialConfig = DEFAULT_CONFIG
-):
-    """pandas UDF: query point -> expansion cells of its GEODESIC ball:
-    the lat half-width is radius/111.19 km-per-degree; the lon half-width
-    divides by cos(lat) (meridians converge), clamped near the poles where
-    the ball wraps all longitudes.  Batched like :func:`expansion_cells_udf`
-    — the per-row work is the numpy where/cos, not a Python loop."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cells(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        from geowave_spark.functions.distance import KM_PER_DEG
-        from geowave_spark.sfc import cells_covering_bboxes
-
-        dlat = radius_km / KM_PER_DEG
-        x = lon.to_numpy(np.float64)
-        y = lat.to_numpy(np.float64)
-        c = np.cos(np.radians(np.minimum(np.abs(y) + dlat, 89.9999)))
-        dlon = radius_km / (KM_PER_DEG * np.maximum(c, 1e-9))
-        # a ball wrapping the pole (or all longitudes) covers every meridian
-        # explicitly — x +- 180 would wrap to a DEGENERATE range in
-        # normalize_lon_range (full circle folds onto one line), silently
-        # dropping candidates
-        wraps = (dlon >= 180.0) | (np.abs(y) + dlat >= 90.0)
-        lo = np.where(wraps, -180.0, x - dlon)
-        hi = np.where(wraps, 180.0, x + dlon)
-        rows, keys = cells_covering_bboxes(lo, y - dlat, hi, y + dlat, bits, cfg)
-        return _split_rows(rows, keys, len(x))
-
-    return _cells
-
-
-def knn_join_geodesic(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    max_distance_km: float,
-    *,
-    query_id_col: str = "qid",
-    query_lon_col: str = "qlon",
-    query_lat_col: str = "qlat",
-    id_col: str = "fid",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-    point_cell_col: str | None = None,
-    margin_bits: int = 2,
-    broadcast_queries: bool | None = None,
-    max_broadcast_queries: int = 50_000,
-) -> DataFrame:
-    """Great-circle kNN at scale: the cell-bucketed shape of :func:`knn_join`
-    with a geodesic candidate ball (lat-aware lon inflation) and an exact
-    haversine refine + top-k — replacing the broadcast-NL `knn_haversine`
-    baseline once the corpus or query set outgrows a crossJoin.  Output:
-    (qid, fid, hav_km, rank), rank ordered by (distance, id)."""
-    from geowave_spark.functions.distance import KM_PER_DEG, haversine_km
-
-    if broadcast_queries is None:
-        broadcast_queries = (
-            queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-        )
-    # grid resolution from the WORST-case degree extent of the ball (the
-    # equatorial lat width; lon widths are handled per query in the cover)
-    dist_deg = max_distance_km / KM_PER_DEG
-    bits = tier_for_distance(dist_deg, cfg, margin_bits)
-    q = queries.withColumn(
-        "_qcell",
-        F.explode(
-            geodesic_expansion_cells_udf(max_distance_km, bits, cfg)(
-                F.col(query_lon_col), F.col(query_lat_col)
-            )
-        ),
-    )
-    if point_cell_col is None:
-        points = with_point_cells(points, lon_col, lat_col, cfg, cell_col="_pcell").drop("tier")
-        point_cell_col = "_pcell"
-    probe = points.withColumn(
-        "_jcell", F.coalesce(cell_at_tier(F.col(point_cell_col), cfg.finest, bits), F.lit(-1))
-    )
-    build = F.broadcast(q) if broadcast_queries else q
-    hav = haversine_km(F.col(lon_col), F.col(lat_col), F.col(query_lon_col), F.col(query_lat_col))
-    joined = (
-        probe.join(build, probe["_jcell"] == q["_qcell"], "inner")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("hav_km", hav)
-        .filter(F.col("hav_km") <= max_distance_km)
-        .select(query_id_col, id_col, "hav_km")
-    )
-    w = Window.partitionBy(query_id_col).orderBy("hav_km", id_col)
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "hav_km", "rank")
-    )
-
-
-def knn_join_brute(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    max_distance_deg: float,
-    **kw,
-) -> DataFrame:
-    """J3 pattern: broadcast nested-loop (crossJoin) + window top-k — the
-    reference's AnalyticRecipes.findClosest/aggregateByKey(topN) shape.
-    Used as the per-cell baseline and for verifying the pruned variant."""
-    query_id_col = kw.get("query_id_col", "qid")
-    qlon = kw.get("query_lon_col", "qlon")
-    qlat = kw.get("query_lat_col", "qlat")
-    id_col = kw.get("id_col", "fid")
-    lon_col = kw.get("lon_col", "lon")
-    lat_col = kw.get("lat_col", "lat")
-    dx = F.col(lon_col) - F.col(qlon)
-    dy = F.col(lat_col) - F.col(qlat)
-    joined = (
-        points.crossJoin(F.broadcast(queries))
-        .withColumn("dist_sq", dx * dx + dy * dy)
-        .filter(F.col("dist_sq") <= max_distance_deg * max_distance_deg)
-    )
-    w = Window.partitionBy(query_id_col).orderBy("dist_sq", id_col)
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist_sq", "rank")
-    )
-
-
-def knn_join_hexring(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    max_distance_deg: float,
-    *,
-    res: int | None = None,
-    query_id_col: str = "qid",
-    query_lon_col: str = "qlon",
-    query_lat_col: str = "qlat",
-    id_col: str = "fid",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    salt_buckets: int = 16,
-    broadcast_queries: bool | None = None,
-    max_broadcast_queries: int = 50_000,
-) -> DataFrame:
-    """H3-ring-expansion kNN (the north star's named variant): the square
-    expansion grid of :func:`knn_join` swapped for hexagonal kRing cells
-    (`sfc/hexgrid.py`) — same output contract (qid, fid, dist_sq, rank),
-    same distance bound, same salted two-phase top-k.
-
-    The hex win is that kRing offsets are translation-invariant in axial
-    coordinates, so the candidate stage is 100% Catalyst: both sides bin
-    with `with_hex_bins` (pure JVM expressions), the query side expands by
-    a crossJoin with the literal |3r(r+1)+1|-row offset table (broadcast
-    nested loop over a constant), and candidates come from one hash
-    equi-join on (q, r) — no Python UDF anywhere, where the square-grid
-    path needs an Arrow UDF to cover the inflated bbox.  Hexes also cover
-    a disc with ~17% fewer cells than squares of equal area (the packing
-    argument H3 documents), shrinking the candidate set.
-
-    ``res`` defaults to the finest resolution keeping the ring table at
-    most ~100 cells; ring count guarantees full coverage of the distance
-    ball (bound + property test in sfc/hexgrid.py).
-    """
-    from geowave_spark.sfc.hexgrid import hex_size, kring_offsets, rings_for_distance
-
-    from .indexing import with_hex_bins
-
-    if res is None:
-        # finest resolution whose ring table stays <= 128 cells: finer cells
-        # shrink the candidate disc (converges to ~1.33x the ball area) while
-        # the build-side explode factor stays trivially broadcastable
-        res = 0
-        while res < 20 and 3 * (rr := rings_for_distance(max_distance_deg, res)) * (rr + 1) + 1 <= 128:
-            res += 1
-        res = max(res - 1, 0)
-    rings = rings_for_distance(max_distance_deg, res)
-    spark = queries.sparkSession
-    offsets = spark.createDataFrame(kring_offsets(rings), "dq: long, dr: long")
-
-    if broadcast_queries is None:
-        broadcast_queries = (
-            queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-        )
-    q = with_hex_bins(queries, query_lon_col, query_lat_col, res).crossJoin(
-        F.broadcast(offsets)
-    )
-    q = q.withColumn("_jq", F.col("hex_q") + F.col("dq")).withColumn(
-        "_jr", F.col("hex_r") + F.col("dr")
-    ).drop("hex_q", "hex_r", "dq", "dr")
-    p = with_hex_bins(points, lon_col, lat_col, res)
-    build = F.broadcast(q) if broadcast_queries else q
-    dx = F.col(lon_col) - F.col(query_lon_col)
-    dy = F.col(lat_col) - F.col(query_lat_col)
-    joined = (
-        p.join(build, (p["hex_q"] == q["_jq"]) & (p["hex_r"] == q["_jr"]), "inner")
-        .withColumn("dist_sq", dx * dx + dy * dy)
-        .filter(F.col("dist_sq") <= max_distance_deg * max_distance_deg)
-    )
-    if salt_buckets > 1:
-        partial = Window.partitionBy(query_id_col, "_salt").orderBy("dist_sq", id_col)
-        joined = (
-            joined.withColumn("_salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_buckets)))
-            .withColumn("_prank", F.row_number().over(partial))
-            .filter(F.col("_prank") <= k)
-        )
-    w = Window.partitionBy(query_id_col).orderBy("dist_sq", id_col)
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist_sq", "rank")
-    )
+    cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
+    return _adaptive(queries, points, k, max_distance_deg, _square, cols, pipeline, pipeline_config)
 
 
 def knn_join_hexring_adaptive(
@@ -597,61 +283,127 @@ def knn_join_hexring_adaptive(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    salt_buckets: int = 16,
-    start_fraction: float = 1.0 / 8.0,
-    expansion_factor: float = 8.0,
-    max_broadcast_queries: int = 50_000,
     pipeline=None,
     pipeline_config: dict | None = None,
 ) -> DataFrame:
-    """kRing-expansion kNN: identical output to :func:`knn_join_hexring`
-    (and to :func:`knn_join`), but the search radius starts small and
-    expands geometrically, re-running only unsatisfied queries — the hex
-    twin of :func:`knn_join_adaptive`, sharing its round loop.
+    """H3-ring-expansion kNN (the north star's named variant): the round
+    loop of :func:`knn_join_adaptive` over hexagonal kRing cells
+    (`sfc/hexgrid.py`), with the same output contract (qid, fid, dist_sq,
+    rank) and the same rows.  Hexes cover a disc with ~17% fewer cells than
+    squares of equal area (the packing argument H3 documents).
 
-    Why this exists: the fixed hexring join materializes every query's FULL
-    distance ball — over hot clusters (queries are sampled from the data,
-    so they concentrate exactly where points do) that is quadratic in
-    cluster size, measured 97 s at sf0.1 where the adaptive square join
-    ran 6 s.  Each adaptive round shrinks the covered disc to the radius
-    most queries actually need: a dense-cluster query retires at
-    max_distance/8 having scanned ~1/64th of the ball area.
+    The adaptive schedule is what makes it usable: a fixed full-ball join
+    materializes every query's whole distance ball, which over hot clusters
+    (queries are sampled from the data, so they concentrate exactly where
+    points do) is quadratic in cluster size — measured 97 s at sf0.1
+    against 6 s adaptive.  Each round re-derives the hex resolution from
+    its radius, so the cells track the shrunken disc."""
+    cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
+    return _adaptive(queries, points, k, max_distance_deg, _hex, cols, pipeline, pipeline_config)
 
-    Retirement is exact for the same reason as the square path: round r's
-    candidate cells cover the full r-ball (``rings_for_distance`` bound,
-    property-tested in tests/test_hexgrid.py), so >= k in-radius rows at
-    radius r == the true top-k.  Every round's candidate stage stays pure
-    Catalyst; the per-round res re-derives from the round radius, keeping
-    the offset table <= 128 rows while the cells track the shrunken disc.
+
+def _adaptive(
+    queries: DataFrame,
+    points: DataFrame,
+    k: int,
+    max_distance_deg: float,
+    grid_for: Callable[[float], _Grid],
+    cols: tuple[str, ...],
+    pipeline,
+    pipeline_config: dict | None,
+) -> DataFrame:
+    """The ring-expansion round loop shared by the square and hex kNN joins.
+
+    Each round runs the exact top-k of every remaining query restricted to
+    its radius-ball.  A query with >= k rows at radius r has its TRUE top-k
+    (everything unseen is farther than r), so it retires; the rest escalate
+    to the next radius.  Retirement is executor-side (the reference's
+    NNProcessor.java:53-120 removes satisfied neighborhoods inside the
+    task): per-query counts stay a DataFrame and retire via semi/anti joins
+    — no query ids ever cross the driver, and the plan size stays O(1) per
+    round regardless of |queries|.  Round outputs are localCheckpoint-ed
+    (<= k*|queries| rows) to cut lineage across rounds.
+
+    With a :class:`~geowave_spark.plans.lineage.Pipeline`, each round's RAW
+    output is instead a durable parquet stage (manifest with per-partition
+    row counters); the semi/anti retirement joins then run over the
+    read-back parquet, so a resumed run skips every completed round's join
+    work and replays only the cheap retirement bookkeeping.  The round
+    schedule is deterministic in the arguments, which is what makes the
+    stage sequence replayable.
     """
-    bq = queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-
-    # scan + project the big side once for the whole round loop (the square
-    # twin caches its encoded probe the same way); per-round res means the
-    # hex binning itself re-derives each round, but that is pure Catalyst
-    # over this cached projection instead of a fresh source scan per round
-    probe = points.select(id_col, lon_col, lat_col).cache()
+    qid, fid = cols[0], cols[3]
+    # the broadcast decision is made once on the full query set (rounds only
+    # shrink it); the big side is scanned and projected once, and each
+    # round keys it in Catalyst at that round's cell size
+    broadcast = _broadcastable(queries)
+    probe = points.select(*cols[3:]).cache()
 
     def run_round(remaining: DataFrame, radius: float) -> DataFrame:
-        return knn_join_hexring(
-            remaining,
-            probe,
-            k,
-            radius,
-            query_id_col=query_id_col,
-            query_lon_col=query_lon_col,
-            query_lat_col=query_lat_col,
-            id_col=id_col,
-            lon_col=lon_col,
-            lat_col=lat_col,
-            salt_buckets=salt_buckets,
-            broadcast_queries=bq,
-        )
+        pairs = _pairs(remaining, probe, grid_for(radius), cols, broadcast)
+        return _top_k(pairs, k, qid, fid, "dist_sq")
 
-    result = _adaptive_rounds(
-        run_round, queries, query_id_col, k, max_distance_deg,
-        start_fraction, expansion_factor,
-        pipeline=pipeline, pipeline_config=pipeline_config,
-    )
+    radii = []
+    r = max_distance_deg * START_FRACTION
+    while r < max_distance_deg:
+        radii.append(r)
+        r *= EXPANSION
+    radii.append(max_distance_deg)
+
+    remaining = queries
+    chunks = []
+    for i, radius in enumerate(radii):
+        if pipeline is not None:
+            rem = remaining  # bind loop variables for the build closure
+            out = pipeline.stage(
+                f"knn_round_{i:02d}",
+                {"round": i, "radius": radius, "k": k, **(pipeline_config or {})},
+                lambda rem=rem, radius=radius: run_round(rem, radius),
+            )
+        else:
+            # stats-resetting round barriers (plans.lineage.truncate_plan)
+            out = truncate_plan(run_round(remaining, radius))
+        if i == len(radii) - 1:
+            chunks.append(out)
+            break
+        satisfied = (
+            out.groupBy(qid)
+            .agg(F.count("*").alias("_n"))
+            .filter(F.col("_n") >= k)
+            .select(qid)
+        )
+        satisfied = truncate_plan(satisfied)
+        chunks.append(out.join(satisfied, qid, "left_semi"))
+        remaining = truncate_plan(remaining.join(satisfied, qid, "left_anti"))
+        if not remaining.take(1):  # scalar early-exit probe, not an id transfer
+            break
+    result = chunks[0]
+    for c in chunks[1:]:
+        result = result.unionByName(c)
     probe.unpersist()  # round outputs are checkpointed; the big cache can go
     return result
+
+
+def knn_join_geodesic(
+    queries: DataFrame,
+    points: DataFrame,
+    k: int,
+    max_distance_km: float,
+    *,
+    query_id_col: str = "qid",
+    query_lon_col: str = "qlon",
+    query_lat_col: str = "qlat",
+    id_col: str = "fid",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+) -> DataFrame:
+    """Great-circle kNN at scale: unit-vector cells on the sphere and an
+    exact haversine refine + top-k — replacing the broadcast-NL
+    `knn_haversine` baseline once the corpus or query set outgrows a
+    crossJoin.  A point never neighbors itself (fid == qid is dropped).
+    Output: (qid, fid, hav_km, rank), rank ordered by (distance, id)."""
+    cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
+    pairs = _pairs(
+        queries, points, _sphere(max_distance_km), cols, _broadcastable(queries)
+    ).filter(F.col(id_col) != F.col(query_id_col))
+    return _top_k(pairs, k, query_id_col, id_col, "hav_km")

@@ -1,5 +1,9 @@
 """Cell-neighborhood equi-join: the candidate stage of every grid pair join.
 
+Callers: the kNN and distance joins in ``knn.py`` (square, hex and
+geodesic kNN, ``distance_join``, and through it DBSCAN's edges), plus
+hotspot, cotravel, ST-DBSCAN, trajectory, IDW and region_label.
+
 Both sides carry integer cell keys (``floor(coord / cell)``, or a time bin).
 Two rows can only be a pair when their cells differ by a known offset, so the
 probe side is copied once per offset with its keys shifted, and one

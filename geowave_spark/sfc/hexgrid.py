@@ -11,9 +11,9 @@ hexagonal-grids reference), no H3 code.
 Differences from Uber H3, stated honestly:
 
 - **Planar, not icosahedral**: cells are pointy-top hexagons on the
-  equirectangular lon/lat plane (matching the engine's planar-degree
-  distance contract used by `knn_join`/`distance_join` and their SQL
-  oracles), not gnomonic projections of an icosahedron.  Area distortion
+  equirectangular lon/lat plane (matching the planar-degree distance
+  contract of `knn_join_hexring_adaptive` and its SQL oracle), not gnomonic
+  projections of an icosahedron.  Area distortion
   toward the poles therefore matches the primary tiered index rather than
   H3's bounded-distortion cells; the S2 cube backend is the bounded-
   distortion option.
@@ -34,7 +34,7 @@ unpackable with shifts/masks JVM-side.  23-bit fields: at MAX_HEX_RES the
 axial coords over the full lon/lat domain reach ~3.1e6 (> 2^21, < 2^22), so
 the bias must be 2^22 for res 20 to be valid everywhere.
 
-kRing coverage rule used by the kNN join: for pointy-top hexes of
+kRing coverage rule used by the hex kNN join: for pointy-top hexes of
 circumradius R, neighbouring centers are sqrt(3)*R apart and centers at
 hex-distance d are at least 1.5*d*R apart; any point lies within R of its
 cell center.  So two points within Euclidean distance D sit in cells with
@@ -154,7 +154,8 @@ def hex_distance(q1, r1, q2, r2) -> np.ndarray:
 def kring_offsets(radius: int) -> list[tuple[int, int]]:
     """All axial offsets (dq, dr) with hex-distance <= radius —
     translation-invariant (the same set serves every center), which is why
-    the ring-expansion kNN is a literal-table equi-join with zero Python.
+    the ring-expansion kNN is one ``neighbor_join`` equi-join with zero
+    Python.
     |kRing(radius)| = 3*radius*(radius+1) + 1."""
     assert radius >= 0
     out = []

@@ -309,63 +309,6 @@ def cells_covering_bbox(
     return np.unique(np.concatenate(keys)) if keys else np.array([], dtype=np.int64)
 
 
-def cells_covering_bboxes(
-    minx: np.ndarray,
-    miny: np.ndarray,
-    maxx: np.ndarray,
-    maxy: np.ndarray,
-    bits: int,
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched :func:`cells_covering_bbox`: arrays of boxes -> exploded
-    ``(row_index, key)`` pairs, lexsorted by (row, key), each row's keys
-    identical to the scalar cover (pytest-pinned).
-
-    The whole batch vectorizes through one span-bin pass plus a
-    ``max_span x max_span`` offset sweep (the :func:`bbox_insertion_cells`
-    pattern) — no per-row Python in the common case.  Boxes needing
-    date-line normalization (lon outside [-180, 180] or inverted) take the
-    scalar wrap path; they are the rare tail of an expansion batch.
-    """
-    minx = np.asarray(minx, dtype=np.float64)
-    miny = np.asarray(miny, dtype=np.float64)
-    maxx = np.asarray(maxx, dtype=np.float64)
-    maxy = np.asarray(maxy, dtype=np.float64)
-    n = len(minx)
-    rows_out: list[np.ndarray] = []
-    keys_out: list[np.ndarray] = []
-
-    simple = (minx >= LON_MIN) & (maxx <= LON_MAX) & (minx <= maxx)
-    idx = np.nonzero(simple)[0]
-    if len(idx):
-        xlo, xhi, ylo, yhi = bbox_span_bins(minx[idx], miny[idx], maxx[idx], maxy[idx], bits)
-        sx = (xhi - xlo + 1).astype(np.int64)
-        sy = (yhi - ylo + 1).astype(np.int64)
-        for dx in range(int(sx.max(initial=0))):
-            mx = dx < sx
-            for dy in range(int(sy.max(initial=0))):
-                m = mx & (dy < sy)
-                if not m.any():
-                    continue
-                xb = (xlo[m] + dx).astype(np.uint64)
-                yb = (ylo[m] + dy).astype(np.uint64)
-                rows_out.append(idx[m])
-                keys_out.append(cfg.encode(xb, yb, bits).astype(np.int64))
-
-    for i in np.nonzero(~simple)[0]:
-        k = cells_covering_bbox(minx[i], miny[i], maxx[i], maxy[i], bits, cfg)
-        rows_out.append(np.full(len(k), i, dtype=np.int64))
-        keys_out.append(k)
-
-    if not rows_out:
-        e = np.array([], dtype=np.int64)
-        return e, e
-    rows = np.concatenate(rows_out)
-    keys = np.concatenate(keys_out)
-    order = np.lexsort((keys, rows))
-    return rows[order], keys[order]
-
-
 def decompose_query_ranges(
     minx: float,
     miny: float,

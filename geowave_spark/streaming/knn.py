@@ -23,9 +23,10 @@ idempotent, so the (offset checkpoint, deterministic path) pair gives
 end-to-end exactly-once — the same recovery contract
 tests/test_streaming.py pins for the PIP join and indexed ingest.
 
-Scale notes: the static layer's SFC encode + cache happens ONCE at stream
-construction (``pre_encoded`` probe), not per micro-batch; per-batch cost
-is the adaptive join's usual one count-aggregate per round over <= |batch|
+Scale notes: the static layer is projected and cached ONCE at stream
+construction, not re-read per micro-batch; each batch bins it in Catalyst
+at each round's cell size (no encode step to reuse), and otherwise costs
+the adaptive join's usual one count-aggregate per round over <= |batch|
 queries.  Readback of the result is a plain parquet read over
 ``batch_id=*`` partitions.
 """
@@ -34,9 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from geowave_spark.operators.indexing import with_point_cells
 from geowave_spark.operators.knn import knn_join_adaptive
-from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig
 
 
 def knn_join_stream(
@@ -53,7 +52,6 @@ def knn_join_stream(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
     available_now: bool = False,
 ):
     """Run the adaptive kNN join continuously: ``queries`` is a streaming
@@ -71,9 +69,8 @@ def knn_join_stream(
             "invalidates emitted rows) — re-plan on layer updates instead"
         )
 
-    # encode + cache the static side once for the stream's lifetime
-    probe = with_point_cells(points, lon_col, lat_col, cfg, cell_col="_pcell").drop("tier")
-    probe = probe.select(id_col, lon_col, lat_col, "_pcell").cache()
+    # project + cache the static side once for the stream's lifetime
+    probe = points.select(id_col, lon_col, lat_col).cache()
 
     def _run_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = knn_join_adaptive(
@@ -87,8 +84,6 @@ def knn_join_stream(
             id_col=id_col,
             lon_col=lon_col,
             lat_col=lat_col,
-            cfg=cfg,
-            pre_encoded=True,
         )
         # deterministic path + overwrite = idempotent under batch replay
         out.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")

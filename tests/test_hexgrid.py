@@ -1,7 +1,7 @@
 """Hex (H3-family) cell backend: kernel laws, Catalyst/numpy/SQL twin
 equality, and the hex-kRing kNN against the brute-force answer.
 
-The coverage bound test is the load-bearing one: `knn_join_hexring`'s
+The coverage bound test is the load-bearing one: the hex kNN's
 correctness rests on `rings_for_distance` never under-covering the
 distance ball (module docstring of sfc/hexgrid.py derives the bound)."""
 
@@ -153,45 +153,25 @@ def test_duckdb_twin_matches_numpy(tmp_path):
 
 
 @pytest.mark.usefixtures("geo001")
-def test_knn_hexring_equals_brute(spark, geo001):
-    """hex-kRing kNN == brute-force kNN on the sf0.001 fixture (the same
-    equality contract knn_join_adaptive is held to)."""
-    import pyspark.sql.functions as F
+def test_knn_hexring_adaptive_equals_brute(spark, geo001):
+    """Ring-expansion hex kNN == brute-force kNN on the sf0.001 fixture.
+    Retirement at a shrunken radius may only fire when the true top-k is
+    already in hand (rings_for_distance covers the full r-ball, so >= k
+    in-radius rows at radius r IS the answer); k=5 at d=1.5 runs two
+    rounds."""
+    from knn_oracle import knn_join_brute
 
-    from geowave_spark.operators.knn import knn_join_brute, knn_join_hexring
-
-    pts = spark.read.parquet(f"{geo001}/points.parquet")
-    queries = pts.filter(F.col("fid").endswith("0")).select(
-        F.col("fid").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
-    )
-    k, dist = 5, 1.5
-    hexed = knn_join_hexring(queries, pts, k=k, max_distance_deg=dist)
-    brute = knn_join_brute(queries, pts, k=k, max_distance_deg=dist)
-    a = {(r.qid, r.fid, r.rank) for r in hexed.collect()}
-    b = {(r.qid, r.fid, r.rank) for r in brute.collect()}
-    assert a == b
-
-
-@pytest.mark.usefixtures("geo001")
-def test_knn_hexring_adaptive_equals_fixed(spark, geo001):
-    """Ring-expansion hex kNN == fixed-radius hex kNN: retirement at a
-    shrunken radius may only fire when the true top-k is already in hand
-    (rings_for_distance covers the full r-ball, so >= k in-radius rows at
-    radius r IS the answer).  Exercises multiple rounds: start_fraction
-    1/8 with expansion 8 gives a 2-round schedule at these parameters."""
-    import pyspark.sql.functions as F
-
-    from geowave_spark.operators.knn import knn_join_hexring, knn_join_hexring_adaptive
+    from geowave_spark.operators.knn import knn_join_hexring_adaptive
 
     pts = spark.read.parquet(f"{geo001}/points.parquet")
     queries = pts.filter(F.col("fid").endswith("0")).select(
         F.col("fid").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
     )
     k, dist = 5, 1.5
-    fixed = knn_join_hexring(queries, pts, k=k, max_distance_deg=dist)
     adaptive = knn_join_hexring_adaptive(queries, pts, k=k, max_distance_deg=dist)
-    a = {(r.qid, r.fid, r.rank) for r in adaptive.collect()}
-    b = {(r.qid, r.fid, r.rank) for r in fixed.collect()}
+    brute = knn_join_brute(queries, pts, k=k, max_distance_deg=dist)
+    a = {tuple(r) for r in adaptive.collect()}
+    b = {tuple(r) for r in brute.collect()}
     assert a == b and len(a) > 0
 
 
@@ -224,21 +204,6 @@ def test_pip_join_hex_equals_fixed(spark, geo001):
     hexed = {tuple(r) for r in pip_join(pts, zones, mode="hex").select(*cols).collect()}
     fixed = {tuple(r) for r in pip_join(pts, zones).select(*cols).collect()}
     assert hexed == fixed and len(hexed) > 0
-
-
-def test_knn_hexring_no_python_in_plan(spark, geo001):
-    """The hex candidate stage must be pure Catalyst: no Python/Arrow eval
-    node anywhere in the physical plan (the square-grid path needs one)."""
-    import pyspark.sql.functions as F
-
-    from geowave_spark.operators.knn import knn_join_hexring
-
-    pts = spark.read.parquet(f"{geo001}/points.parquet")
-    queries = pts.limit(50).select(
-        F.col("fid").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
-    )
-    plan = knn_join_hexring(queries, pts, k=3, max_distance_deg=1.0)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "ArrowEval" not in plan
 
 
 def test_res20_valid_over_full_lonlat_domain():

@@ -12,6 +12,10 @@ def _pts(spark, geo001):
     return spark.read.parquet(str(geo001 / "points.parquet"))
 
 
+def _as_queries(pts):
+    return pts.select(F.col("fid").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
+
+
 def _zones(spark, geo001):
     return spark.read.parquet(str(geo001 / "zones.parquet"))
 
@@ -128,7 +132,9 @@ class TestPipJoin:
 
 class TestKnn:
     def test_pruned_equals_brute(self, spark, geo001):
-        from geowave_spark.operators.knn import knn_join, knn_join_brute
+        from knn_oracle import knn_join_brute
+
+        from geowave_spark.operators.knn import knn_join
 
         pts = _pts(spark, geo001)
         q = (
@@ -162,6 +168,91 @@ class TestKnn:
         )
         out = knn_join(q, pts, k=1000, max_distance_deg=0.5)
         assert out.filter(F.col("dist_sq") > 0.25).count() == 0
+        with pytest.raises(ValueError):
+            knn_join(q, pts, k=3, max_distance_deg=0.0)
+
+    @pytest.mark.parametrize("metric", ["square", "hex", "geodesic"])
+    def test_candidate_plan_is_pure_catalyst(self, spark, geo001, metric):
+        """Every kNN's candidate stage is Catalyst only — no Python or Arrow
+        eval node — and the query side is broadcast.  The hex case is one
+        round of knn_join_hexring_adaptive (its rounds are checkpointed, so
+        the adaptive result's own plan is a scan)."""
+        from geowave_spark.operators import knn
+
+        pts = _pts(spark, geo001)
+        q = _as_queries(pts.limit(50))
+        if metric == "square":
+            out = knn.knn_join(q, pts, k=3, max_distance_deg=1.0)
+        elif metric == "geodesic":
+            out = knn.knn_join_geodesic(q, pts, k=3, max_distance_km=100.0)
+        else:
+            cols = ("qid", "qlon", "qlat", "fid", "lon", "lat")
+            pairs = knn._pairs(q, pts, knn._hex(1.0), cols, True)
+            out = knn._top_k(pairs, 3, "qid", "fid", "dist_sq")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+        assert "BroadcastHashJoin" in plan
+
+    def test_edge_placements_equal_brute(self, spark):
+        """Seeded edge cases of the cell grids.  distance_join == a brute
+        crossJoin on pairs at exactly distance d (5/16 and 3-4-5 triangles,
+        exact in binary), on multiples of the d/2 cell size, at negative
+        coordinates and at |lon| near 180.  knn_join_geodesic == brute
+        haversine with points on both poles and on +-180."""
+        from pyspark.sql.window import Window
+
+        from geowave_spark.functions.distance import haversine_km
+        from geowave_spark.operators.knn import distance_join, knn_join_geodesic
+
+        def frame(xy):
+            rows = [(f"p{i:04d}", float(x), float(y)) for i, (x, y) in enumerate(xy)]
+            pts = spark.createDataFrame(rows, "fid string, lon double, lat double")
+            return pts, _as_queries(pts)
+
+        rng = np.random.RandomState(61)
+        d, cell = 5 / 16, 5 / 32  # 180 = 1152 cells
+        bases = [
+            (i * cell, j * cell)
+            for i in (-1152, -1151, -3, -1, 0, 2, 1150, 1152)
+            for j in (-576, -7, -1, 0, 1, 4, 575)
+        ]
+        # four partners at exactly d, one just beyond it
+        moves = [(d, 0.0), (0.0, d), (-d, 0.0), (3 / 16, 4 / 16), (-4 / 16, 3 / 16), (d, 1 / 64)]
+        xy = bases + [(x + dx, y + dy) for x, y in bases[::3] for dx, dy in moves]
+        jitter = rng.uniform(-0.4, 0.4, (150, 2))
+        xy += [(bases[i][0] + a, bases[i][1] + b)
+               for i, (a, b) in zip(rng.randint(len(bases), size=150), jitter)]
+        pts, q = frame(xy)
+        dx, dy = F.col("lon") - F.col("qlon"), F.col("lat") - F.col("qlat")
+        brute = pts.crossJoin(q).withColumn("dist_sq", dx * dx + dy * dy)
+        want = {
+            tuple(r)
+            for r in brute.filter(F.col("dist_sq") <= d * d)
+            .select("qid", "fid", "dist_sq").collect()
+        }
+        assert {tuple(r) for r in distance_join(q, pts, d).collect()} == want
+        assert sum(r[2] == d * d for r in want) >= 5 * len(bases[::3])
+
+        poles = [(lon, lat) for lon in (-180.0, -90.0, 0.0, 45.0, 180.0) for lat in (-90.0, 90.0)]
+        seam = [(lon, lat) for lon in (-180.0, 180.0, -179.9, 179.9)
+                for lat in (-60.0, -1.0, 0.0, 1.0, 60.0)]
+        spread = zip(rng.uniform(-180, 180, 120), rng.uniform(-90, 90, 120))
+        caps = zip(rng.uniform(-180, 180, 60), rng.choice([-1, 1], 60) * rng.uniform(85, 90, 60))
+        pts, q = frame(poles + seam + list(spread) + list(caps))
+        hav = haversine_km(F.col("lon"), F.col("lat"), F.col("qlon"), F.col("qlat"))
+        w = Window.partitionBy("qid").orderBy("hav_km", "fid")
+        brute = pts.crossJoin(q).filter(F.col("fid") != F.col("qid")).withColumn("hav_km", hav)
+        for km, k in ((50.0, 3), (2000.0, 400)):
+            want = {
+                (r.qid, r.fid, r.rank)
+                for r in brute.filter(F.col("hav_km") <= km)
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
+                .collect()
+            }
+            got = knn_join_geodesic(q, pts, k=k, max_distance_km=km).collect()
+            assert {(r.qid, r.fid, r.rank) for r in got} == want
+            assert len(want) > len(poles)
 
 
 class TestKde:

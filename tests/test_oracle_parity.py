@@ -11,7 +11,9 @@ order-insensitive value hash), so deregistering never weakens coverage.
 ``NEIGHBORHOOD_QUERIES`` adds the driver-surface queries whose operators
 probe a cell neighborhood (``operators/neighborhood.py``, plus the weighted
 scatter of ``terrain_slope``), so a change to that shared candidate stage is
-hash-checked here for every caller, not only by the driver.
+hash-checked here for every caller, not only by the driver.  ``KNN_QUERIES``
+are the driver-surface kNN joins, which use the same stage; their siblings
+``distance_join`` and ``dbscan_*`` are in ``DRIVER_EXCLUDED``.
 """
 
 from __future__ import annotations
@@ -72,13 +74,15 @@ NEIGHBORHOOD_QUERIES = [
     "terrain_slope",
 ]
 
+KNN_QUERIES = ["knn_geodesic", "knn_hexring", "knn_join"]
+
 
 @pytest.mark.parametrize("name", _excluded_names())
 def test_excluded_query_matches_oracle(spark, duck, name):
     _assert_matches_oracle(spark, duck, name)
 
 
-@pytest.mark.parametrize("name", NEIGHBORHOOD_QUERIES)
+@pytest.mark.parametrize("name", NEIGHBORHOOD_QUERIES + KNN_QUERIES)
 def test_neighborhood_query_matches_oracle(spark, duck, name):
     _assert_matches_oracle(spark, duck, name)
 

@@ -243,24 +243,6 @@ class TestCoversAndRanges:
         _, pk2 = point_keys(np.array([0.0]), np.array([0.0]))
         assert int(key_at_tier(pk2, 31, 8)[0]) not in cover
 
-    def test_batched_cover_equals_scalar(self):
-        """cells_covering_bboxes (the vectorized expansion-UDF kernel) must
-        emit exactly the scalar cover per row — including date-line-wrapping
-        and pole-clamped boxes that take the scalar fallback path."""
-        from geowave_spark.sfc import cells_covering_bboxes
-
-        x = RNG.uniform(-185, 185, 300)
-        y = RNG.uniform(-92, 92, 300)
-        d = RNG.uniform(0.01, 3.0, 300)
-        minx, maxx = x - d, x + d
-        miny, maxy = np.clip(y - d, -90, 90), np.clip(y + d, -90, 90)
-        for bits in (5, 8, 13):
-            rows, keys = cells_covering_bboxes(minx, miny, maxx, maxy, bits)
-            assert np.array_equal(rows, np.sort(rows))  # row-major contract
-            for i in range(len(x)):
-                want = cells_covering_bbox(minx[i], miny[i], maxx[i], maxy[i], bits)
-                assert np.array_equal(keys[rows == i], want)
-
     def test_decompose_ranges_cover_exactly(self):
         # ranges must cover precisely the cells intersecting the box
         bits = 8
