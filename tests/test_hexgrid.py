@@ -153,7 +153,7 @@ def test_duckdb_twin_matches_numpy(tmp_path):
 
 
 @pytest.mark.usefixtures("geo001")
-def test_knn_hexring_adaptive_equals_brute(spark, geo001):
+def test_knn_hexring_equals_brute(spark, geo001):
     """Ring-expansion hex kNN == brute-force kNN on the sf0.001 fixture.
     Retirement at a shrunken radius may only fire when the true top-k is
     already in hand (rings_for_distance covers the full r-ball, so >= k
@@ -173,6 +173,31 @@ def test_knn_hexring_adaptive_equals_brute(spark, geo001):
     a = {tuple(r) for r in adaptive.collect()}
     b = {tuple(r) for r in brute.collect()}
     assert a == b and len(a) > 0
+
+
+@pytest.mark.usefixtures("geo001")
+def test_knn_hexring_adaptive_equals_fixed(spark, geo001, monkeypatch):
+    """Ring-expansion hex kNN == fixed-radius hex kNN.  With
+    START_FRACTION = 1 the round schedule collapses to one round at the
+    full search radius, which is the fixed full-ball hex join; the default
+    schedule (2 rounds at these parameters) must return the same rows."""
+    from geowave_spark.operators import knn
+
+    pts = spark.read.parquet(f"{geo001}/points.parquet")
+    queries = pts.filter(F.col("fid").endswith("0")).select(
+        F.col("fid").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat")
+    )
+    k, dist = 5, 1.5
+    adaptive = {
+        tuple(r)
+        for r in knn.knn_join_hexring_adaptive(queries, pts, k=k, max_distance_deg=dist).collect()
+    }
+    monkeypatch.setattr(knn, "START_FRACTION", 1.0)
+    fixed = {
+        tuple(r)
+        for r in knn.knn_join_hexring_adaptive(queries, pts, k=k, max_distance_deg=dist).collect()
+    }
+    assert adaptive == fixed and len(adaptive) > 0
 
 
 def test_hex_cover_is_superset_of_point_cells(spark):
