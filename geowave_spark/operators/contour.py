@@ -310,10 +310,12 @@ def contour_polylines(segments: DataFrame, checkpointer=None) -> DataFrame:
     ``segments`` is :func:`marching_squares` output (quantized endpoint
     columns).  Segments sharing an endpoint chain into one polyline:
     endpoints pack to bigint vertex ids, the segment list becomes an
-    undirected edge list, and the dedup family's large-star/small-star
-    ``connected_components`` (O(log n) rounds, no collect_set) labels each
-    vertex with its component minimum — the same core that clusters dup
-    pairs, applied to contour topology.
+    undirected edge list, and the dedup family's ``connected_components``
+    labels each vertex with its component minimum — the same core that
+    clusters dup pairs, applied to contour topology.  Up to 2^18 distinct
+    segments finish in one bounded collect and a driver union-find; larger
+    contour sets run the large-star/small-star rounds (O(log n) rounds, no
+    collect_set).
 
     Returns (component, n_segments, n_vertices, length_micro, is_closed):
     component = min packed vertex id, length_micro = sum of per-segment

@@ -26,12 +26,17 @@ generalizes from key-identity to content-identity.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from geowave_spark.plans.lineage import truncate_plan
 
 from geowave_spark.functions.text import MOD, md5_long, tokens, word_ngrams
+
+_log = logging.getLogger("geowave_spark")
 
 NUM_PERM = 16
 BANDS = 4
@@ -295,6 +300,12 @@ def contamination_pairs(
     )
 
 
+# driver-finish bound for connected_components: 2^18 oriented edges is a
+# few MB of ids on the driver, and a single-core union-find over it takes
+# well under a second — less than one distributed round's job overhead
+_LOCAL_EDGES = 1 << 18
+
+
 def connected_components(
     edges: DataFrame, max_rounds: int = 50, checkpointer=None
 ) -> DataFrame:
@@ -302,22 +313,37 @@ def connected_components(
     alternating large-star / small-star rounds (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14).  Returns ``(u, label)``
     for every node that appears in any edge, where ``label`` is the MINIMUM
-    node id in its component.
+    node id in its component; both columns keep the edge columns' type.
 
-    Why this and not label propagation: each round here is two
-    groupBy/join passes on node keys and the algorithm provably converges
-    in O(log n) rounds on ANY graph shape — a min-label-propagation loop
-    needs O(diameter) rounds, and near-dup chains (a~b~c~... boilerplate
-    gradients) produce long paths at corpus scale.  Every pass is a plain
-    equi-join/agg on the node id (uniform after hashing); nothing crosses
-    the driver but a per-round convergence scalar, and each round's edge
-    set is localCheckpoint-ed so the iterative plan never grows.
+    Small graphs finish on the driver: the oriented, distinct edge set is
+    materialized once (``truncate_plan``) and at most ``_LOCAL_EDGES + 1``
+    of its rows are collected.  When the whole set fits (at most
+    ``_LOCAL_EDGES`` edges, a few MB of ids), a union-find on the driver
+    labels it and the labels come back as a small DataFrame — one
+    collect instead of several rounds of jobs.  The choice is made from the
+    observed edge count, not an estimate; Python's ``<`` on ints and
+    ``str`` (code-point order) is Spark's order on longs and UTF-8
+    strings, so both paths give the same minimum.
+
+    Larger graphs run the distributed rounds.  Why these and not label
+    propagation: each round here is two groupBy/join passes on node keys
+    and the algorithm provably converges in O(log n) rounds on ANY graph
+    shape — a min-label-propagation loop needs O(diameter) rounds, and
+    near-dup chains (a~b~c~... boilerplate gradients) produce long paths at
+    corpus scale.  Every pass is a plain equi-join/agg on the node id
+    (uniform after hashing); nothing crosses the driver but the bounded
+    collect above and a per-round convergence scalar, and each round's
+    edge set is ``truncate_plan``-ed so the iterative plan never grows.
 
     ``checkpointer`` (a ``plans.lineage.RoundCheckpointer``) swaps the
-    executor-local ``localCheckpoint`` for durable per-round parquet state:
-    a killed run re-invoked with the same checkpointer config resumes from
-    the last committed round instead of round 0 (the reference durably
-    chains every analytic iteration — `MapReduceJobController.java`).
+    executor-local barrier for durable per-round parquet state and always
+    runs the rounds (no driver finish): a killed run re-invoked with the
+    same checkpointer config resumes from the last committed round instead
+    of round 0 (the reference durably chains every analytic iteration —
+    `MapReduceJobController.java`).
+
+    Each call logs one line on the ``geowave_spark`` logger: the path taken
+    and its edge count, and for the rounds the round count.
 
     Invariant carried between rounds: every edge is oriented (hi, lo) with
     ``lo < hi`` — large-star emits (v, min) with v > u >= min, small-star
@@ -333,11 +359,16 @@ def connected_components(
     prev_sig = None
     start_round = 0
     if checkpointer is not None:
+        path = "checkpointed rounds"
         resumed = checkpointer.resume()
         if resumed is not None:
             rno, dfs, extras = resumed
             e = dfs["edges"]
             if extras.get("converged"):
+                _log.info(
+                    "connected_components: %s, resumed converged at round %d, 0 rounds",
+                    path, rno,
+                )
                 return _cc_labels(e)
             ps = extras.get("sig")
             prev_sig = tuple(ps) if ps else None
@@ -346,8 +377,16 @@ def connected_components(
             e = checkpointer.save_round(-1, {"edges": e})["edges"]
             start_round = 0
     else:
-        e = e.localCheckpoint()
+        e = truncate_plan(e)
+        head = e.limit(_LOCAL_EDGES + 1).collect()
+        if len(head) <= _LOCAL_EDGES:
+            _log.info("connected_components: driver finish, %d edges", len(head))
+            return _driver_labels(e, head)
+        path = f"rounds, over {_LOCAL_EDGES} edges"
+    sig = None
+    rounds = 0
     for rnd in range(start_round, max_rounds):
+        rounds += 1
         # large-star over the symmetric closure: for each u, attach every
         # strictly larger neighbor to m = min(u, Γ(u))
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -402,7 +441,39 @@ def connected_components(
         if sig[0] == 0 or prev_sig == sig:
             break
         prev_sig = sig
+    _log.info(
+        "connected_components: %s, %d rounds, %s edges at the last round",
+        path, rounds, sig[0] if sig else "no",
+    )
     return _cc_labels(e)
+
+
+def _driver_labels(e: DataFrame, pairs: list) -> DataFrame:
+    """Union-find over the collected edge list ``pairs``: ``(u, label)``
+    for every node in an edge, ``label`` the component minimum, as a
+    DataFrame typed like ``e``'s columns.  Linking the larger root under
+    the smaller keeps every root its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in pairs:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    t = e.schema["u"].dataType
+    schema = StructType([StructField("u", t), StructField("label", t)])
+    return e.sparkSession.createDataFrame(
+        [(x, find(x)) for x in parent], schema, verifySchema=False
+    )
 
 
 def _cc_labels(e: DataFrame) -> DataFrame:

@@ -3,6 +3,8 @@ analysis.  Properties are checked against independent numpy/python
 re-implementations at sf0.001 scale (the DuckDB oracle covers sf0.01)."""
 
 import hashlib
+import random
+import re
 
 import numpy as np
 import pytest
@@ -24,6 +26,74 @@ def embs(spark):
 def _py_hash(s: str) -> int:
     """The shared cross-engine hash: first 15 hex chars of md5 as int."""
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _min_labels(edges) -> dict:
+    """Reference labels: every node of a non-loop edge -> its component's
+    minimum id, by a plain union-find."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    edge_nodes = set()
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+            edge_nodes |= {a, b}
+    comps: dict = {}
+    for x in edge_nodes:
+        comps.setdefault(find(x), []).append(x)
+    return {x: min(members) for members in comps.values() for x in members}
+
+
+def _cc_dict(edges) -> dict:
+    from geowave_spark.operators.dedup import connected_components
+
+    rows = connected_components(edges).collect()
+    got = {r.u: r.label for r in rows}
+    assert len(got) == len(rows), "one label per node"
+    return got
+
+
+def _random_graph(seed: int, kind: str) -> list[tuple]:
+    rng = random.Random(seed)
+    chain = list(range(200))
+    rng.shuffle(chain)
+    edges = list(zip(chain, chain[1:]))
+    base = 200
+    for _ in range(4):  # stars, hub at a random position in id order
+        size = rng.randint(3, 25)
+        hub = base + rng.randrange(size)
+        edges += [(hub, base + i) for i in range(size) if base + i != hub]
+        base += size
+    for _ in range(4):  # cycles
+        size = rng.randint(3, 15)
+        edges += [(base + i, base + (i + 1) % size) for i in range(size)]
+        base += size
+    edges += [(x, x) for x in rng.sample(range(base), 5)]
+    edges.append((base, base))  # a node with only a self-loop is not labeled
+    extra = rng.sample(edges, 20)
+    edges += extra + [(v, u) for u, v in extra]
+    edges = [(u, v) if rng.random() < 0.5 else (v, u) for u, v in edges]
+    rng.shuffle(edges)
+    if kind == "bigint":
+        pool = {-(2**62), 2**62, 2**62 + 1, -1, 0}
+        while len(pool) < base + 1:
+            pool.add(rng.randrange(-(2**62), 2**62 + 2))
+    else:
+        pool = set()
+        while len(pool) < base + 1:
+            pool.add(rng.choice(["n", "N", "é", "€", "𝄞", ""]) + str(rng.randrange(10**6)))
+    ids = sorted(pool)
+    rng.shuffle(ids)
+    return [(ids[u], ids[v]) for u, v in edges]
 
 
 class TestDedup:
@@ -56,41 +126,66 @@ class TestDedup:
         # every LSH-surfaced pair is jaccard-verified, so lsh ⊆ exact
         assert lsh <= exact
 
-    def test_connected_components_match_union_find(self, spark):
+    def test_connected_components_match_union_find(self, spark, monkeypatch):
+        """Both paths: the driver finish (default bound) and the distributed
+        rounds (bound 0 forces the truncate_plan + signature loop)."""
         import random
 
-        from geowave_spark.operators.dedup import connected_components
+        from geowave_spark.operators import dedup
 
         random.seed(13)
         nodes = [f"d{i:04d}" for i in range(150)]
         # a 40-edge chain (worst case for label propagation) + random noise
         edges = [(nodes[i], nodes[i + 1]) for i in range(40)]
         edges += [(random.choice(nodes), random.choice(nodes)) for _ in range(80)]
-        got = {
-            r.u: r.label
-            for r in connected_components(spark.createDataFrame(edges, ["u", "v"])).collect()
-        }
-        parent: dict[str, str] = {}
+        df = spark.createDataFrame(edges, ["u", "v"])
+        expect = _min_labels(edges)
+        assert _cc_dict(df) == expect
+        monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+        assert _cc_dict(df) == expect
 
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+    @pytest.mark.parametrize("seed,kind", [(7, "bigint"), (8, "string")])
+    def test_connected_components_driver_equals_rounds(self, spark, monkeypatch, seed, kind):
+        """Seeded graphs (a 200-node chain, stars, cycles, self-loops,
+        duplicate and reversed edges; long ids at ±2^62 and negative, or
+        string ids with non-ASCII prefixes): the driver finish and the
+        rounds label every node alike, keep the id type, and match a
+        Python union-find."""
+        from geowave_spark.operators import dedup
 
-        edge_nodes = set()
-        for a, b in edges:
-            if a != b:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-                edge_nodes |= {a, b}
-        comps: dict[str, list[str]] = {}
-        for x in edge_nodes:
-            comps.setdefault(find(x), []).append(x)
-        expect = {x: min(members) for members in comps.values() for x in members}
-        assert got == expect
+        edges = _random_graph(seed, kind)
+        df = spark.createDataFrame(edges, f"u {kind}, v {kind}")
+        expect = _min_labels(edges)
+        outs = [dedup.connected_components(df)]
+        monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+        outs.append(dedup.connected_components(df))
+        for out in outs:
+            assert [f.dataType.simpleString() for f in out.schema] == [kind, kind]
+            rows = out.collect()
+            assert len(rows) == len(expect)
+            assert {r.u: r.label for r in rows} == expect
+
+    def test_connected_components_bound_and_decision_log(self, spark, monkeypatch, caplog):
+        """The driver finishes at exactly ``_LOCAL_EDGES`` oriented distinct
+        edges and the rounds run one below it; each call logs one line."""
+        from geowave_spark.operators import dedup
+
+        edges = [(1, 2), (2, 3), (3, 1), (2, 1), (4, 4), (5, 6), (6, 5)]
+        n = len({(max(u, v), min(u, v)) for u, v in edges if u != v})
+        df = spark.createDataFrame(edges, "u bigint, v bigint")
+        for bound, line in (
+            (n, rf"driver finish, {n} edges$"),
+            (n - 1, rf"rounds, over {n - 1} edges, \d+ rounds, \d+ edges at the last round$"),
+        ):
+            monkeypatch.setattr(dedup, "_LOCAL_EDGES", bound)
+            caplog.clear()
+            with caplog.at_level("INFO", logger="geowave_spark"):
+                assert _cc_dict(df) == _min_labels(edges)
+            logged = [
+                r.getMessage() for r in caplog.records
+                if r.getMessage().startswith("connected_components: ")
+            ]
+            assert len(logged) == 1 and re.search(line, logged[0]), logged
 
     def test_dup_clusters_transitive_and_partitioning(self, spark, docs):
         """a~b and b~c must land in ONE cluster even when a and c share no

@@ -2,7 +2,8 @@
 
 Runs each __spark_entry__.queries()[name] at sf0.01 on Spark AND the matching
 oracle_sql()[name] in DuckDB, comparing row count, sorted column names, and an
-order-insensitive value hash.  Usage:
+order-insensitive value hash.  A match prints ``ok    name: N rows, hash H
+in Ts``, so the hash of a query's rows can be compared across commits.  Usage:
 
     python tools/check_oracle.py [query ...]      # default: all
 """
@@ -104,7 +105,7 @@ def main() -> int:
                     print("   oracle-only:", d)
                 ok = False
         if ok:
-            print(f"ok    {name}: {len(srows)} rows in {dt:.1f}s")
+            print(f"ok    {name}: {len(srows)} rows, hash {h1} in {dt:.1f}s")
         else:
             failures += 1
     spark.stop()
