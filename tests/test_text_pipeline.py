@@ -90,7 +90,9 @@ def _random_graph(seed: int, kind: str) -> list[tuple]:
     else:
         pool = set()
         while len(pool) < base + 1:
-            pool.add(rng.choice(["n", "N", "é", "€", "𝄞", ""]) + str(rng.randrange(10**6)))
+            # U+FF21 sorts above U+1D11E in UTF-16 order, below it in code
+            # points (= UTF-8 bytes, Spark's order)
+            pool.add(rng.choice(["n", "N", "é", "€", "\uff21", "𝄞", ""]) + str(rng.randrange(10**6)))
     ids = sorted(pool)
     rng.shuffle(ids)
     return [(ids[u], ids[v]) for u, v in edges]
@@ -129,8 +131,6 @@ class TestDedup:
     def test_connected_components_match_union_find(self, spark, monkeypatch):
         """Both paths: the driver finish (default bound) and the distributed
         rounds (bound 0 forces the truncate_plan + signature loop)."""
-        import random
-
         from geowave_spark.operators import dedup
 
         random.seed(13)
