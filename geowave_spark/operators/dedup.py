@@ -301,8 +301,9 @@ def contamination_pairs(
 
 
 # driver-finish bound for connected_components: 2^18 oriented edges is a
-# few MB of ids on the driver, and a single-core union-find over it takes
-# well under a second — less than one distributed round's job overhead
+# few MB of ids on the driver.  Just under it (4 vCPU, local[3]) the driver
+# finish took 1.8 s on a shuffled chain and 3.2 s on random edges, where the
+# distributed rounds took 24 s and 7.5 s
 _LOCAL_EDGES = 1 << 18
 
 

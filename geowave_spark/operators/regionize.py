@@ -7,16 +7,15 @@ The reference's raster analytics stop at tiles/resampling; regionization
 is what turns its KDE/density surfaces into discrete footprints (the
 vector step after thresholding).
 
-Spark-first shape: candidate edges come from the hotspot family's
-literal-offset SCATTER — each occupied cell explodes to its 4- or
-8-neighborhood and one equi-join on the uniform cell key finds occupied
-neighbors (cells << points, so this joins the CELL table, never the
-corpus) — and the dedup family's ``connected_components`` labels them.
-A cell graph is small (thousands of edges at 0.5° cells), so it usually
-finishes in one bounded collect and a driver union-find; past 2^18 edges
-the same call runs the large-star/small-star rounds (O(log n) rounds).
-Isolated cells (no occupied neighbor) label themselves via a left join +
-coalesce.
+Spark-first shape: candidate edges come from ``neighbor_join`` — each
+occupied cell is copied once per 4- or 8-neighborhood offset and one
+equi-join on the uniform cell key finds occupied neighbors (cells <<
+points, so this joins the CELL table, never the corpus) — and the dedup
+family's ``connected_components`` labels them.  A cell graph is small
+(thousands of edges at 0.5° cells), so it usually finishes in one bounded
+collect and a driver union-find; past 2^18 edges the same call runs the
+large-star/small-star rounds (O(log n) rounds).  Isolated cells (no
+occupied neighbor) label themselves via a left join + coalesce.
 
 Output per region: (region = min packed cell id, n_cells, n_points, and
 the region bbox in cell coords) — everything integer, engine-exact.
