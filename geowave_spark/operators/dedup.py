@@ -343,8 +343,9 @@ def connected_components(
     of round 0 (the reference durably chains every analytic iteration —
     `MapReduceJobController.java`).
 
-    Each call logs one line on the ``geowave_spark`` logger: the path taken
-    and its edge count, and for the rounds the round count.
+    Each call logs one line on the ``geowave_spark`` logger: the path
+    taken, and its edge count (driver) or the bound it exceeded, the round
+    count and the last round's edge count (rounds).
 
     Invariant carried between rounds: every edge is oriented (hi, lo) with
     ``lo < hi`` — large-star emits (v, min) with v > u >= min, small-star
