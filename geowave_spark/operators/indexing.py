@@ -353,9 +353,10 @@ def with_s2_bins(
 ) -> DataFrame:
     """S2-style cube-face bins as PURE Catalyst expressions (no Python):
     unit-sphere xyz -> largest-axis face -> gnomonic (u, v) -> quadratic
-    area-correcting st -> (face, ib, jb) grid bins.  Mirrors
-    `sfc/s2cube.py` (whose Hilbert key is the bijective storage form of the
-    same triple); the triple itself is what SQL oracles can re-derive.
+    area-correcting st -> (face, ib, jb) grid bins.  The numpy oracle
+    `tests/s2_oracle.py` derives the same triple (its Hilbert key is the
+    bijective storage form of it); the triple itself is what SQL oracles
+    can re-derive.
     """
     lam = F.radians(F.col(lon_col))
     phi = F.radians(F.col(lat_col))

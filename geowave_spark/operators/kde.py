@@ -215,33 +215,6 @@ def resize_pyramid(cells: DataFrame, old_tile_size: int, new_tile_size: int) -> 
     return with_tile_columns(base, new_tile_size)
 
 
-def kde_pyramid_scalable(
-    points: DataFrame,
-    min_level: int = 1,
-    max_level: int = 25,
-    tile_size: int = 1,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    quantile_buckets: int = 1000,
-) -> DataFrame:
-    """The 100 TB variant of :func:`kde_pyramid`: identical splat + sums and
-    identical `normalized`, but `percentile` is computed without gathering a
-    level into one window partition:
-
-    - per-level max/total via one tiny aggregation, broadcast back;
-    - per-level `quantile_buckets` approximate quantiles
-      (`percentile_approx` — a partial-aggregated sketch), broadcast back;
-    - percentile(w) ~= |{q_i <= w}| / buckets via an array scan per row.
-
-    Error <= 1/buckets + sketch error; every stage is partial/final
-    aggregation or broadcast join — no per-level window, partitions stay
-    bounded at any scale.  (Equivalent to
-    ``kde_pyramid(..., percentile_mode='approx')``; kept as an explicit API.)
-    """
-    cells = _splat_cells(points, min_level, max_level, tile_size, lon_col, lat_col)
-    return with_tile_columns(_approx_bands(cells, quantile_buckets), tile_size)
-
-
 def kde_oracle_sql(points_path: str, min_level: int, max_level: int, tile_size: int) -> str:
     """DuckDB SQL computing the identical pyramid (independent executor)."""
     kern = ", ".join(

@@ -14,6 +14,13 @@ so the statistic is one integer expression over per-entity integer sums
 needed).  ``chi2_micro = (24*so2 - n*n) * 1e6 DIV n`` is engine-exact
 (all values non-negative, so truncating and flooring division agree).
 
+Hour of day is tz-free epoch arithmetic on both engines: with ``us`` the
+microseconds since 1970-01-01 00:00 (the instant of a TIMESTAMP, the wall
+clock read as UTC for a TIMESTAMP_NTZ), ``hh = pmod(us, 86400e6) DIV
+3600e6``, which is the non-negative remainder of ``floor(us / 3600e6)``
+modulo 24.  The session timezone never enters, so a TIMESTAMP column whose
+events straddle a daylight-saving change bins the same in every session.
+
 100 TB shape: one groupBy to (entity, hour) counts, one re-agg to
 entities — both uniform keys; the hour dimension bounds the first agg's
 output at 24x the entity count.
@@ -21,10 +28,26 @@ output at 24x the entity count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 __all__ = ["hourly_periodicity", "hourly_periodicity_sql"]
+
+_US_PER_HOUR = 3_600_000_000
+_US_PER_DAY = 24 * _US_PER_HOUR
+
+
+def _utc_hour(events: DataFrame, ts_col: str) -> Column:
+    """Hour of day (0-23) from epoch microseconds, never the session tz.
+    The dividend is an integer below 2^37, so the double quotient floors
+    exactly (no integer DIV exists on a Column)."""
+    ts = F.col(ts_col)
+    if isinstance(events.schema[ts_col].dataType, TimestampNTZType):
+        us = F.timestamp_diff("MICROSECOND", F.lit("1970-01-01").cast("timestamp_ntz"), ts)
+    else:
+        us = F.unix_micros(ts)
+    return F.floor(F.pmod(us, F.lit(_US_PER_DAY)) / _US_PER_HOUR)
 
 
 def hourly_periodicity(
@@ -40,7 +63,7 @@ def hourly_periodicity(
         raise ValueError("min_events must be >= 1")
     per_hour = (
         events.select(
-            F.col(entity_col).alias("entity"), F.hour(F.col(ts_col)).alias("hh")
+            F.col(entity_col).alias("entity"), _utc_hour(events, ts_col).alias("hh")
         )
         .groupBy("entity", "hh")
         .agg(F.count(F.lit(1)).alias("o"))
@@ -71,10 +94,14 @@ def hourly_periodicity_sql(
     min_events: int = 24,
 ) -> str:
     """DuckDB twin: identical integer algebra (``//`` floor division
-    agrees with Spark's DIV on these non-negative values)."""
+    agrees with Spark's DIV on these non-negative values); ``epoch_us``
+    reads a naive TIMESTAMP as UTC, like the engine side."""
     return f"""
         WITH per_hour AS (
-          SELECT {entity_col} AS entity, hour({ts_col}) AS hh, COUNT(*) AS o
+          SELECT {entity_col} AS entity,
+                 (epoch_us({ts_col}) % {_US_PER_DAY} + {_US_PER_DAY})
+                   % {_US_PER_DAY} // {_US_PER_HOUR} AS hh,
+                 COUNT(*) AS o
           FROM {events_table} GROUP BY 1, 2),
         agg AS (
           SELECT entity, SUM(o) AS n_events, COUNT(*) AS n_hours_active,

@@ -51,6 +51,10 @@ from geowave_spark.cache import CacheRegistry
 # live until the NEXT call releases them (see geowave_spark/cache.py).
 _CACHES = CacheRegistry()
 
+# Broadcast gate of both zone joins: a zone layer with more distinct
+# geometries than this takes the shuffle path instead of a driver catalog.
+MAX_BROADCAST_ZONES = 65536
+
 
 def release_caches() -> None:
     """Unpersist DataFrames cached by earlier pip_join calls."""
@@ -91,7 +95,7 @@ def cover_cells_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cells: i
                 # wildly heterogeneous extents.
                 raise ValueError(
                     f"cover of geometry exceeds {max_cells} cells at tier "
-                    f"{bits}; use a coarser cover_bits or mode='tiered'"
+                    f"{bits}; use a coarser tier or mode='tiered'"
                 )
             out.append(cells.tolist())
         return pd.Series(out)
@@ -217,8 +221,6 @@ def choose_cover_tier(zones: DataFrame, wkt_col: str, cfg: SpatialConfig, target
 def _plan_zone_layer(
     zones: DataFrame,
     wkt_col: str,
-    cfg: SpatialConfig,
-    max_broadcast_zones: int,
     sample_cap: int = 10_000,
 ) -> tuple[int, bool, list[str] | None]:
     """ONE bounded driver job plans the whole zone side: collect distinct
@@ -237,17 +239,17 @@ def _plan_zone_layer(
         r[0] for r in zones.select(wkt_col).distinct().limit(sample_cap + 1).collect()
     ]
     if len(sample) <= sample_cap:
-        broadcast_ok = len(sample) <= max_broadcast_zones
+        broadcast_ok = len(sample) <= MAX_BROADCAST_ZONES
         catalog = sorted(sample) if broadcast_ok else None
     else:
-        n = zones.select(wkt_col).distinct().limit(max_broadcast_zones + 1).count()
-        broadcast_ok = n <= max_broadcast_zones
+        n = zones.select(wkt_col).distinct().limit(MAX_BROADCAST_ZONES + 1).count()
+        broadcast_ok = n <= MAX_BROADCAST_ZONES
         catalog = (
             sorted(r[0] for r in zones.select(wkt_col).distinct().collect())
             if broadcast_ok
             else None
         )
-    tier = _tier_from_wkts(sample[:sample_cap], cfg)
+    tier = _tier_from_wkts(sample[:sample_cap], DEFAULT_CONFIG)
     return tier, broadcast_ok, catalog
 
 
@@ -293,12 +295,9 @@ def pip_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     zone_wkt_col: str = "geom_wkt",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
     mode: str = "fixed",  # 'fixed' (single tier) | 'tiered' (GeoWave K1) | 'hex' (H3-family cells)
-    cover_bits: int | None = None,
     broadcast_zones: bool = True,
     point_cell_col: str | None = None,
-    max_broadcast_zones: int = 65536,
     salt_hot: tuple[int, int] | None = None,  # (hot_threshold, buckets)
     salt_id_col: str | None = None,
 ) -> DataFrame:
@@ -337,7 +336,7 @@ def pip_join(
             "no shuffle to skew — drop salt_hot or use mode='fixed')"
         )
     if point_cell_col is None and mode != "hex":
-        points = with_point_cells(points, lon_col, lat_col, cfg, cell_col="_pcell").drop("tier")
+        points = with_point_cells(points, lon_col, lat_col, cell_col="_pcell").drop("tier")
         point_cell_col = "_pcell"
 
     # avoid name collisions with the probe side (points may carry their own
@@ -347,7 +346,7 @@ def pip_join(
     # catalog mode (whenever the zone side is broadcastable): geometries are
     # replaced by a small int index before the join so candidate rows never
     # carry WKT strings — the refine UDF holds the catalog per worker.
-    # Auto-gated: the catalog fetch collects at most max_broadcast_zones + 1
+    # Auto-gated: the catalog fetch collects at most MAX_BROADCAST_ZONES + 1
     # distinct geometries; a larger build side falls back to the shuffle path
     # (same rows, refine via Arrow UDF) instead of OOMing the driver.
     catalog: list[str] | None = None
@@ -355,9 +354,7 @@ def pip_join(
     if broadcast_zones:
         # one bounded driver job: tier + gate + catalog (oversized layers
         # never pull WKT payloads into the driver beyond the tier sample)
-        planned_tier, broadcast_zones, catalog = _plan_zone_layer(
-            zones, "_zwkt", cfg, max_broadcast_zones
-        )
+        planned_tier, broadcast_zones, catalog = _plan_zone_layer(zones, "_zwkt")
     if catalog is not None:
         from geowave_spark.geometry.pip_expr import EDGES_SCHEMA, edges_rows
 
@@ -370,7 +367,7 @@ def pip_join(
         zones = zones.join(F.broadcast(cat_df), "_zwkt")
 
     if mode == "tiered":
-        zcells = zones.withColumn("_zc", F.explode(zone_insertion_cells_udf(cfg)(F.col("_zwkt"))))
+        zcells = zones.withColumn("_zc", F.explode(zone_insertion_cells_udf()(F.col("_zwkt"))))
         zcells = (
             zcells.withColumn("_ztier", F.col("_zc.tier"))
             .withColumn("_zcell", F.col("_zc.cell"))
@@ -380,7 +377,7 @@ def pip_join(
             zcells = zcells.drop("_zwkt")
         zcells = _CACHES.add(zcells.persist())
         # SINGLE probe-side pass (the 100-TB side is read exactly once):
-        # collect the distinct zone tiers (bounded by len(cfg.tiers), usually
+        # collect the distinct zone tiers (bounded by the tier count, usually
         # 2-4 — a driver job on the SMALL side only), then explode each probe
         # row to one (tier, ancestor_cell) struct per zone tier present and
         # run ONE two-column equi-join.  Replaces the round-3 per-tier
@@ -396,7 +393,7 @@ def pip_join(
                 F.struct(
                     F.lit(int(t)).cast("byte").alias("t"),
                     F.coalesce(
-                        cell_at_tier(F.col(point_cell_col), cfg.finest, int(t)),
+                        cell_at_tier(F.col(point_cell_col), DEFAULT_CONFIG.finest, int(t)),
                         F.lit(-1),
                     ).alias("c"),
                 )
@@ -416,12 +413,11 @@ def pip_join(
             "inner",
         ).drop("_jtier", "_ztier")
     else:
-        if cover_bits is None:
-            cover_bits = (
-                planned_tier
-                if planned_tier is not None
-                else choose_cover_tier(zones, "_zwkt", cfg)
-            )
+        cover_bits = (
+            planned_tier
+            if planned_tier is not None
+            else choose_cover_tier(zones, "_zwkt", DEFAULT_CONFIG)
+        )
         if mode == "hex":
             # hex area ~ square cell area: one res step finer than the
             # circumradius match (45/2^res ~ 360/2^bits) measurably tightens
@@ -435,7 +431,7 @@ def pip_join(
             )
         else:
             zcells = zones.withColumn(
-                "_zcell", F.explode(cover_cells_udf(cover_bits, cfg)(F.col("_zwkt")))
+                "_zcell", F.explode(cover_cells_udf(cover_bits)(F.col("_zwkt")))
             )
         if catalog is not None:
             zcells = zcells.drop("_zwkt")
@@ -460,7 +456,10 @@ def pip_join(
         else:
             probe = points.withColumn(
                 "_zcell",
-                F.coalesce(cell_at_tier(F.col(point_cell_col), cfg.finest, cover_bits), F.lit(-1)),
+                F.coalesce(
+                    cell_at_tier(F.col(point_cell_col), DEFAULT_CONFIG.finest, cover_bits),
+                    F.lit(-1),
+                ),
             )
         if salt_hot is not None and not broadcast_zones:
             # K7 explicit skew salting for the shuffle join: hot probe cells
@@ -583,10 +582,7 @@ def areal_join(
     zone_wkt_col: str = "geom_wkt",
     feature_id_col: str = "doc_id",
     zone_id_col: str = "zone_id",
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-    cover_bits: int | None = None,
     compare_op: str = "OVERLAPS",
-    max_broadcast_zones: int = 65536,
 ) -> DataFrame:
     """Geometry-vs-geometry intersects join: features of ANY kind (point /
     line / polygon WKT + bbox columns) x polygon zones.
@@ -604,22 +600,18 @@ def areal_join(
     ``(cell, zone_id[, zone index])`` — never WKT — so the broadcast payload
     is bounded by zones x cells_per_zone x 16 bytes plus ONE catalog of
     distinct zone WKTs shipped per worker in the refine closure; the gate on
-    ``max_broadcast_zones`` therefore gauges the true payload.  Zone
+    ``MAX_BROADCAST_ZONES`` therefore gauges the true payload.  Zone
     attribute columns rejoin after the refine on ``zone_id`` (broadcast when
     gated on, shuffle otherwise)."""
     release_caches()
     zones = zones.withColumnRenamed(zone_wkt_col, "_zwkt")
-    planned_tier, broadcast_ok, catalog = _plan_zone_layer(
-        zones, "_zwkt", cfg, max_broadcast_zones
-    )
-    if cover_bits is None:
-        cover_bits = planned_tier
+    cover_bits, _, catalog = _plan_zone_layer(zones, "_zwkt")
     zcells = zones.withColumn(
-        "_cell", F.explode(cover_cells_udf(cover_bits, cfg)(F.col("_zwkt")))
+        "_cell", F.explode(cover_cells_udf(cover_bits)(F.col("_zwkt")))
     )
 
     fminx, fminy, fmaxx, fmaxy = (F.col(c) for c in feature_bbox_cols)
-    fcover = cover_cells_bbox_udf(cover_bits, cfg)(fminx, fminy, fmaxx, fmaxy)
+    fcover = cover_cells_bbox_udf(cover_bits)(fminx, fminy, fmaxx, fmaxy)
     fcells = features.withColumn("_cell", F.explode(fcover))
 
     within = compare_op == "CONTAINS"

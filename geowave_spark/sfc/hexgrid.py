@@ -1,12 +1,12 @@
 """H3-family hexagonal cell backend: axial hex grid + kRing expansion.
 
-The north star names "H3/S2 cells"; `sfc/s2cube.py` is the S2-family
-backend, this module is the H3-family one: hexagonal cells addressed in
-axial coordinates with translation-invariant kRing neighbourhoods — the
-property that makes H3's ring-expansion kNN a pure equi-join.  Implemented
-from the published hex-grid math (axial/cube coordinates, cube rounding,
-kRing — the construction documented by the H3 project and Red Blob Games'
-hexagonal-grids reference), no H3 code.
+The north star names "H3/S2 cells"; `operators/indexing.py::with_s2_bins`
+is the S2-family backend, this module is the H3-family one: hexagonal
+cells addressed in axial coordinates with translation-invariant kRing
+neighbourhoods — the property that makes H3's ring-expansion kNN a pure
+equi-join.  Implemented from the published hex-grid math (axial/cube
+coordinates, cube rounding, kRing — the construction documented by the H3
+project and Red Blob Games' hexagonal-grids reference), no H3 code.
 
 Differences from Uber H3, stated honestly:
 

@@ -9,14 +9,12 @@ SFC cell assignment) into a streaming plan:
     readStream (file source / kafka) -> with_geometry -> with_point_cells
       -> writeStream parquet sink, partitioned by tier, exactly-once via the
          sink's checkpoint + offset log
-    plus event-time windowed per-cell counts with a watermark for late data.
 
 Every transform is the exact batch code path (same UDFs, same columns), so
 streaming output equals a batch run over the same files — asserted in
 tests/test_streaming.py with trigger(availableNow) against the batch plan.
 
-At scale: the file source lists incrementally (maxFilesPerTrigger), state in
-the windowed agg is bounded by the watermark horizon x active cells, and the
+At scale: the file source lists incrementally (maxFilesPerTrigger), and the
 sink layout matches the batch table layout (tier partitions, cell-sorted
 within files) so downstream queries cannot tell the difference.
 """
@@ -27,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geowave_spark.extract import with_geometry
-from geowave_spark.operators.indexing import cell_at_tier, with_point_cells
+from geowave_spark.operators.indexing import with_point_cells
 from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig
 
 DOCS_SCHEMA = (
@@ -151,32 +149,3 @@ def write_indexed_stream(
     if available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def windowed_cell_counts(
-    indexed: DataFrame,
-    ts_col: str = "event_ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    cell_bits: int = 11,
-    cfg: SpatialConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Event-time tumbling per-cell counts with late-data watermark —
-    the streaming version of the K6 temporal-bin + cell group-by.  State is
-    bounded: watermark expires windows, cells are finite at the chosen tier.
-    """
-    coarse = cell_at_tier(F.col("cell"), cfg.finest, cell_bits)
-    # watermarks require TIMESTAMP (tz-aware); fixtures are NTZ — with the
-    # session tz pinned to UTC the cast is a no-op on the instant
-    indexed = indexed.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        indexed.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), coarse.alias("cell"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "cell",
-            "n",
-        )
-    )

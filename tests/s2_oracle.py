@@ -1,8 +1,9 @@
-"""S2-style cube-face Hilbert cells: the sphere-native cell backend.
+"""S2-style cube-face Hilbert cells in numpy: the test oracle for the
+engine's Catalyst cube-face bins (`operators/indexing.py::with_s2_bins`).
 
 The engine's primary index is the reference-mirroring tiered lat/lon SFC
-(`sfc/tiered.py`); this module adds the H3/S2-family alternative the north
-star names: cells from projecting the sphere onto 6 cube faces, applying
+(`sfc/tiered.py`); the S2-family alternative the north star names
+bins cells by projecting the sphere onto 6 cube faces, applying
 the S2 quadratic area-correcting transform, and Hilbert-ordering each face
 (the construction published in the S2 geometry library docs — implemented
 here from the published math, no S2 code).
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .hilbert import hilbert_decode, hilbert_encode
+from geowave_spark.sfc.hilbert import hilbert_decode, hilbert_encode
 
 MAX_S2_BITS = 30  # 3 face bits + 60 hilbert bits = 63: fits signed int64
 

@@ -25,7 +25,7 @@ def _np_points(pts):
 
 class TestKMeans:
     def test_matches_numpy_lloyd(self, spark, pts_small):
-        from geowave_spark.operators.kmeans_ref import lloyd_reference
+        from kmeans_oracle import lloyd_reference
         from geowave_spark.operators.clustering import kmeans
 
         assign, centroids = kmeans(pts_small, k=5, max_iters=8)

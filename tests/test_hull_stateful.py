@@ -1,6 +1,4 @@
-"""Convex hulls per cluster vs python oracle; stateful streaming dedup."""
-
-import shutil
+"""Convex hulls per cluster vs python oracle; concave (dig) hulls."""
 
 import numpy as np
 import pytest
@@ -43,131 +41,6 @@ class TestHull:
         # allow vertices themselves to be reported either way
         inside = pg.contains_points(xy[:, 0], xy[:, 1])
         assert inside.sum() >= len(xy) - row.n_vertices
-
-
-class TestStatefulDedup:
-    def test_dedup_across_batches(self, spark, tmp_path):
-        from geowave_spark.streaming.stateful import streaming_exact_dedup
-
-        in_dir = tmp_path / "docs_in"
-        in_dir.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "out")
-
-        # batch 1: ids 0..49 with 10 distinct texts; batch 2: 50..99 SAME texts
-        df1 = spark.range(50).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("text-"), (F.col("id") % 10).cast("string")).alias("text"),
-        )
-        df1.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b1"))
-        shutil.copy(next((tmp_path / "b1").glob("*.parquet")), in_dir / "b1.parquet")
-
-        schema = "doc_id long, text string"
-        def run_once():
-            stream = spark.readStream.schema(schema).parquet(str(in_dir))
-            q = (
-                streaming_exact_dedup(stream)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_once()
-        n1 = spark.read.parquet(out).count()
-        assert n1 == 10  # 10 distinct texts survive batch 1
-
-        df2 = spark.range(50, 100).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("text-"), (F.col("id") % 10).cast("string")).alias("text"),
-        )
-        df2.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "b2"))
-        shutil.copy(next((tmp_path / "b2").glob("*.parquet")), in_dir / "b2.parquet")
-        run_once()
-        n2 = spark.read.parquet(out).count()
-        assert n2 == 10  # nothing new: all batch-2 texts already seen (state)
-
-
-class TestDedupTtl:
-    """TTL expiry semantics of the stateful dedup function, driven through a
-    GroupState stub (the interface contract applyInPandasWithState provides)."""
-
-    class _State:
-        def __init__(self, now=0):
-            self._v = None
-            self.now = now
-            self.hasTimedOut = False
-            self.timeout_set = None
-            self.removed = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v, self.removed = None, True
-
-        def getCurrentProcessingTimeMs(self):
-            return self.now
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_set = ms
-
-    def _batch(self, ids_hashes):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {"doc_id": [i for i, _ in ids_hashes], "text_md5": [h for _, h in ids_hashes]}
-        )
-
-    def test_ttl_expires_idle_hashes(self):
-        from geowave_spark.streaming.stateful import make_dedup_fn
-
-        fn = make_dedup_fn(ttl_ms=1000)
-        st = self._State(now=0)
-        out1 = list(fn(("a",), iter([self._batch([(1, "h1"), (2, "h2")])]), st))
-        assert sorted(out1[0]["doc_id"]) == [1, 2]
-        assert st.timeout_set == 1000
-
-        # within TTL: h1 is a dup, its stamp refreshes
-        st.now = 500
-        out2 = list(fn(("a",), iter([self._batch([(3, "h1")])]), st))
-        assert out2 == []
-
-        # h2 idle past TTL -> re-emitted; h1 refreshed at 500 -> still a dup
-        st.now = 1400
-        out3 = list(fn(("a",), iter([self._batch([(4, "h2"), (5, "h1")])]), st))
-        assert sorted(out3[0]["doc_id"]) == [4]
-
-    def test_unbounded_mode_never_expires(self):
-        from geowave_spark.streaming.stateful import make_dedup_fn
-
-        fn = make_dedup_fn(ttl_ms=None)
-        st = self._State()
-        list(fn(("a",), iter([self._batch([(1, "h1")])]), st))
-        assert st.timeout_set is None
-        out = list(fn(("a",), iter([self._batch([(2, "h1")])]), st))
-        assert out == []
-
-    def test_group_timeout_drops_state(self):
-        from geowave_spark.streaming.stateful import make_dedup_fn
-
-        fn = make_dedup_fn(ttl_ms=1000)
-        st = self._State()
-        list(fn(("a",), iter([self._batch([(1, "h1")])]), st))
-        st.hasTimedOut = True
-        assert list(fn(("a",), iter([]), st)) == []
-        assert st.removed
 
 
 class TestConcaveHull:

@@ -5,7 +5,8 @@ name only fails when some rare path runs.  This walks the source with
 ``ast`` — no imports executed, no Spark — and checks that each
 ``from geowave_spark.X import Y`` (absolute or relative, at any depth)
 names a module that exists and binds ``Y`` at module level or as a
-submodule.
+submodule.  The same walk, followed from the entry points, checks that no
+package module is reachable from tests alone.
 """
 
 from __future__ import annotations
@@ -104,3 +105,51 @@ def test_no_source_names_the_checkout_path():
         if root in line
     ]
     assert not hits, "\n".join(hits)
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Package modules a file imports, at any depth: ``import a.b``,
+    ``from a import b`` (``b`` a module or a name) and relative forms.
+    Importing a module also imports every package above it."""
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            mods = [a.name for a in node.names if a.name.split(".")[0] == PKG]
+        elif isinstance(node, ast.ImportFrom) and (mod := _target(path, node)):
+            mods = [mod] + [f"{mod}.{a.name}" for a in node.names]
+        else:
+            continue
+        for mod in mods:
+            parts = mod.split(".")
+            out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return {m for m in out if _module_path(m) is not None}
+
+
+def test_every_package_module_is_reached():
+    """Every module under the package is imported, directly or through
+    other modules, from an entry point: the query surfaces, the CLI, the
+    bench, the driver entry, ``tools/`` or ``perfbench/``.  A module only
+    tests import is dead code (or a test oracle that belongs in tests/)."""
+    roots = [
+        REPO / PKG / "queries.py",
+        REPO / PKG / "queries_text.py",
+        REPO / PKG / "cli.py",
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        *sorted((REPO / "tools").rglob("*.py")),
+        *sorted((REPO / "perfbench").rglob("*.py")),
+    ]
+    reached: set[Path] = set()
+    stack = list(roots)
+    while stack:
+        path = stack.pop()
+        if path in reached:
+            continue
+        reached.add(path)
+        stack += [_module_path(m) for m in _imported_modules(path)]
+    unreached = sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / PKG).rglob("*.py")
+        if p not in reached
+    )
+    assert not unreached, "no entry point reaches:\n" + "\n".join(unreached)

@@ -33,21 +33,21 @@ class TestPipJoin:
         }
         assert a == b and len(a) > 0
 
-    def test_broadcast_autogate_fallback_same_rows(self, spark, geo001):
-        """A zone layer larger than max_broadcast_zones must auto-fall-back to
+    def test_broadcast_autogate_fallback_same_rows(self, spark, geo001, monkeypatch):
+        """A zone layer larger than MAX_BROADCAST_ZONES must auto-fall-back to
         the shuffle path (no unconditional driver collect of the catalog) and
         still produce the identical pair set."""
+        from geowave_spark.operators import spatial_join
         from geowave_spark.operators.spatial_join import pip_join
 
         pts = _pts(spark, geo001)
         zones = _zones(spark, geo001).filter(F.col("zclass") == "convex")
         a = {(r.fid, r.zone_id) for r in pip_join(pts, zones).select("fid", "zone_id").collect()}
         # force the gate: the convex layer has > 2 distinct geometries
+        monkeypatch.setattr(spatial_join, "MAX_BROADCAST_ZONES", 2)
         b = {
             (r.fid, r.zone_id)
-            for r in pip_join(pts, zones, max_broadcast_zones=2)
-            .select("fid", "zone_id")
-            .collect()
+            for r in pip_join(pts, zones).select("fid", "zone_id").collect()
         }
         c = {
             (r.fid, r.zone_id)
@@ -390,11 +390,13 @@ class TestSkew:
 
 class TestKdeScalable:
     def test_approx_bands_close_to_exact(self, spark, geo001):
-        from geowave_spark.operators.kde import kde_pyramid, kde_pyramid_scalable
+        from geowave_spark.operators.kde import kde_pyramid
 
         pts = _pts(spark, geo001)
         exact = kde_pyramid(pts, min_level=4, max_level=5, tile_size=2)
-        approx = kde_pyramid_scalable(pts, min_level=4, max_level=5, tile_size=2)
+        approx = kde_pyramid(
+            pts, min_level=4, max_level=5, tile_size=2, percentile_mode="approx"
+        )
         e = {(r.level, r.cell_id): (r.weight_scaled, r.normalized, r.percentile) for r in exact.collect()}
         a = {(r.level, r.cell_id): (r.weight_scaled, r.normalized, r.percentile) for r in approx.collect()}
         assert set(e) == set(a)
@@ -503,6 +505,34 @@ class TestArealJoin:
                 if geom_within_prepared(d.geom_wkt, pg):
                     want.add((d.doc_id, zid))
         assert within == want
+
+
+def test_areal_shuffle_path_same_rows(spark, geo001, monkeypatch):
+    """With the broadcast gate shut, areal_join takes its shuffle branch
+    (zone WKT rides the build side, no catalog) and returns the same
+    (doc_id, zone_id) pairs as the broadcast run, for both predicates."""
+    from geowave_spark.extract import with_geometry
+    from geowave_spark.operators import spatial_join
+    from geowave_spark.operators.spatial_join import areal_join
+
+    docs = with_geometry(
+        spark.read.parquet(str(geo001 / "docs.parquet")).limit(500)
+    ).select("doc_id", "geom_wkt", "minx", "miny", "maxx", "maxy")
+    zones = spark.read.parquet(str(geo001 / "zones.parquet")).filter(
+        F.col("zclass").isin("convex", "concave")
+    )
+
+    def pairs(df):
+        return {(r.doc_id, r.zone_id) for r in df.select("doc_id", "zone_id").collect()}
+
+    for op in ("OVERLAPS", "CONTAINS"):
+        want = pairs(areal_join(docs, zones, compare_op=op))
+        with monkeypatch.context() as m:
+            m.setattr(spatial_join, "MAX_BROADCAST_ZONES", 0)
+            shuffled = areal_join(docs, zones, compare_op=op)  # gate decided here
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "_zidx" not in plan, "broadcast catalog still in the plan"
+        assert pairs(shuffled) == want and len(want) > 0, op
 
 
 class TestGeodesicKnn:

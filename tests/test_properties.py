@@ -343,59 +343,6 @@ class TestVisibilityGrammar:
         assert evaluate_visibility(text, auths) == self._eval_ast(ast, auths)
 
 
-class TestMediaCodecs:
-    """The GIF codec (still and animated) under corrupt input: every
-    truncation and bit flip of a valid payload decodes or raises
-    ValueError."""
-
-    def test_corrupt_payloads_keep_the_valueerror_contract(self):
-        """Decoders run inside Spark tasks over untrusted corpora: every
-        truncation and single-bit flip of a valid payload must either decode
-        or raise ValueError — never a bare KeyError/IndexError/struct.error,
-        and never a giant allocation from corrupt dimension fields.
-        (Seeded, deterministic; ~350 mutations per payload.)"""
-        import numpy as np
-
-        from geowave_spark.functions.gifcodec import (
-            gif_anim_bytes,
-            gif_bytes,
-            gif_decode,
-            gif_frames,
-        )
-
-        rng = np.random.RandomState(0)
-        img = rng.randint(0, 256, (9, 7, 3)).astype(np.uint8)
-        pal = rng.randint(0, 256, (8, 3)).astype(np.uint8)[rng.randint(0, 8, (9, 7))]
-        payloads = {
-            "gif": (gif_bytes(pal, interlace=True), gif_decode),
-            "gif_anim": (
-                gif_anim_bytes(
-                    np.repeat((img // 51 * 51)[None], 3, axis=0),
-                    fps=20,
-                    mode="patch_transparent",
-                ),
-                gif_frames,
-            ),
-        }
-        for name, (buf, dec) in payloads.items():
-            cases = [buf[:cut] for cut in range(1, len(buf), max(1, len(buf) // 50))]
-            for _ in range(300):
-                b = bytearray(buf)
-                b[rng.randint(0, len(b))] ^= 1 << rng.randint(0, 8)
-                cases.append(bytes(b))
-            for payload in cases:
-                try:
-                    dec(payload)
-                except ValueError:
-                    pass  # the contract
-                # anything else propagates and fails the test, naming `name`
-                except Exception as e:  # pragma: no cover - diagnostic
-                    raise AssertionError(
-                        f"{name} decoder broke the ValueError contract: "
-                        f"{type(e).__name__}: {e}"
-                    ) from e
-
-
 # cell size 0.5: the k/2 grid puts points exactly on cell edges, including
 # negative ones, where floor() is the easiest to get wrong
 _COORD = st.one_of(

@@ -199,36 +199,6 @@ class TestRasterTiling:
         assert "MapInPandas" in plan  # the chop stage, nothing else
 
 
-class TestRasterPipeline:
-    def test_resume_and_invalidation(self, spark, tmp_path):
-        from geowave_spark.datagen import ensure_coverages
-        from geowave_spark.plans.raster_pipeline import run_raster_pipeline
-
-        d = ensure_coverages("sf0.001")
-        covs = str(d / "coverages.parquet")
-        root = str(tmp_path / "rck")
-
-        pipe1, s1 = run_raster_pipeline(spark, covs, root)
-        r1 = {(r.tier, r.xb, r.yb, r.checksum) for r in s1.collect()}
-        assert len(r1) > 0
-        assert [s["skipped"] for s in pipe1.summary()] == [False, False, False]
-
-        # full resume
-        pipe2, s2 = run_raster_pipeline(spark, covs, root)
-        assert [s["skipped"] for s in pipe2.summary()] == [True, True, True]
-        assert {(r.tier, r.xb, r.yb, r.checksum) for r in s2.collect()} == r1
-
-        # pyramid flag change invalidates the chop and everything downstream
-        pipe3, s3 = run_raster_pipeline(spark, covs, root, build_pyramid=True)
-        assert [s["skipped"] for s in pipe3.summary()] == [False, False, False]
-        r3 = {(r.tier, r.xb, r.yb, r.checksum) for r in s3.collect()}
-        # pyramid adds cells (coarser levels) — more rows, superset of cell
-        # coords; checksums at shared coarse tiers legitimately change when a
-        # finer coverage now also ingests there (cross-coverage mosaic)
-        assert len(r3) > len(r1)
-        assert {(t, x, y) for t, x, y, _ in r1} <= {(t, x, y) for t, x, y, _ in r3}
-
-
 class TestBicubic:
     """The two JAI cubic kernels (a=-0.5 INTERP_BICUBIC, a=-1.0
     INTERP_BICUBIC_2) share bilinear's border/nodata rules."""

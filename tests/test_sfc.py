@@ -387,8 +387,9 @@ class TestReferenceTieredVectors:
 
 
 class TestS2Cube:
-    """S2-style cube-face Hilbert cells (sfc/s2cube.py): the H3/S2-family
-    backend — round-trips, prefix property, area-skew bound vs lat/lon."""
+    """S2-style cube-face Hilbert cells (the numpy oracle `s2_oracle.py`):
+    the H3/S2-family backend — round-trips, prefix property, area-skew
+    bound vs lat/lon."""
 
     def _sphere_sample(self, n=20000):
         import numpy as np
@@ -401,7 +402,7 @@ class TestS2Cube:
     def test_roundtrip_and_prefix(self):
         import numpy as np
 
-        from geowave_spark.sfc.s2cube import s2_cell_center, s2_cell_ids, s2_parent
+        from s2_oracle import s2_cell_center, s2_cell_ids, s2_parent
 
         lon, lat = self._sphere_sample()
         bits = 12
@@ -425,7 +426,7 @@ class TestS2Cube:
         on a polar-heavy sample."""
         import numpy as np
 
-        from geowave_spark.sfc.s2cube import s2_cell_ids
+        from s2_oracle import s2_cell_ids
 
         rng = np.random.RandomState(1)
         lon = rng.uniform(-180, 180, 30000)
@@ -449,7 +450,7 @@ class TestS2Cube:
 
         from geowave_spark.operators.indexing import with_s2_bins
         from geowave_spark.sfc.hilbert import hilbert_decode
-        from geowave_spark.sfc.s2cube import s2_cell_ids
+        from s2_oracle import s2_cell_ids
 
         pts = spark.read.parquet(str(geo001 / "points.parquet")).limit(2000)
         rows = with_s2_bins(pts, bits=8).select("fid", "lon", "lat", "s2_face", "s2_ib", "s2_jb").collect()

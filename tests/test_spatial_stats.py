@@ -236,66 +236,6 @@ class TestGeofenceTransitions:
         assert geofence_transitions(df, self._zones(spark)).count() == 0
 
 
-class TestStreamingGeofence:
-    """The transition stream with cross-batch entity state: an ordered
-    two-batch replay of the static corpus must reproduce the batch scan
-    bit-for-bit (state carries each entity's last zone over the batch
-    boundary)."""
-
-    def test_stream_equals_batch_across_two_batches(self, spark, geo001, tmp_path):
-        import shutil
-
-        from geowave_spark.operators.geofence import geofence_transitions
-        from geowave_spark.streaming.stateful import streaming_geofence
-
-        zones = spark.read.parquet(str(geo001 / "zones.parquet")).filter(
-            F.col("zclass") == "convex"
-        )
-        pts = spark.read.parquet(str(geo001 / "points.parquet"))
-        # time-split so every entity's earlier pings land in file 1 —
-        # the cross-batch ordering contract the operator documents
-        cut_ts = pts.select(F.expr("percentile(unix_millis(cast(event_ts as timestamp)), 0.5)")).first()[0]
-        early = pts.filter(F.unix_millis(F.col("event_ts").cast("timestamp")) <= cut_ts)
-        late = pts.subtract(early)
-        early.coalesce(1).write.parquet(str(tmp_path / "h1"))
-        late.coalesce(1).write.parquet(str(tmp_path / "h2"))
-        inp = tmp_path / "in"
-        inp.mkdir()
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-        def run_once():
-            stream = spark.readStream.schema(pts.schema).parquet(str(inp))
-            q = (
-                streaming_geofence(stream, zones)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        for f in (tmp_path / "h1").glob("*.parquet"):
-            shutil.copy(f, inp / "part-000.parquet")
-        run_once()
-        for f in (tmp_path / "h2").glob("*.parquet"):
-            shutil.copy(f, inp / "part-001.parquet")
-        run_once()
-
-        got = [tuple(r) for r in spark.read.parquet(out).collect()]
-        want = {tuple(r) for r in geofence_transitions(pts, zones).collect()}
-        assert len(got) == len(set(got)), "stream duplicated transitions"
-        assert set(got) == want and want, "stream diverged from the batch scan"
-
-    def test_batch_frame_refused(self, spark, geo001):
-        from geowave_spark.streaming.stateful import streaming_geofence
-
-        zones = spark.read.parquet(str(geo001 / "zones.parquet"))
-        pts = spark.read.parquet(str(geo001 / "points.parquet"))
-        with pytest.raises(ValueError, match="streaming"):
-            streaming_geofence(pts, zones)
-
-
 class TestSimplifyTracks:
     """Distributed Douglas-Peucker vs a straightforward recursive reference
     implementation (the DuckDB recursive-CTE hash parity lives in the driver

@@ -210,3 +210,37 @@ class TestHourlyPeriodicity:
         df = spark.createDataFrame([], "user_id bigint, ts timestamp")
         with _pt.raises(ValueError):
             hourly_periodicity(df, min_events=0)
+
+    def test_rows_independent_of_session_timezone(self, spark):
+        """q_hourly_periodicity, and the operator over a TIMESTAMP column
+        whose instants straddle a daylight-saving change, return the same
+        rows under a UTC and an America/Los_Angeles session.  (The fixture's
+        naive timestamps load as TIMESTAMP_NTZ; the DST frame is what a
+        session-tz ``hour()`` gets wrong: 12:00 UTC is 04:00 PST before
+        2021-03-14 and 05:00 PDT after it.)"""
+        from test_oracle_parity import SF_DIR
+
+        from geowave_spark.operators.periodicity import hourly_periodicity
+        from geowave_spark.queries import q_hourly_periodicity
+
+        noon_utc = [
+            (1, dt.datetime(2021, 3, d, 12, 0, tzinfo=dt.timezone.utc))
+            for d in range(1, 32)
+        ]
+        dst = spark.createDataFrame(noon_utc, "user_id bigint, ts timestamp")
+
+        def rows():
+            q = q_hourly_periodicity(spark, SF_DIR).collect()
+            return sorted(map(tuple, q)), sorted(map(tuple, hourly_periodicity(dst).collect()))
+
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "UTC")
+            utc = rows()
+            spark.conf.set(key, "America/Los_Angeles")
+            la = rows()
+        finally:
+            spark.conf.set(key, before)
+        assert utc[0] and utc[1] == [(1, 31, 1, 713_000_000)]
+        assert la == utc
