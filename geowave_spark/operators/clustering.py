@@ -17,7 +17,7 @@ Mirrors the reference analytics suite re-expressed as DataFrame loops:
   min-label propagation over core-core edges with a
   pointer-jumping step each round (every node also adopts its current
   label's label), so rounds are logarithmic in cluster hop diameter rather
-  than linear; non-convergence within ``max_rounds`` raises instead of
+  than linear; non-convergence within ``_MAX_ROUNDS`` raises instead of
   silently splitting clusters.
 
 Determinism: cluster ids are the minimum member id of the component, ties in
@@ -31,10 +31,13 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from geowave_spark.plans.lineage import truncate_plan
+from geowave_spark.plans.lineage import LOCAL_ROUNDS
 
 from .knn import distance_join
 from .neighborhood import SPACE_TIME, neighbor_join
+
+# label-propagation round bound (pointer jumping needs O(log hop-diameter))
+_MAX_ROUNDS = 30
 
 
 def kmeans(
@@ -266,7 +269,6 @@ def dbscan(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    max_rounds: int = 30,
     checkpointer=None,
 ) -> DataFrame:
     """DBSCAN via cell-bucketed edges + min-label propagation.
@@ -292,7 +294,7 @@ def dbscan(
         .select("a", "b")
     )
     return _cluster_from_edges(
-        edges, min_pts, id_col, max_rounds, checkpointer=checkpointer
+        edges, min_pts, id_col, checkpointer=checkpointer
     )
 
 
@@ -300,7 +302,6 @@ def _cluster_from_edges(
     edges: DataFrame,
     min_pts: int,
     id_col: str,
-    max_rounds: int = 30,
     checkpointer=None,
 ) -> DataFrame:
     """Density clustering over symmetric directed neighbor edges (a, b):
@@ -309,42 +310,37 @@ def _cluster_from_edges(
     propagation with pointer jumping over core-core edges, border points
     attached to their minimum core neighbor.
 
-    ``checkpointer`` (a ``plans.lineage.RoundCheckpointer``) lands the
-    core-core edge set as durable static state and each propagation
-    round's labels as durable round state, so a killed run resumes at the
-    last committed round."""
+    The core-core edge set is a ``stage`` and each propagation round's
+    labels a round of one barrier: ``checkpointer`` (a
+    ``plans.lineage.RoundCheckpointer``, durable, so a killed run resumes
+    at the last committed round) or ``plans.lineage.LOCAL_ROUNDS``
+    (``truncate_plan``).  Propagation that has not converged after
+    ``_MAX_ROUNDS`` rounds raises ``RuntimeError``."""
     edges = edges.cache()
     deg = edges.groupBy("a").agg(F.count("*").alias("_deg"))
     core = deg.filter(F.col("_deg") >= min_pts - 1).select(F.col("a").alias("id"))
     core = core.cache()
 
-    cc_edges = (
-        edges.join(core.withColumnRenamed("id", "a"), "a")
+    ck = checkpointer or LOCAL_ROUNDS
+    cc_edges = ck.stage(
+        "cc_edges",
+        lambda: edges.join(core.withColumnRenamed("id", "a"), "a")
         .join(core.withColumnRenamed("id", "b"), "b")
-        .select("a", "b")
+        .select("a", "b"),
     )
-
-    labels = core.withColumn("label", F.col("id"))
-    converged = False
-    start_round = 0
-    if checkpointer is not None:
-        static = checkpointer.load_static("cc_edges")
-        if static is not None:
-            cc_edges = static[0]
-        else:
-            cc_edges, _ = checkpointer.save_static("cc_edges", cc_edges)
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            rno, dfs, extras = resumed
-            labels = dfs["labels"]
-            start_round = rno + 1
-            if extras.get("done"):
-                converged = True
+    resumed = ck.resume()
+    if resumed is None:
+        rnd, labels, done = -1, core.withColumn("label", F.col("id")), False
     else:
-        cc_edges = cc_edges.cache()
-    for rnd in range(start_round, max_rounds):
-        if converged:
-            break
+        rnd, dfs, extras = resumed
+        labels, done = dfs["labels"], bool(extras.get("done"))
+    while not done:
+        rnd += 1
+        if rnd >= _MAX_ROUNDS:
+            raise RuntimeError(
+                f"dbscan label propagation did not converge within {_MAX_ROUNDS} "
+                "rounds (components this deep are pathological at sane eps)"
+            )
         # one propagation round: every core takes min(own, neighbors' labels)
         neigh = (
             cc_edges.join(labels.withColumnRenamed("id", "b"), "b")
@@ -370,45 +366,18 @@ def _cluster_from_edges(
                 ),
             )
         )
-        if checkpointer is not None:
-            old = labels.withColumnRenamed("label", "old")
-            seen: dict = {}
-
-            def _extras(dfs: dict) -> dict:
-                ch = (
-                    dfs["labels"]
-                    .join(old, "id")
-                    .filter(F.col("label") != F.col("old"))
-                    .take(1)
-                )
-                seen["changed"] = bool(ch)
-                return {"done": not ch}
-
-            labels = checkpointer.save_round(
-                rnd, {"labels": new_labels}, extras_fn=_extras
-            )["labels"]
-            if not seen["changed"]:
-                converged = True
-                break
-        else:
-            # truncate the iterative lineage each round (stats-resetting:
-            # plain localCheckpoint compounds estimated sizeInBytes across
-            # rounds — see plans.lineage.truncate_plan)
-            new_labels = truncate_plan(new_labels)
-            changed = (
-                new_labels.join(labels.withColumnRenamed("label", "old"), "id")
+        old = labels.withColumnRenamed("label", "old")
+        saved, extras = ck.save_round(
+            rnd,
+            {"labels": new_labels},
+            extras_fn=lambda dfs: {
+                "done": not dfs["labels"]
+                .join(old, "id")
                 .filter(F.col("label") != F.col("old"))
                 .take(1)
-            )
-            labels = new_labels
-            if not changed:
-                converged = True
-                break
-    if not converged:
-        raise RuntimeError(
-            f"dbscan label propagation did not converge within {max_rounds} rounds; "
-            "raise max_rounds (components this deep are pathological at sane eps)"
+            },
         )
+        labels, done = saved["labels"], extras["done"]
 
     core_out = labels.select("id", "label", F.lit(True).alias("is_core"))
     border = (
@@ -484,7 +453,6 @@ def st_dbscan(
     lon_col: str = "lon",
     lat_col: str = "lat",
     ts_col: str = "event_ts",
-    max_rounds: int = 30,
     checkpointer=None,
 ) -> DataFrame:
     """ST-DBSCAN (Birant & Kut, Data & Knowledge Engineering 2007):
@@ -507,5 +475,5 @@ def st_dbscan(
         raise ValueError("eps_s and eps_t_s must be positive")
     edges = _st_edges(points, eps_s, eps_t_s, id_col, lon_col, lat_col, ts_col)
     return _cluster_from_edges(
-        edges, min_pts, id_col, max_rounds, checkpointer=checkpointer
+        edges, min_pts, id_col, checkpointer=checkpointer
     )

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from geowave_spark.plans.lineage import truncate_plan
+from geowave_spark.plans.lineage import LOCAL_ROUNDS
 
 from geowave_spark.functions.text import MOD, md5_long, tokens, word_ngrams
 
@@ -305,11 +305,11 @@ def contamination_pairs(
 # finish took 1.8 s on a shuffled chain and 3.2 s on random edges, where the
 # distributed rounds took 24 s and 7.5 s
 _LOCAL_EDGES = 1 << 18
+# round bound: the rounds converge in O(log n), so hitting it is a fault
+_MAX_ROUNDS = 50
 
 
-def connected_components(
-    edges: DataFrame, max_rounds: int = 50, checkpointer=None
-) -> DataFrame:
+def connected_components(edges: DataFrame, checkpointer=None) -> DataFrame:
     """Connected components over an undirected edge list ``(u, v)`` via
     alternating large-star / small-star rounds (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14).  Returns ``(u, label)``
@@ -317,12 +317,12 @@ def connected_components(
     node id in its component; both columns keep the edge columns' type.
 
     Small graphs finish on the driver: the oriented, distinct edge set is
-    materialized once (``truncate_plan``) and at most ``_LOCAL_EDGES + 1``
-    of its rows are collected.  When the whole set fits (at most
-    ``_LOCAL_EDGES`` edges, a few MB of ids), a union-find on the driver
-    labels it and the labels come back as a small DataFrame — one
-    collect instead of several rounds of jobs.  The choice is made from the
-    observed edge count, not an estimate; Python's ``<`` on ints and
+    committed once (round -1 of the round barrier) and at most
+    ``_LOCAL_EDGES + 1`` of its rows are collected.  When the whole set
+    fits (at most ``_LOCAL_EDGES`` edges, a few MB of ids), a union-find on
+    the driver labels it and the labels come back as a small DataFrame —
+    one collect instead of several rounds of jobs.  The choice is made from
+    the observed edge count, not an estimate; Python's ``<`` on ints and
     ``str`` (code-point order) is Spark's order on longs and UTF-8
     strings, so both paths give the same minimum.
 
@@ -333,15 +333,17 @@ def connected_components(
     near-dup chains (a~b~c~... boilerplate gradients) produce long paths at
     corpus scale.  Every pass is a plain equi-join/agg on the node id
     (uniform after hashing); nothing crosses the driver but the bounded
-    collect above and a per-round convergence scalar, and each round's
-    edge set is ``truncate_plan``-ed so the iterative plan never grows.
+    collect above and a per-round convergence scalar.  A run that has not
+    converged after ``_MAX_ROUNDS`` rounds raises ``RuntimeError``.
 
-    ``checkpointer`` (a ``plans.lineage.RoundCheckpointer``) swaps the
-    executor-local barrier for durable per-round parquet state and always
-    runs the rounds (no driver finish): a killed run re-invoked with the
-    same checkpointer config resumes from the last committed round instead
-    of round 0 (the reference durably chains every analytic iteration —
-    `MapReduceJobController.java`).
+    Every round goes through one barrier: ``checkpointer`` (a
+    ``plans.lineage.RoundCheckpointer``) or, by default,
+    ``plans.lineage.LOCAL_ROUNDS`` (``truncate_plan``, so the iterative
+    plan never grows).  A durable call takes the same driver-finish rule
+    after committing or resuming the edge set, and a killed run re-invoked
+    with the same checkpointer config resumes from the last committed round
+    instead of round 0 (the reference durably chains every analytic
+    iteration — `MapReduceJobController.java`).
 
     Each call logs one line on the ``geowave_spark`` logger: the path
     taken, and its edge count (driver) or the bound it exceeded, the round
@@ -352,43 +354,39 @@ def connected_components(
     emits (x, min) with x > min — so the star-forest fixpoint IS the
     component labeling.
     """
-    e = (
-        edges.select(F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-    )
-    prev_sig = None
-    start_round = 0
-    if checkpointer is not None:
-        path = "checkpointed rounds"
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            rno, dfs, extras = resumed
-            e = dfs["edges"]
-            if extras.get("converged"):
-                _log.info(
-                    "connected_components: %s, resumed converged at round %d, 0 rounds",
-                    path, rno,
-                )
-                return _cc_labels(e)
-            ps = extras.get("sig")
-            prev_sig = tuple(ps) if ps else None
-            start_round = rno + 1
-        else:
-            e = checkpointer.save_round(-1, {"edges": e})["edges"]
-            start_round = 0
+    ck = checkpointer or LOCAL_ROUNDS
+    resumed = ck.resume()
+    if resumed is None:
+        oriented = (
+            edges.select(F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
+        )
+        e = ck.save_round(-1, {"edges": oriented})[0]["edges"]
+        start, extras = -1, {}
     else:
-        e = truncate_plan(e)
-        head = e.limit(_LOCAL_EDGES + 1).collect()
-        if len(head) <= _LOCAL_EDGES:
-            _log.info("connected_components: driver finish, %d edges", len(head))
-            return _driver_labels(e, head)
-        path = f"rounds, over {_LOCAL_EDGES} edges"
-    sig = None
-    rounds = 0
-    for rnd in range(start_round, max_rounds):
-        rounds += 1
+        start, dfs, extras = resumed
+        e = dfs["edges"]
+    if extras.get("converged"):
+        _log.info("connected_components: resumed converged at round %d, 0 rounds", start)
+        return _cc_labels(e)
+    head = e.limit(_LOCAL_EDGES + 1).collect()
+    if len(head) <= _LOCAL_EDGES:
+        _log.info("connected_components: driver finish, %d edges", len(head))
+        return _driver_labels(e, head)
+    prev_sig = tuple(extras["sig"]) if extras.get("sig") else None
+
+    def _signature(dfs: dict) -> dict:
+        # bit_xor, not sum: the edge set is distinct so xor is a sound set
+        # signature, and it cannot overflow under ANSI mode
+        s = dfs["edges"].agg(
+            F.count("*").alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
+        ).first()
+        sig = (s["n"], s["h"])
+        return {"sig": list(sig), "converged": s["n"] == 0 or sig == prev_sig}
+
+    for rnd in range(start + 1, _MAX_ROUNDS):
         # large-star over the symmetric closure: for each u, attach every
         # strictly larger neighbor to m = min(u, Γ(u))
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -413,39 +411,21 @@ def connected_components(
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        new_e = own.union(rest).distinct()
-        # bit_xor, not sum: the edge set is distinct so xor is a sound set
-        # signature, and it cannot overflow under ANSI mode
-        _sig_agg = lambda df: df.agg(  # noqa: E731
-            F.count("*").alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")
-        ).first()
-        if checkpointer is not None:
-            seen: dict = {}
-
-            def _extras(dfs: dict) -> dict:
-                s = _sig_agg(dfs["edges"])
-                seen["sig"] = (s["n"], s["h"])
-                return {
-                    "sig": list(seen["sig"]),
-                    "converged": s["n"] == 0 or prev_sig == seen["sig"],
-                }
-
-            new_e = checkpointer.save_round(
-                rnd, {"edges": new_e}, extras_fn=_extras
-            )["edges"]
-            sig = seen["sig"]
-        else:
-            # stats-resetting round barrier (plans.lineage.truncate_plan)
-            new_e = truncate_plan(new_e)
-            s = _sig_agg(new_e)
-            sig = (s["n"], s["h"])
-        e = new_e
-        if sig[0] == 0 or prev_sig == sig:
+        saved, extras = ck.save_round(
+            rnd, {"edges": own.union(rest).distinct()}, extras_fn=_signature
+        )
+        e = saved["edges"]
+        if extras["converged"]:
             break
-        prev_sig = sig
+        prev_sig = tuple(extras["sig"])
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within {_MAX_ROUNDS} rounds "
+            "(large-star/small-star needs O(log n) rounds on any graph)"
+        )
     _log.info(
-        "connected_components: %s, %d rounds, %s edges at the last round",
-        path, rounds, sig[0] if sig else "no",
+        "connected_components: rounds, over %d edges, %d rounds, %d edges at the last round",
+        _LOCAL_EDGES, rnd - start, extras["sig"][0],
     )
     return _cc_labels(e)
 

@@ -18,8 +18,8 @@ corpus stitches into one network.
 each round relaxes only edges out of vertices whose distance improved
 last round (the Pregel/GraphX message discipline re-expressed as a
 DataFrame join), so a settled subgraph costs nothing.  Every round is
-one equi-join on vertex keys + one min-agg, both uniform; the frontier
-is localCheckpoint-ed so the iterative plan never grows, and H bounds
+one equi-join on vertex keys + one min-agg, both uniform; each round's
+state passes the round barrier so the iterative plan never grows, and H bounds
 the rounds deterministically (matching the oracle's unrolled levels).
 Weights are non-negative integers, so min-relaxation is monotone and
 the H-hop result is exactly min-plus matrix power H applied to the
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.plans.lineage import truncate_plan
+from geowave_spark.plans.lineage import LOCAL_ROUNDS
 
 __all__ = ["track_graph", "sssp_bounded", "track_graph_sql", "sssp_bounded_sql"]
 
@@ -99,54 +99,37 @@ def sssp_bounded(
     undirected (u, v, w_micro) edges.  Returns (vertex, dist_micro) for
     every vertex reachable within ``hops``.
 
-    ``checkpointer`` (a ``plans.lineage.RoundCheckpointer``) makes every
-    relaxation round durable: the symmetric edge table lands once as static
-    state, (dist, frontier) land per round, and a killed run re-invoked
-    with the same config resumes from the last committed hop."""
+    Every relaxation round goes through one barrier: ``checkpointer`` (a
+    ``plans.lineage.RoundCheckpointer``: the symmetric edge table lands
+    once as static state, (dist, frontier) land per round, and a killed run
+    re-invoked with the same config resumes from the last committed hop)
+    or ``plans.lineage.LOCAL_ROUNDS`` (``truncate_plan``)."""
     if hops < 1:
         raise ValueError("hops must be >= 1")
-    sym = edges.select("u", "v", "w_micro").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w_micro")
+    ck = checkpointer or LOCAL_ROUNDS
+    sym = ck.stage(
+        "sym",
+        lambda: edges.select("u", "v", "w_micro").union(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w_micro")
+        ),
     )
-    start_hop = 0
-    dist = frontier = None
-    if checkpointer is not None:
-        static = checkpointer.load_static("sym")
-        if static is not None:
-            sym, s_extras = static
-            source = int(s_extras["source"]) if s_extras.get("source") is not None else None
-        else:
-            if source is None:
-                source = _hub_source(sym)
-                if source is None:
-                    return sym.select(
-                        F.col("u").alias("vertex"),
-                        F.col("w_micro").alias("dist_micro"),
-                    ).limit(0)
-            sym, _ = checkpointer.save_static(
-                "sym", sym, extras={"source": int(source)}
-            )
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            rno, dfs, extras = resumed
-            if extras.get("done") or rno + 1 >= int(hops):
-                return dfs["dist"]
-            dist, frontier = dfs["dist"], dfs["frontier"]
-            start_hop = rno + 1
+    resumed = ck.resume()
+    if resumed is not None:
+        rno, dfs, extras = resumed
+        if extras.get("done"):
+            return dfs["dist"]
+        dist, frontier, start_hop = dfs["dist"], dfs["frontier"], rno + 1
     else:
-        sym = sym.localCheckpoint()
-    if source is None:
-        source = _hub_source(sym)
         if source is None:
-            return sym.select(
-                F.col("u").alias("vertex"), F.col("w_micro").alias("dist_micro")
-            ).limit(0)
-
-    if dist is None:
+            source = _hub_source(sym)
+            if source is None:
+                return sym.select(
+                    F.col("u").alias("vertex"), F.col("w_micro").alias("dist_micro")
+                ).limit(0)
         dist = sym.sparkSession.createDataFrame(
             [(int(source), 0)], "vertex bigint, dist_micro bigint"
         ).localCheckpoint()
-        frontier = dist
+        frontier, start_hop = dist, 0
     for rnd in range(start_hop, int(hops)):
         relaxed = (
             frontier.join(sym, frontier.vertex == sym.u)
@@ -162,45 +145,24 @@ def sssp_bounded(
         )
         # delta frontier: only vertices whose distance changed this round
         # propagate next round — settled subgraphs cost nothing
-        if checkpointer is not None:
-            old_dist = dist.withColumnRenamed("dist_micro", "_old")
-            saved = checkpointer.save_round(
-                rnd,
-                {
-                    "dist": new_dist,
-                    # built from the MATERIALIZED dist read-back so the
-                    # round's groupBy runs once, not twice
-                    "frontier": lambda rb: rb["dist"]
-                    .join(old_dist, "vertex", "left")
-                    .filter(
-                        F.col("_old").isNull()
-                        | (F.col("dist_micro") < F.col("_old"))
-                    )
-                    .select("vertex", "dist_micro"),
-                },
-                extras_fn=lambda dfs: {
-                    "done": dfs["frontier"].limit(1).count() == 0
-                },
-            )
-            dist, frontier = saved["dist"], saved["frontier"]
-        else:
-            # stats-resetting round barriers (plans.lineage.truncate_plan)
-            new_dist = truncate_plan(new_dist)
-            frontier = (
-                new_dist.join(
-                    dist.withColumnRenamed("dist_micro", "_old"),
-                    "vertex",
-                    "left",
-                )
+        old_dist = dist.withColumnRenamed("dist_micro", "_old")
+        saved, extras = ck.save_round(
+            rnd,
+            {
+                "dist": new_dist,
+                # built from the materialized dist so the round's groupBy
+                # runs once, not twice
+                "frontier": lambda rb: rb["dist"]
+                .join(old_dist, "vertex", "left")
                 .filter(
-                    F.col("_old").isNull()
-                    | (F.col("dist_micro") < F.col("_old"))
+                    F.col("_old").isNull() | (F.col("dist_micro") < F.col("_old"))
                 )
-                .select("vertex", "dist_micro")
-            )
-            frontier = truncate_plan(frontier)
-            dist = new_dist
-        if frontier.limit(1).count() == 0:
+                .select("vertex", "dist_micro"),
+            },
+            extras_fn=lambda dfs: {"done": dfs["frontier"].limit(1).count() == 0},
+        )
+        dist, frontier = saved["dist"], saved["frontier"]
+        if extras["done"]:
             break
     return dist
 

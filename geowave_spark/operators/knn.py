@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geowave_spark.functions.distance import EARTH_RADIUS_KM, haversine_km
-from geowave_spark.plans.lineage import truncate_plan
+from geowave_spark.plans.lineage import LOCAL_ROUNDS, truncate_plan
 
 from .neighborhood import SPACE_TIME, neighbor_join
 
@@ -237,22 +237,21 @@ def knn_join_adaptive(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    pipeline=None,
-    pipeline_config: dict | None = None,
+    checkpointer=None,
 ) -> DataFrame:
     """Ring-expansion kNN: identical output to :func:`knn_join`, but the
     search radius starts at ``max_distance * START_FRACTION`` and expands by
     ``EXPANSION``, re-running only the queries that have not yet found k
     neighbors.
 
-    Pass a :class:`geowave_spark.plans.lineage.Pipeline` as ``pipeline`` to
-    checkpoint every round durably (parquet + manifest with per-partition
-    row counters): a killed run re-invoked over the same checkpoint root
-    resumes after the last completed round — the north rule's "every join
-    stage checkpoints per-partition lineage ... so runs resume
-    mid-pipeline" on the kNN join itself.  ``pipeline_config`` goes into
-    each round's fingerprint, so changing inputs/parameters invalidates
-    stale checkpoints instead of silently reusing them.
+    Pass a :class:`geowave_spark.plans.lineage.RoundCheckpointer` as
+    ``checkpointer`` to checkpoint every round durably (parquet + manifest
+    with per-partition row counters): a killed run re-invoked with the same
+    checkpointer config resumes after the last completed round — the north
+    rule's "every join stage checkpoints per-partition lineage ... so runs
+    resume mid-pipeline" on the kNN join itself.  The checkpointer's config
+    is the rounds' fingerprint, so it must name the inputs and parameters
+    (``k`` among them) for a change to invalidate stale rounds.
 
     Why: with a generous distance bound over skewed data, the fixed-radius
     join materializes every in-distance pair (10^4+ per hot-cluster query)
@@ -264,11 +263,11 @@ def knn_join_adaptive(
     `TieredSFCIndexStrategy.java:162-195`).
 
     Driver-side loop cost: one count-aggregate job per round over <= |queries|
-    rows; round outputs are <= k*|queries| rows and are cached before the
-    final union.
+    rows; round outputs are <= k*|queries| rows and are checkpointed (the
+    round barrier's ``stage``) before the final union.
     """
     cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
-    return _adaptive(queries, points, k, max_distance_deg, _square, cols, pipeline, pipeline_config)
+    return _adaptive(queries, points, k, max_distance_deg, _square, cols, checkpointer)
 
 
 def knn_join_hexring_adaptive(
@@ -283,8 +282,7 @@ def knn_join_hexring_adaptive(
     id_col: str = "fid",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    pipeline=None,
-    pipeline_config: dict | None = None,
+    checkpointer=None,
 ) -> DataFrame:
     """H3-ring-expansion kNN (the north star's named variant): the round
     loop of :func:`knn_join_adaptive` over hexagonal kRing cells
@@ -299,7 +297,7 @@ def knn_join_hexring_adaptive(
     against 6 s adaptive.  Each round re-derives the hex resolution from
     its radius, so the cells track the shrunken disc."""
     cols = (query_id_col, query_lon_col, query_lat_col, id_col, lon_col, lat_col)
-    return _adaptive(queries, points, k, max_distance_deg, _hex, cols, pipeline, pipeline_config)
+    return _adaptive(queries, points, k, max_distance_deg, _hex, cols, checkpointer)
 
 
 def _adaptive(
@@ -309,8 +307,7 @@ def _adaptive(
     max_distance_deg: float,
     grid_for: Callable[[float], _Grid],
     cols: tuple[str, ...],
-    pipeline,
-    pipeline_config: dict | None,
+    checkpointer,
 ) -> DataFrame:
     """The ring-expansion round loop shared by the square and hex kNN joins.
 
@@ -321,16 +318,16 @@ def _adaptive(
     NNProcessor.java:53-120 removes satisfied neighborhoods inside the
     task): per-query counts stay a DataFrame and retire via semi/anti joins
     — no query ids ever cross the driver, and the plan size stays O(1) per
-    round regardless of |queries|.  Round outputs are localCheckpoint-ed
-    (<= k*|queries| rows) to cut lineage across rounds.
+    round regardless of |queries|.
 
-    With a :class:`~geowave_spark.plans.lineage.Pipeline`, each round's RAW
-    output is instead a durable parquet stage (manifest with per-partition
-    row counters); the semi/anti retirement joins then run over the
-    read-back parquet, so a resumed run skips every completed round's join
-    work and replays only the cheap retirement bookkeeping.  The round
-    schedule is deterministic in the arguments, which is what makes the
-    stage sequence replayable.
+    Each round's RAW output (<= k*|queries| rows) is a ``stage`` of one
+    round barrier: ``plans.lineage.LOCAL_ROUNDS`` (``truncate_plan``, to
+    cut lineage across rounds) or a durable ``RoundCheckpointer`` (parquet
+    under ``static/knn_round_<i>/`` with per-partition row counters).  The
+    semi/anti retirement joins run over the staged output, so a resumed run
+    skips every completed round's join work and replays only the cheap
+    retirement bookkeeping.  The round schedule is deterministic in the
+    arguments, which is what makes the stage sequence replayable.
     """
     qid, fid = cols[0], cols[3]
     # the broadcast decision is made once on the full query set (rounds only
@@ -350,19 +347,11 @@ def _adaptive(
         r *= EXPANSION
     radii.append(max_distance_deg)
 
+    ck = checkpointer or LOCAL_ROUNDS
     remaining = queries
     chunks = []
     for i, radius in enumerate(radii):
-        if pipeline is not None:
-            rem = remaining  # bind loop variables for the build closure
-            out = pipeline.stage(
-                f"knn_round_{i:02d}",
-                {"round": i, "radius": radius, "k": k, **(pipeline_config or {})},
-                lambda rem=rem, radius=radius: run_round(rem, radius),
-            )
-        else:
-            # stats-resetting round barriers (plans.lineage.truncate_plan)
-            out = truncate_plan(run_round(remaining, radius))
+        out = ck.stage(f"knn_round_{i:02d}", lambda: run_round(remaining, radius))
         if i == len(radii) - 1:
             chunks.append(out)
             break

@@ -13,9 +13,9 @@ within cap retire into that leaf and leave the loop, so round t+1 re-keys
 only the points under still-oversized cells (an inner equi-join against
 the oversized-cell set, which is at most n_points/cap rows and usually
 tiny).  Each round is one groupBy shuffle on uniform cell keys + one join;
-rounds are bounded by ``max_tier - min_tier`` (<= ~20), each round's
-active set is localCheckpoint-ed so the iterative plan never grows, and
-leaf tables (cells, not points) accumulate in a bounded union.
+rounds are bounded by ``max_tier - min_tier`` (<= ~20), and each round's
+active set and accumulated leaf table (cells, not points) pass the round
+barrier so the iterative plan never grows.
 
 Cell convention: the engine's ceil-minus-1 bins (`sfc.lon_bins` /
 `spatiotemporal_bins`): xb = greatest(ceil((lon+180)/360 * 2^t) - 1, 0),
@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geowave_spark.plans.lineage import truncate_plan
+from geowave_spark.plans.lineage import LOCAL_ROUNDS
 
 __all__ = ["adaptive_quadtree", "adaptive_quadtree_sql"]
 
@@ -65,79 +65,64 @@ def adaptive_quadtree(
     where every leaf holds <= ``max_per_cell`` points unless it sits at
     ``max_tier`` (depth-capped leaves keep their full count).
 
-    ``checkpointer`` (a ``plans.lineage.RoundCheckpointer``) makes each
-    tier's (active frontier, accumulated leaves) durable so a killed run
-    resumes at the last committed tier instead of re-splitting from
-    ``min_tier``."""
+    Every tier is a round of one barrier: ``checkpointer`` (a
+    ``plans.lineage.RoundCheckpointer``, which makes each tier's (active
+    frontier, accumulated leaves) durable so a killed run resumes at the
+    last committed tier instead of re-splitting from ``min_tier``) or
+    ``plans.lineage.LOCAL_ROUNDS`` (``truncate_plan``)."""
     if max_per_cell <= 0:
         raise ValueError("max_per_cell must be positive")
     if not (0 <= min_tier <= max_tier <= 28):
         raise ValueError("need 0 <= min_tier <= max_tier <= 28")
 
-    # the frontier carries (lon, lat) plus the current-tier cell; points
-    # retire as soon as their cell fits the cap, so the frontier shrinks
-    active = points.select(
-        F.col(lon_col).alias("_lon"),
-        F.col(lat_col).alias("_lat"),
-        _xb(lon_col, min_tier).alias("xb"),
-        _yb(lat_col, min_tier).alias("yb"),
-    )
-    if checkpointer is None:
-        active = active.localCheckpoint()
-    leaves_df: DataFrame | None = None
-    start_tier = min_tier
-    if checkpointer is not None:
-        resumed = checkpointer.resume()
-        if resumed is not None:
-            rno, dfs, extras = resumed
-            leaves_df = dfs["leaves"]
-            if extras.get("done"):
-                return leaves_df.select("tier", "xb", "yb", "n_points")
-            active = dfs["active"]
-            start_tier = rno + 1
-
-    def _acc(base: DataFrame | None, more: DataFrame) -> DataFrame:
-        return more if base is None else base.unionByName(more)
+    ck = checkpointer or LOCAL_ROUNDS
+    resumed = ck.resume()
+    if resumed is None:
+        # the frontier carries (lon, lat) plus the current-tier cell; points
+        # retire as soon as their cell fits the cap, so the frontier shrinks
+        active = points.select(
+            F.col(lon_col).alias("_lon"),
+            F.col(lat_col).alias("_lat"),
+            _xb(lon_col, min_tier).alias("xb"),
+            _yb(lat_col, min_tier).alias("yb"),
+        ).localCheckpoint()
+        leaves_df, start_tier = None, min_tier
+    else:
+        rno, dfs, extras = resumed
+        leaves_df = dfs["leaves"]
+        if extras.get("done"):
+            return leaves_df.select("tier", "xb", "yb", "n_points")
+        active, start_tier = dfs["active"], rno + 1
 
     for tier in range(start_tier, max_tier + 1):
         counts = active.groupBy("xb", "yb").agg(
             F.count("*").alias("n_points")
         )
-        if tier == max_tier:
-            leaves_df = _acc(leaves_df, counts.withColumn("tier", F.lit(tier)))
-            if checkpointer is not None:
-                leaves_df = checkpointer.save_round(
-                    tier,
-                    {"active": active.limit(0), "leaves": leaves_df},
-                    extras={"done": True},
-                )["leaves"]
-            break
-        done = counts.filter(F.col("n_points") <= max_per_cell)
-        new_leaves = done.withColumn("tier", F.lit(tier))
-        over = counts.filter(F.col("n_points") > max_per_cell).select("xb", "yb")
-        # one tier finer for the points under oversized cells only: the
-        # inner join on the current cell key keeps the frontier shrinking
-        # (|over| <= n/cap, so Spark broadcasts it once it's small)
-        new_active = active.join(over, ["xb", "yb"]).select(
-            "_lon",
-            "_lat",
-            _xb("_lon", tier + 1).alias("xb"),
-            _yb("_lat", tier + 1).alias("yb"),
-        )
-        if checkpointer is not None:
-            saved = checkpointer.save_round(
-                tier,
-                {"active": new_active, "leaves": _acc(leaves_df, new_leaves)},
-                extras_fn=lambda dfs: {
-                    "done": dfs["active"].limit(1).count() == 0
-                },
-            )
-            active, leaves_df = saved["active"], saved["leaves"]
+        if tier == max_tier:  # depth cap: every remaining cell is a leaf
+            fits, new_active = counts, active.limit(0)
         else:
-            # stats-resetting round barriers (plans.lineage.truncate_plan)
-            leaves_df = _acc(leaves_df, truncate_plan(new_leaves))
-            active = truncate_plan(new_active)
-        if active.limit(1).count() == 0:
+            fits = counts.filter(F.col("n_points") <= max_per_cell)
+            over = counts.filter(F.col("n_points") > max_per_cell).select("xb", "yb")
+            # one tier finer for the points under oversized cells only: the
+            # inner join on the current cell key keeps the frontier shrinking
+            # (|over| <= n/cap, so Spark broadcasts it once it's small)
+            new_active = active.join(over, ["xb", "yb"]).select(
+                "_lon",
+                "_lat",
+                _xb("_lon", tier + 1).alias("xb"),
+                _yb("_lat", tier + 1).alias("yb"),
+            )
+        new_leaves = fits.withColumn("tier", F.lit(tier))
+        saved, extras = ck.save_round(
+            tier,
+            {
+                "active": new_active,
+                "leaves": new_leaves if leaves_df is None else leaves_df.unionByName(new_leaves),
+            },
+            extras_fn=lambda dfs: {"done": dfs["active"].limit(1).count() == 0},
+        )
+        active, leaves_df = saved["active"], saved["leaves"]
+        if extras["done"]:
             break
     return leaves_df.select("tier", "xb", "yb", "n_points")
 

@@ -22,7 +22,7 @@ reference's DedupeFilter for the join path; `num_duplicates` is still carried
 for parity with F5 semantics.
 
 Scale notes (100 TB): the polygon side is exploded (cells/polygon bounded by
-`max_cells_per_zone`); the point side is never exploded.  Hot cells (skew) are
+`MAX_COVER_CELLS`); the point side is never exploded.  Hot cells (skew) are
 handled by AQE skew-join plus optional explicit salting of the probe side
 (`with_hot_cell_salt`), mirroring HashKeyIndexStrategy (K7).
 """
@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     LongType,
 )
 
-from geowave_spark.sfc import DEFAULT_CONFIG, SpatialConfig, cells_covering_bbox
+from geowave_spark.sfc import DEFAULT_CONFIG, cells_covering_bbox
 
 from .indexing import cell_at_tier, with_point_cells
 
@@ -54,6 +54,13 @@ _CACHES = CacheRegistry()
 # Broadcast gate of both zone joins: a zone layer with more distinct
 # geometries than this takes the shuffle path instead of a driver catalog.
 MAX_BROADCAST_ZONES = 65536
+# Superset-or-die bound of every cover UDF: a geometry covering more cells
+# than this at the chosen tier/res raises instead of exploding its rows.
+MAX_COVER_CELLS = 4096
+# The cover-tier rule aims for about this many cells per median zone, over
+# a driver sample of at most _ZONE_SAMPLE distinct zone geometries.
+_TARGET_CELLS = 16
+_ZONE_SAMPLE = 10_000
 
 
 def release_caches() -> None:
@@ -70,7 +77,7 @@ def _prepared(wkt: str):
     return pg
 
 
-def cover_cells_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cells: int = 4096):
+def cover_cells_udf(bits: int):
     """pandas UDF: polygon WKT -> array<long> covering cells at a fixed tier.
 
     Cover is bbox-based (superset — exactness restored by the refine stage),
@@ -87,14 +94,14 @@ def cover_cells_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cells: i
                 out.append([])
                 continue
             minx, miny, maxx, maxy = geom_bbox(parse_wkt(w))
-            cells = cells_covering_bbox(minx, miny, maxx, maxy, bits, cfg)
-            if len(cells) > max_cells:
+            cells = cells_covering_bbox(minx, miny, maxx, maxy, bits, DEFAULT_CONFIG)
+            if len(cells) > MAX_COVER_CELLS:
                 # superset-or-die: silently dropping cells would lose join
                 # rows.  The planner (choose_cover_tier) picked too fine a
                 # tier for this geometry — use mode='tiered' for layers with
                 # wildly heterogeneous extents.
                 raise ValueError(
-                    f"cover of geometry exceeds {max_cells} cells at tier "
+                    f"cover of geometry exceeds {MAX_COVER_CELLS} cells at tier "
                     f"{bits}; use a coarser tier or mode='tiered'"
                 )
             out.append(cells.tolist())
@@ -103,7 +110,7 @@ def cover_cells_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cells: i
     return _cover
 
 
-def hex_cover_cells_udf(res: int, max_cells: int = 4096):
+def hex_cover_cells_udf(res: int):
     """pandas UDF: polygon WKT -> array<long> of packed hex cell ids
     (sfc/hexgrid.py key layout) covering the geometry at resolution ``res``.
 
@@ -140,9 +147,9 @@ def hex_cover_cells_udf(res: int, max_cells: int = 4096):
             qlo, qhi = int(np.floor(qf.min())) - 1, int(np.ceil(qf.max())) + 1
             rlo, rhi = int(np.floor(rf.min())) - 1, int(np.ceil(rf.max())) + 1
             n = (qhi - qlo + 1) * (rhi - rlo + 1)
-            if n > 64 * max_cells:  # pre-clip enumeration bound
+            if n > 64 * MAX_COVER_CELLS:  # pre-clip enumeration bound
                 raise ValueError(
-                    f"hex cover of geometry exceeds {64 * max_cells} "
+                    f"hex cover of geometry exceeds {64 * MAX_COVER_CELLS} "
                     f"pre-clip cells at res {res}; use a coarser res"
                 )
             qq, rr = np.meshgrid(
@@ -157,10 +164,10 @@ def hex_cover_cells_udf(res: int, max_cells: int = 4096):
                 & (cy + half_h >= miny)
                 & (cy - half_h <= maxy)
             )
-            if int(keep.sum()) > max_cells:
+            if int(keep.sum()) > MAX_COVER_CELLS:
                 # superset-or-die, same contract as cover_cells_udf
                 raise ValueError(
-                    f"hex cover of geometry exceeds {max_cells} cells at "
+                    f"hex cover of geometry exceeds {MAX_COVER_CELLS} cells at "
                     f"res {res}; use a coarser res"
                 )
             out.append(hex_pack(qq[keep], rr[keep], res).tolist())
@@ -193,9 +200,9 @@ def refine_pip_udf():
     return _refine
 
 
-def _tier_from_wkts(wkts: list[str], cfg: SpatialConfig, target_cells: int = 16) -> int:
+def _tier_from_wkts(wkts: list[str]) -> int:
     """Fixed join resolution from the polygon layer's median extent:
-    cell size ~ median_extent / sqrt(target_cells) (the engine's cost-based
+    cell size ~ median_extent / sqrt(_TARGET_CELLS) (the engine's cost-based
     planning analog of ChooseBestMatchIndexQueryStrategy)."""
     from geowave_spark.geometry.wkt import geom_bbox, parse_wkt
 
@@ -204,41 +211,41 @@ def _tier_from_wkts(wkts: list[str], cfg: SpatialConfig, target_cells: int = 16)
         minx, miny, maxx, maxy = geom_bbox(parse_wkt(w))
         exts.append(max(maxx - minx, maxy - miny, 1e-9))
     med = float(np.median(exts)) if exts else 1.0
-    cell_deg = med / max(np.sqrt(target_cells), 1.0)
+    cell_deg = med / np.sqrt(_TARGET_CELLS)
+    cfg = DEFAULT_CONFIG
     bits = int(np.clip(np.floor(np.log2(360.0 / cell_deg)), 1, cfg.finest - 1))
     usable = [t for t in cfg.tiers if 0 < t < cfg.finest]
     return min(usable, key=lambda t: abs(t - bits)) if usable else bits
 
 
-def choose_cover_tier(zones: DataFrame, wkt_col: str, cfg: SpatialConfig, target_cells: int = 16) -> int:
+def choose_cover_tier(zones: DataFrame, wkt_col: str) -> int:
     """Driver-side tiny sample -> :func:`_tier_from_wkts` (kept for callers
     that only need the tier; the join paths use :func:`_plan_zone_layer` to
     fold this sample into the broadcast gate's single driver job)."""
-    sample = [r[0] for r in zones.select(wkt_col).limit(10_000).collect()]
-    return _tier_from_wkts(sample, cfg, target_cells)
+    sample = [r[0] for r in zones.select(wkt_col).limit(_ZONE_SAMPLE).collect()]
+    return _tier_from_wkts(sample)
 
 
 def _plan_zone_layer(
     zones: DataFrame,
     wkt_col: str,
-    sample_cap: int = 10_000,
 ) -> tuple[int, bool, list[str] | None]:
     """ONE bounded driver job plans the whole zone side: collect distinct
-    WKTs up to ``sample_cap + 1`` rows, yielding
+    WKTs up to ``_ZONE_SAMPLE + 1`` rows, yielding
 
     - the cover tier (median-extent rule over the sample),
     - the broadcast gate (a short read means the full distinct set is known),
     - the WKT catalog when the layer is broadcastable.
 
-    Only a layer with more than ``sample_cap`` distinct geometries pays a
+    Only a layer with more than ``_ZONE_SAMPLE`` distinct geometries pays a
     second, count-only probe (bounded by ``limit``) to settle the gate — and
     only a broadcastable one then pays the full catalog fetch.  Replaces the
     three separate driver jobs (tier sample, gate count, catalog collect)
     that round 2 ran per call."""
     sample = [
-        r[0] for r in zones.select(wkt_col).distinct().limit(sample_cap + 1).collect()
+        r[0] for r in zones.select(wkt_col).distinct().limit(_ZONE_SAMPLE + 1).collect()
     ]
-    if len(sample) <= sample_cap:
+    if len(sample) <= _ZONE_SAMPLE:
         broadcast_ok = len(sample) <= MAX_BROADCAST_ZONES
         catalog = sorted(sample) if broadcast_ok else None
     else:
@@ -249,11 +256,11 @@ def _plan_zone_layer(
             if broadcast_ok
             else None
         )
-    tier = _tier_from_wkts(sample[:sample_cap], DEFAULT_CONFIG)
+    tier = _tier_from_wkts(sample[:_ZONE_SAMPLE])
     return tier, broadcast_ok, catalog
 
 
-def zone_insertion_cells_udf(cfg: SpatialConfig = DEFAULT_CONFIG):
+def zone_insertion_cells_udf():
     """pandas UDF: polygon WKT -> tiered insertion cells (K1): <=4 cells at
     the geometry's own tier — bounded explosion regardless of extent."""
     from pyspark.sql.types import ByteType, IntegerType, StructField, StructType
@@ -278,7 +285,7 @@ def zone_insertion_cells_udf(cfg: SpatialConfig = DEFAULT_CONFIG):
             dtype=np.float64,
         ).reshape(-1, 4)
         rows, tiers, keys, dups = bbox_insertion_cells(
-            boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3], cfg
+            boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3], DEFAULT_CONFIG
         )
         out: list[list[dict]] = [[] for _ in range(len(wkt))]
         for r, t, k, d in zip(rows.tolist(), tiers.tolist(), keys.tolist(), dups.tolist()):
@@ -416,7 +423,7 @@ def pip_join(
         cover_bits = (
             planned_tier
             if planned_tier is not None
-            else choose_cover_tier(zones, "_zwkt", DEFAULT_CONFIG)
+            else choose_cover_tier(zones, "_zwkt")
         )
         if mode == "hex":
             # hex area ~ square cell area: one res step finer than the
@@ -655,7 +662,7 @@ def areal_join(
     return refined
 
 
-def cover_cells_bbox_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cells: int = 4096):
+def cover_cells_bbox_udf(bits: int):
     """pandas UDF: bbox columns -> covering cells at a fixed tier (the
     feature-side twin of cover_cells_udf, skipping the WKT re-parse when the
     bbox columns already exist)."""
@@ -670,10 +677,10 @@ def cover_cells_bbox_udf(bits: int, cfg: SpatialConfig = DEFAULT_CONFIG, max_cel
             maxx.to_numpy(np.float64),
             maxy.to_numpy(np.float64),
         ):
-            cells = cells_covering_bbox(a, b, c, d, bits, cfg)
-            if len(cells) > max_cells:
+            cells = cells_covering_bbox(a, b, c, d, bits, DEFAULT_CONFIG)
+            if len(cells) > MAX_COVER_CELLS:
                 raise ValueError(
-                    f"feature cover exceeds {max_cells} cells at tier {bits}"
+                    f"feature cover exceeds {MAX_COVER_CELLS} cells at tier {bits}"
                 )
             out.append(cells.tolist())
         return pd.Series(out)

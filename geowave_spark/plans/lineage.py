@@ -1,5 +1,7 @@
 """Checkpointed lineage: resumable multi-stage pipelines with per-partition
-row counters.
+row counters, and the one round barrier every iterative operator runs
+through (:data:`LOCAL_ROUNDS` by default, a durable
+:class:`RoundCheckpointer` on request — the only place that knows which).
 
 The reference chains MapReduce jobs whose inputs/outputs are GeoWave tables
 or HDFS sequence files — i.e. every analytic stage is durably checkpointed
@@ -8,9 +10,10 @@ and a failed run restarts from the last completed job
 its ingest path transactionally updates row-count statistics per write
 (`StatsCompositionTool.java`, A11).  This module is the Spark analog:
 
-- each stage writes deterministic parquet under ``<root>/<stage>/`` and an
-  atomic ``_manifest.json`` (rename-committed) recording the stage config
-  fingerprint, total + per-partition row counts, schema, and wall time;
+- each stage writes deterministic parquet under ``<root>/<stage>/`` and a
+  ``_manifest.json`` recording the stage config fingerprint, total +
+  per-partition row counts, schema, and wall time, committed by one
+  directory rename (``_commit``, shared with the round checkpoints);
 - per-partition counters come from the parquet footers (zero extra Spark
   jobs — one metadata read per file, the analog of per-tablet counts);
 - on re-run, a stage whose manifest exists with a matching fingerprint is
@@ -18,7 +21,7 @@ its ingest path transactionally updates row-count statistics per write
   a changed fingerprint invalidates the stage and everything downstream.
 
 At cluster scale the same layout works on any shared filesystem/object store
-(manifest rename is the commit point; stage writes are idempotent because
+(the directory rename is the commit point; stage writes are idempotent because
 the output path is deterministic and overwritten atomically-enough via a
 fresh temp dir + rename).
 """
@@ -110,6 +113,54 @@ def partition_counters(path: Path) -> dict[str, int]:
     return out
 
 
+def _commit(
+    spark: SparkSession,
+    out_dir: Path,
+    tables: dict,
+    manifest: dict,
+    partition_by: list[str] | None = None,
+    extras_fn: Callable[[dict[str, DataFrame]], dict] | None = None,
+) -> tuple[dict[str, DataFrame], dict]:
+    """The one commit sequence every durable write takes: each table as
+    parquet under a fresh temp dir, per-file row counters from the parquet
+    footers, ``_manifest.json`` written inside and renamed, then the temp
+    dir renamed over ``out_dir`` (the commit point).
+
+    ``tables`` maps a sub-path to a DataFrame, or to a callable taking the
+    tables already written (in order) so a derived table builds on their
+    materialized form; the sub-path ``""`` is a single table at the root.
+    ``extras_fn`` runs over the written tables before the commit and its
+    result becomes ``manifest["extras"]``.  Returns the tables read back
+    from ``out_dir`` and the committed manifest."""
+    tmp = out_dir.parent / f"_tmp_{out_dir.name}_{int(time.time() * 1000)}"
+    read_back: dict[str, DataFrame] = {}
+    parts: dict[str, dict[str, int]] = {}
+    for sub, df in tables.items():
+        if callable(df):
+            df = df(read_back)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(tmp / sub))
+        parts[sub] = partition_counters(tmp / sub)
+        read_back[sub] = spark.read.parquet(str(tmp / sub))
+    if extras_fn is not None:
+        manifest["extras"] = extras_fn(read_back)
+    if list(parts) == [""]:
+        manifest["partitions"] = parts[""]
+        manifest["rows"] = sum(parts[""].values())
+    else:
+        manifest["partitions"] = parts
+        manifest["rows"] = {sub: sum(p.values()) for sub, p in parts.items()}
+    manifest["committed_at"] = time.time()
+    (tmp / (MANIFEST + ".tmp")).write_text(json.dumps(manifest, indent=1, default=str))
+    (tmp / (MANIFEST + ".tmp")).rename(tmp / MANIFEST)
+    if out_dir.exists():
+        shutil.rmtree(out_dir)
+    tmp.rename(out_dir)  # directory rename commits
+    return {sub: spark.read.parquet(str(out_dir / sub)) for sub in tables}, manifest
+
+
 @dataclass
 class StageResult:
     name: str
@@ -143,8 +194,7 @@ class Pipeline:
         build: Callable[[], DataFrame],
         partition_by: list[str] | None = None,
     ) -> DataFrame:
-        root = Path(self.root)
-        out_dir = root / name
+        out_dir = Path(self.root) / name
         mpath = out_dir / MANIFEST
         fp = _fingerprint({"name": name, "config": config})
         t0 = time.perf_counter()
@@ -159,32 +209,23 @@ class Pipeline:
                 return self.spark.read.parquet(str(out_dir))
         self._dirty = True  # this stage (and all downstream) rebuilds
         df = build()
-        tmp = root / f"_tmp_{name}_{int(time.time() * 1000)}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(tmp))
-        if out_dir.exists():
-            shutil.rmtree(out_dir)
-        tmp.rename(out_dir)
-        parts = partition_counters(out_dir)
-        rows = sum(parts.values())
+        out, m = _commit(
+            self.spark,
+            out_dir,
+            {"": df},
+            {
+                "fingerprint": fp,
+                "name": name,
+                "config": config,
+                "schema": df.schema.simpleString(),
+            },
+            partition_by=partition_by,
+        )
         wall = time.perf_counter() - t0
-        manifest = {
-            "fingerprint": fp,
-            "name": name,
-            "config": config,
-            "rows": rows,
-            "partitions": parts,
-            "schema": df.schema.simpleString(),
-            "wall_s": round(wall, 3),
-            "committed_at": time.time(),
-        }
-        tmp_m = out_dir / (MANIFEST + ".tmp")
-        tmp_m.write_text(json.dumps(manifest, indent=1, default=str))
-        tmp_m.rename(mpath)  # commit point
-        self.results.append(StageResult(name, out_dir, rows, parts, False, wall))
-        return self.spark.read.parquet(str(out_dir))
+        self.results.append(
+            StageResult(name, out_dir, m["rows"], m["partitions"], False, wall)
+        )
+        return out[""]
 
     def summary(self) -> list[dict]:
         return [
@@ -199,26 +240,65 @@ class Pipeline:
         ]
 
 
+class LocalRounds:
+    """The default round barrier of every iterative operator: executor-local
+    and not resumable.  Same interface as :class:`RoundCheckpointer`, so an
+    operator runs one loop against ``checkpointer or LOCAL_ROUNDS`` and
+    never asks which one it has.  Nothing is written: each round state is
+    ``truncate_plan``-ed, and a staged table is ``localCheckpoint``-ed with
+    its plan's estimated statistics, which join planning uses (SSSP
+    broadcasts its edge table) and which cannot compound, because what a
+    later round builds on a staged table passes a round barrier itself."""
+
+    def resume(self) -> None:
+        return None
+
+    def stage(self, tag: str, build: Callable[[], DataFrame]) -> DataFrame:
+        return build().localCheckpoint()
+
+    def save_round(
+        self,
+        round_no: int,
+        states: dict,
+        extras_fn: Callable[[dict[str, DataFrame]], dict] | None = None,
+    ) -> tuple[dict[str, DataFrame], dict]:
+        out: dict[str, DataFrame] = {}
+        for tag, df in states.items():
+            out[tag] = truncate_plan(df(out) if callable(df) else df)
+        return out, extras_fn(out) if extras_fn is not None else {}
+
+
+LOCAL_ROUNDS = LocalRounds()
+
+
 @dataclass
 class RoundCheckpointer:
-    """Durable per-ROUND checkpointing for iterative operators (connected
-    components, bounded SSSP, adaptive quadtree, DBSCAN label propagation).
+    """Durable round barrier for the iterative operators (connected
+    components, DBSCAN label propagation, bounded SSSP, adaptive quadtree,
+    the adaptive kNN rings).
 
     ``localCheckpoint`` truncates lineage but is executor-local: on a real
     cluster, losing one executor after round k kills the whole run.  The
     reference chains each analytic iteration through durable HDFS/table
     outputs (`MapReduceJobController.java`, SURVEY.md §3.3), so a restarted
     job resumes from the last completed iteration.  This is the Spark
-    analog: each round's state DataFrames land as parquet under
-    ``<root>/<job>/round_<k>/<tag>/`` with one rename-committed
-    ``_manifest.json`` per round (recording the operator config fingerprint,
-    per-tag row counts, and caller extras like convergence signatures), and
-    a re-run with the same config resumes from the last committed round.
+    analog, with the interface of :class:`LocalRounds`:
 
-    Iterative operators accept ``checkpointer=None`` and keep the fast
-    ``localCheckpoint`` path by default — pass an instance to trade one
-    parquet write per round for mid-run durability.  Only the last
-    ``keep_rounds`` rounds are retained (each round supersedes the last).
+    - ``save_round`` lands a round's state DataFrames as parquet under
+      ``<root>/<job>/round_<k>/<tag>/`` with one rename-committed
+      ``_manifest.json`` per round (the config fingerprint, per-tag row
+      counts and per-partition counters, and caller extras such as
+      convergence signatures);
+    - ``stage`` lands a table under ``<job>/static/<tag>/`` once and loads
+      it on every later call with the same config (a round-invariant input,
+      or a round output keyed by its own tag);
+    - ``resume`` returns the last committed round, so a re-run with the
+      same config continues from there.
+
+    Operators take ``checkpointer=None`` and run against
+    :data:`LOCAL_ROUNDS` by default; pass an instance to trade one parquet
+    write per round for mid-run durability.  Only the last ``keep_rounds``
+    rounds are retained (each round supersedes the last).
     """
 
     spark: SparkSession
@@ -228,6 +308,7 @@ class RoundCheckpointer:
     keep_rounds: int = 2
     rounds_resumed: int = 0
     rounds_written: int = 0
+    stages_written: int = 0
 
     def _dir(self) -> Path:
         return Path(self.root) / self.job
@@ -267,90 +348,51 @@ class RoundCheckpointer:
             return rno, dfs, m.get("extras", {})
         return None
 
-    def save_static(
-        self, tag: str, df: DataFrame, extras: dict | None = None
-    ) -> tuple[DataFrame, dict]:
-        """Write a round-invariant state table ONCE under
-        ``<job>/static/<tag>/`` (e.g. SSSP's symmetric edge list) — round
-        pruning never touches it.  Returns the read-back DataFrame + extras."""
-        sdir = self._dir() / "static" / tag
-        tmp = self._dir() / "static" / f"_tmp_{tag}_{int(time.time() * 1000)}"
-        df.write.mode("overwrite").parquet(str(tmp))
-        manifest = {
-            "fingerprint": self._fp(),
-            "tag": tag,
-            "rows": sum(partition_counters(tmp).values()),
-            "extras": extras or {},
-            "committed_at": time.time(),
-        }
-        (tmp / (MANIFEST + ".tmp")).write_text(
-            json.dumps(manifest, indent=1, default=str)
-        )
-        (tmp / (MANIFEST + ".tmp")).rename(tmp / MANIFEST)
-        if sdir.exists():
-            shutil.rmtree(sdir)
-        tmp.rename(sdir)
-        return self.spark.read.parquet(str(sdir)), manifest["extras"]
-
-    def load_static(self, tag: str) -> tuple[DataFrame, dict] | None:
+    def stage(self, tag: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The table committed under ``<job>/static/<tag>/`` for this
+        config, or ``build()`` written there once and read back.  Round
+        pruning never touches it."""
         sdir = self._dir() / "static" / tag
         mpath = sdir / MANIFEST
-        if not mpath.exists():
-            return None
-        m = json.loads(mpath.read_text())
-        if m.get("fingerprint") != self._fp():
-            return None
-        return self.spark.read.parquet(str(sdir)), m.get("extras", {})
+        if mpath.exists() and json.loads(mpath.read_text()).get("fingerprint") == self._fp():
+            return self.spark.read.parquet(str(sdir))
+        out, _ = _commit(
+            self.spark, sdir, {"": build()}, {"fingerprint": self._fp(), "tag": tag}
+        )
+        self.stages_written += 1
+        return out[""]
 
     def save_round(
         self,
         round_no: int,
-        states: dict[str, DataFrame],
-        extras: dict | None = None,
+        states: dict,
         extras_fn: Callable[[dict[str, DataFrame]], dict] | None = None,
-    ) -> dict[str, DataFrame]:
+    ) -> tuple[dict[str, DataFrame], dict]:
         """Write every state DataFrame for this round, commit the round
-        manifest (rename is the commit point), prune superseded rounds, and
-        return the read-back DataFrames (truncated lineage, durable).
+        manifest, prune superseded rounds, and return the read-back
+        DataFrames (truncated lineage, durable) with the committed extras.
 
         ``extras_fn`` runs over the READ-BACK DataFrames before the commit
-        rename — use it to record convergence signatures computed on the
+        — use it to record convergence signatures computed on the
         materialized state without re-running the round's plan.  A state
         value may also be a CALLABLE taking the dict of already-read-back
         earlier tags (insertion order), so derived states build on the
         materialized form of their inputs instead of re-running their
         plans."""
-        rdir = self._dir() / f"round_{round_no:06d}"
-        tmp = self._dir() / f"_tmp_round_{round_no:06d}_{int(time.time() * 1000)}"
-        rows: dict[str, int] = {}
-        read_back: dict[str, DataFrame] = {}
-        for tag, df in states.items():
-            if callable(df):
-                df = df(read_back)
-            df.write.mode("overwrite").parquet(str(tmp / tag))
-            rows[tag] = sum(partition_counters(tmp / tag).values())
-            read_back[tag] = self.spark.read.parquet(str(tmp / tag))
-        if extras_fn is not None:
-            extras = {**(extras or {}), **extras_fn(read_back)}
-        manifest = {
-            "fingerprint": self._fp(),
-            "round": round_no,
-            "tags": sorted(states),
-            "rows": rows,
-            "extras": extras or {},
-            "committed_at": time.time(),
-        }
-        (tmp / (MANIFEST + ".tmp")).write_text(
-            json.dumps(manifest, indent=1, default=str)
+        out, m = _commit(
+            self.spark,
+            self._dir() / f"round_{round_no:06d}",
+            states,
+            {
+                "fingerprint": self._fp(),
+                "round": round_no,
+                "tags": sorted(states),
+                "extras": {},
+            },
+            extras_fn=extras_fn,
         )
-        if rdir.exists():
-            shutil.rmtree(rdir)
-        (tmp / (MANIFEST + ".tmp")).rename(tmp / MANIFEST)
-        tmp.rename(rdir)  # directory rename commits the round
         self.rounds_written += 1
         for rno, old in self._round_dirs():
             if rno <= round_no - self.keep_rounds:
                 shutil.rmtree(old, ignore_errors=True)
-        return {
-            tag: self.spark.read.parquet(str(rdir / tag)) for tag in states
-        }
+        return out, m["extras"]

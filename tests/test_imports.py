@@ -153,3 +153,22 @@ def test_every_package_module_is_reached():
         if p not in reached
     )
     assert not unreached, "no entry point reaches:\n" + "\n".join(unreached)
+
+
+def test_no_operator_forks_on_its_round_barrier():
+    """Iterative operators run one loop against ``checkpointer or
+    LOCAL_ROUNDS``: only ``plans/lineage.py`` knows whether round state is
+    durable, so no operator compares its ``checkpointer`` (or a
+    ``pipeline``) to ``None``."""
+    sites = []
+    for path in sorted((REPO / PKG / "operators").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Compare):
+                continue
+            operands = [node.left, *node.comparators]
+            named = {n.id for n in operands if isinstance(n, ast.Name)}
+            if named & {"checkpointer", "pipeline"} and any(
+                isinstance(n, ast.Constant) and n.value is None for n in operands
+            ):
+                sites.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not sites, sites

@@ -76,14 +76,14 @@ class TestLineage:
 
 
 class TestKnnResume:
-    """The adaptive kNN join's rounds as durable pipeline stages — the
+    """The adaptive kNN join's rings as durable round-barrier stages — the
     north rule's 'every join stage checkpoints per-partition lineage and
     row/tile counters so runs resume mid-pipeline' exercised on the join
     itself, not a toy filter chain."""
 
     def _run(self, spark, geo001, root, k=25):
         from geowave_spark.operators.knn import knn_join_adaptive
-        from geowave_spark.plans.lineage import Pipeline
+        from geowave_spark.plans.lineage import RoundCheckpointer
 
         pts = spark.read.parquet(str(geo001 / "points.parquet"))
         queries = pts.filter(F.col("fid").endswith("0")).select(
@@ -91,28 +91,27 @@ class TestKnnResume:
             F.col("lon").alias("qlon"),
             F.col("lat").alias("qlat"),
         )
-        pipe = Pipeline(spark, root)
+        ck = RoundCheckpointer(spark, root, "knn", {"input": "geo001/points", "k": k})
         out = knn_join_adaptive(
-            queries, pts, k=k, max_distance_deg=1.5,
-            pipeline=pipe, pipeline_config={"input": "geo001/points", "k": k},
+            queries, pts, k=k, max_distance_deg=1.5, checkpointer=ck
         )
-        return pipe, {(r.qid, r.fid, r.rank) for r in out.collect()}
+        return ck, {(r.qid, r.fid, r.rank) for r in out.collect()}
 
     def test_rounds_checkpoint_and_resume(self, spark, geo001, root):
         from geowave_spark.operators.knn import knn_join_adaptive
 
-        pipe1, rows1 = self._run(spark, geo001, root)
-        s1 = pipe1.summary()
-        assert len(s1) >= 2, "need a multi-round schedule to prove resume"
-        assert all(not x["skipped"] for x in s1)
-        for x in s1:
-            m = json.loads((root / x["stage"] / "_manifest.json").read_text())
+        ck1, rows1 = self._run(spark, geo001, root)
+        assert ck1.stages_written >= 2, "need a multi-round schedule to prove resume"
+        rings = sorted((root / "knn" / "static").glob("knn_round_*/_manifest.json"))
+        assert len(rings) == ck1.stages_written
+        for mpath in rings:
+            m = json.loads(mpath.read_text())
             assert sum(m["partitions"].values()) == m["rows"]  # per-partition counters
 
-        # "killed and re-invoked": a fresh Pipeline over the same root
-        pipe2, rows2 = self._run(spark, geo001, root)
+        # "killed and re-invoked": a fresh checkpointer over the same root
+        ck2, rows2 = self._run(spark, geo001, root)
         assert rows2 == rows1
-        assert all(x["skipped"] for x in pipe2.summary())
+        assert ck2.stages_written == 0, "every ring is loaded, none rebuilt"
 
         # and the checkpointed answer is the real answer
         pts = spark.read.parquet(str(geo001 / "points.parquet"))
@@ -126,9 +125,10 @@ class TestKnnResume:
 
     def test_parameter_change_invalidates_rounds(self, spark, geo001, root):
         self._run(spark, geo001, root, k=25)
-        pipe2, rows2 = self._run(spark, geo001, root, k=10)
-        assert all(not x["skipped"] for x in pipe2.summary())
-        assert rows2  # rebuilt, non-empty
+        ck2, rows2 = self._run(spark, geo001, root, k=10)
+        assert ck2.stages_written >= 1
+        # a stale k=25 ring would carry ranks past 10
+        assert rows2 and max(rank for _, _, rank in rows2) == 10
 
 
 class TestPipJoinResume:
